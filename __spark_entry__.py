@@ -26,59 +26,17 @@ def entry(spark: SparkSession) -> DataFrame:
 # --- BEGIN GENERATED ROTATION (python tools/staleness.py sync) ---
 # Derived from CORRECTNESS_r*.json + git-tree fingerprints; do not
 # hand-edit. Head block = entries whose transitive code closure
-# changed since the round-12 sweep (0 entries); then never-certified (0);
+# changed since the round-14 sweep (8 entries); then never-certified (0);
 # then oldest-certification-first (cheap-first within a round).
 _ROTATION = [
-    'revenue_concentration',
-    'events_json_map_agg',
-    'equidepth_histogram_prices',
+    'fixture_effective_diameter',
+    'fixture_hopplot',
+    'graph_hopplot_d2',
     'fixture_betweenness',
-    'events_moving_avg_time',
     'fixture_harmonic_centrality',
-    'asof_join_events_orders',
-    'bpe_train_merges',
-    'winsorized_prices',
-    'similarity_ivf',
-    'stats_moments',
-    'graph_closeness_sampled',
-    'graph_matching_gate',
     'graph_mis_gate',
     'graph_betweenness_sampled',
-    'coreset_kcenter',
-    'similarity_pq',
-    'graph_cc_star_gate',
-    'graph_diameter_double_sweep',
-    'graph_ktruss_gate',
-    'graph_sssp',
-    'skyline_parts',
-    'graph_pagerank',
-    'graph_mst_gate',
-    'graph_ppr',
-    'graph_link_prediction',
-    'graph_hits',
-    'graph_lpa',
-    'similarity_ivf_trained',
-    'dedup_clusters',
-    'similarity_recall_gate',
-    'graph_cocitation_triangles',
     'hyperball_accuracy_gate',
-    'multimodal_meta',
-    'unpivot_part_measures',
-    'sample_stratified',
-    'split_train_test',
-    'text_fingerprint',
-    'distinct_flag_status',
-    'intersect_customer_nations',
-    'text_token_count',
-    'heavy_hitters_exact',
-    'events_hierarchical_rollup',
-    'pivot_status_by_flag',
-    'union_nation_keys',
-    'outer_join_nation_presence',
-    'dedup_exact',
-    'except_all_supplier_flags',
-    'orders_above_customer_avg',
-    'rollup_returns',
     'events_cohort_retention',
     'events_transitions',
     'events_click_attribution',
@@ -142,9 +100,7 @@ _ROTATION = [
     'dedup_embedding_cosine',
     'heavy_hitters_cms',
     'multimodal_features',
-    'fixture_effective_diameter',
     'events_scd2_history',
-    'fixture_hopplot',
     'similarity_topk_cosine',
     'doc_repetition_signals',
     'window_ntile_cume',
@@ -257,7 +213,51 @@ _ROTATION = [
     'graph_canonical_pairs',
     'loader_normalize_ids',
     'kmeans_embeddings',
-    'graph_hopplot_d2',
+    'multimodal_meta',
+    'unpivot_part_measures',
+    'sample_stratified',
+    'split_train_test',
+    'text_fingerprint',
+    'distinct_flag_status',
+    'intersect_customer_nations',
+    'text_token_count',
+    'heavy_hitters_exact',
+    'events_hierarchical_rollup',
+    'pivot_status_by_flag',
+    'union_nation_keys',
+    'outer_join_nation_presence',
+    'dedup_exact',
+    'except_all_supplier_flags',
+    'orders_above_customer_avg',
+    'rollup_returns',
+    'revenue_concentration',
+    'events_json_map_agg',
+    'equidepth_histogram_prices',
+    'events_moving_avg_time',
+    'asof_join_events_orders',
+    'bpe_train_merges',
+    'winsorized_prices',
+    'similarity_ivf',
+    'stats_moments',
+    'graph_closeness_sampled',
+    'graph_matching_gate',
+    'coreset_kcenter',
+    'similarity_pq',
+    'graph_cc_star_gate',
+    'graph_diameter_double_sweep',
+    'graph_ktruss_gate',
+    'graph_sssp',
+    'skyline_parts',
+    'graph_pagerank',
+    'graph_mst_gate',
+    'graph_ppr',
+    'graph_link_prediction',
+    'graph_hits',
+    'graph_lpa',
+    'similarity_ivf_trained',
+    'dedup_clusters',
+    'similarity_recall_gate',
+    'graph_cocitation_triangles',
 ]
 # --- END GENERATED ROTATION ---
 

@@ -36,8 +36,9 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     from .operators.graph import (
-        approx_hop_plot_df,
+        approx_hop_plot,
         density,
+        hop_plot,
         hop_plot_df,
         snapshot_edges,
     )
@@ -75,18 +76,17 @@ def main(argv: list[str] | None = None) -> int:
     for year in years:
         edges = snapshot_edges(citations, published, year)
         if args.approx:
-            df = approx_hop_plot_df(
-                spark, edges, total_pairs=totals.get(year), max_d=args.max_d,
+            rows = approx_hop_plot(
+                edges, total_pairs=totals.get(year), max_d=args.max_d,
                 p=args.hll_p,
             )
         else:
-            df = hop_plot_df(
-                spark, edges, total_pairs=totals.get(year), max_d=args.max_d
-            )
-        if df.isEmpty():
+            rows = hop_plot(edges, total_pairs=totals.get(year), max_d=args.max_d)
+        if not rows:
             if args.testing:
                 print(f"{year}: empty graph, skipped")
             continue
+        df = hop_plot_df(spark, rows)
         if args.testing:
             df.show()
         save_sorted_csv_single(df, f"{args.output_dir}/diameter_{year}", "d")

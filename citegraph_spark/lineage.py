@@ -60,6 +60,18 @@ def cut_lineage(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def release(df: DataFrame) -> None:
+    """Drop the executor blocks `df` holds, whether it was `persist`-ed
+    or came out of `cut_lineage`. `DataFrame.unpersist()` only clears
+    cache-manager entries; a (local) checkpoint's blocks belong to the
+    RDD under its `LogicalRDD` plan and would otherwise stay until the
+    ContextCleaner happens to collect that RDD."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 # --------------------------------------------------------------------------
 # driver-loss recovery: durable round snapshots
 # --------------------------------------------------------------------------

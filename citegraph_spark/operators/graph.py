@@ -6,22 +6,28 @@ Analytics.scala:152-414). Here everything is DataFrame ops:
 
 - density (G1): groupBy + window running totals + broadcast-able joins.
 - snapshot (G2): double vertex join + year filter + bidirectional union.
-- hop-plot (G4-G9): frontier BFS over *pairs* — the frontier carries
-  12-byte (src, dst) rows instead of the reference's O(d)-length path
-  arrays, the `seen` set is canonical (unordered) pairs, and lineage is
-  truncated with cut_lineage (localCheckpoint by default; DFS-backed
-  checkpoint behind spark.citegraph.reliableCheckpoint — lineage.py)
-  so per-round counts don't recompute
-  history (the reference recomputes the full lineage every round —
-  SURVEY.md §4.3).
+- hop-plot (G4-G9): exact all-pairs BFS in two tiers, chosen by the
+  session's broadcast budget (`spark.sql.autoBroadcastJoinThreshold`,
+  8 bytes per directed edge):
+  * below it, a bit-parallel multi-source BFS (Then et al., "The More
+    the Merrier", VLDB 2014) over a broadcast int32 CSR adjacency — ONE
+    Spark job per snapshot: each task runs its share of the sources 64
+    at a time, one uint64 bit per source, and returns per-distance pair
+    counts. State is O(|V|) words per task, never O(connected pairs);
+  * above it, a frontier BFS over *pairs* — the frontier carries
+    12-byte (src, dst) rows instead of the reference's O(d)-length path
+    arrays, the `seen` set is canonical (unordered) pairs, and lineage
+    is truncated with cut_lineage (localCheckpoint by default;
+    DFS-backed checkpoint behind spark.citegraph.reliableCheckpoint —
+    lineage.py) so per-round counts don't recompute history (the
+    reference recomputes the full lineage every round — SURVEY.md §4.3).
 
-Scale notes (100 TB thinking): the BFS `seen` set is the true output
-size — O(connected pairs) — and is unavoidable for exact hop-plots; every
-round shuffles only the frontier joined against the (bidirectional) edge
-table partitioned on `src`. Edges are repartitioned once on the join key
-and persisted so every round's join reuses the same partitioning; with
-AQE the frontier side coalesces as it shrinks. For approximate hop-plots
-at extreme scale, see `functions.sketches.hyperball` (HyperLogLog-based).
+Scale notes (100 TB thinking): the pair BFS's `seen` set is O(connected
+pairs) — every round shuffles only the frontier joined against the
+(bidirectional) edge table, repartitioned once on `src` and persisted so
+every round's join reuses the same partitioning. Past the point where
+even that set stops fitting, the path is the approximate hop-plot
+(`functions.sketches.hyperball_hopplot`, the CLI's `--approx`).
 """
 
 from __future__ import annotations
@@ -32,7 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..lineage import cut_lineage
+from ..lineage import cut_lineage, release
 
 
 import contextlib
@@ -173,37 +179,139 @@ class HopPlotRow:
     percent: float
 
 
-def _local_pairs_by_distance(
-    edge_list: list[tuple], max_d: int
-) -> list[tuple[int, int]]:
-    """Exact all-pairs BFS on a driver-local edge list (both orientations
-    present, as produced by `bidirectional`). Returns the same
-    [(d, cumulative pairs)] contract as the distributed path."""
-    from collections import defaultdict, deque
+def _broadcast_budget_rows(spark) -> int:
+    """Directed edge rows the bit-parallel BFS may hold: the session's
+    broadcast budget (`spark.sql.autoBroadcastJoinThreshold`) at 8
+    bytes per row — each row becomes at most two int32 CSR entries.
+    0 when the session has broadcasting turned off."""
+    budget = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return max(int(budget), 0) // 8
 
-    adj: dict = defaultdict(set)
-    for s, t in edge_list:
-        if s != t:
-            adj[s].add(t)
-    per_d: dict = defaultdict(int)
-    for s in adj:
-        dist = {s: 0}
-        dq = deque([s])
-        while dq:
-            u = dq.popleft()
-            if dist[u] >= max_d:
-                continue
-            for v in adj[u]:
-                if v not in dist:
-                    dist[v] = dist[u] + 1
-                    dq.append(v)
-        for t, d in dist.items():
-            if t > s:  # each unordered pair counted once
-                per_d[d] += 1
+
+def _csr_from_arrow(table) -> tuple:
+    """(indptr, indices) int32 CSR of the simple undirected graph on an
+    Arrow (src, dst) table: rows with a null endpoint and
+    self-loops dropped, both orientations, duplicates removed, vertices
+    relabelled 0..V-1. Every vertex has degree >= 1 (isolated ids never
+    get a label), which the dense pull step's `reduceat` relies on."""
+    import numpy as np
+
+    table = table.drop_null()
+    src = table.column("src").to_numpy()
+    dst = table.column("dst").to_numpy()
+    keep = src != dst
+    src, dst = src[keep], dst[keep]
+    ids, label = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    n = len(ids)
+    a, b = label[: len(src)].astype(np.int64), label[len(src):].astype(np.int64)
+    key = np.unique(np.concatenate([a * n + b, b * n + a]))
+    indptr = np.zeros(n + 1, np.int32)
+    if n:
+        np.cumsum(np.bincount(key // n, minlength=n), out=indptr[1:])
+        key = key % n
+    return indptr, key.astype(np.int32)
+
+
+_POPCOUNT8 = bytes(bin(i).count("1") for i in range(256))
+
+
+def _bitbfs_level_counts(indptr, indices, words, max_d: int):
+    """Ordered (source, target) pairs per shortest distance 1..max_d
+    (index d of the returned int64 array), summed over the sources in
+    `words`: word w covers sources 64w .. 64w+63, run as one BFS with
+    one uint64 bit per source in each vertex's `seen` and `frontier`
+    words.
+
+    A level either pushes the active vertices' words along their edges
+    (`bitwise_or.at`, while those edges are under a quarter of all
+    edges) or pulls densely — every vertex ORs its neighbours' words
+    with one `reduceat` over the CSR. Newly reached bits are `next &
+    ~seen`; their popcount is that level's pair count."""
+    import numpy as np
+
+    popcount8 = np.frombuffer(_POPCOUNT8, np.uint8)
+    n = len(indptr) - 1
+    n_edges = len(indices)
+    deg = np.diff(indptr).astype(np.int64)
+    per_d = np.zeros(max_d + 1, np.int64)
+    for w in words:
+        lo = 64 * w
+        width = min(64, n - lo)
+        seen = np.zeros(n, np.uint64)
+        seen[lo:lo + width] = np.left_shift(
+            np.uint64(1), np.arange(width, dtype=np.uint64)
+        )
+        frontier = seen.copy()
+        active = np.arange(lo, lo + width)
+        for d in range(1, max_d + 1):
+            counts = deg[active]
+            fanout = int(counts.sum())
+            if 4 * fanout < n_edges:
+                starts = indptr[active].astype(np.int64)
+                offsets = np.cumsum(counts) - counts
+                pos = np.repeat(starts - offsets, counts) + np.arange(fanout)
+                nxt = np.zeros(n, np.uint64)
+                np.bitwise_or.at(
+                    nxt, indices[pos], np.repeat(frontier[active], counts)
+                )
+            else:
+                nxt = np.bitwise_or.reduceat(frontier[indices], indptr[:-1])
+            new = nxt & ~seen
+            active = np.flatnonzero(new)
+            if not len(active):
+                break
+            bits = popcount8[new[active].view(np.uint8)]
+            per_d[d] += int(bits.sum(dtype=np.int64))
+            seen |= new
+            frontier = new
+    return per_d
+
+
+def _bitbfs_pairs_by_distance(spark, table, max_d: int) -> list[tuple[int, int]]:
+    """Exact [(d, cumulative unordered pairs at distance <= d)] of the
+    graph in Arrow `table`, in ONE Spark job: the CSR is broadcast and
+    P = min(defaultParallelism, ceil(V/64)) tasks each BFS a contiguous
+    block of 64-source words, returning per-distance ORDERED pair
+    counts; the driver sums them, halves them (the graph is undirected)
+    and accumulates up to the first empty level."""
+    import pyarrow as pa
+
+    indptr, indices = _csr_from_arrow(table)
+    n_words = -(-(len(indptr) - 1) // 64)
+    if n_words == 0:
+        return []
+    n_tasks = min(spark.sparkContext.defaultParallelism, n_words)
+    csr = spark.sparkContext.broadcast((indptr, indices))
+
+    def run(batches):
+        ip, ix = csr.value
+        for batch in batches:
+            for task in batch.column(0).to_pylist():
+                lo, hi = task * n_words // n_tasks, (task + 1) * n_words // n_tasks
+                per_d = _bitbfs_level_counts(ip, ix, range(lo, hi), max_d)
+                d = per_d.nonzero()[0]
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(d, pa.int32()), pa.array(per_d[d], pa.int64())],
+                    names=["d", "pairs"],
+                )
+
+    try:
+        rows = (
+            spark.range(n_tasks, numPartitions=n_tasks)
+            .mapInArrow(run, "d int, pairs long")
+            .collect()
+        )
+    finally:
+        csr.destroy()
+    per_d: dict[int, int] = {}
+    for r in rows:
+        per_d[r["d"]] = per_d.get(r["d"], 0) + r["pairs"]
     counts: list[tuple[int, int]] = []
     acc = 0
-    for d in sorted(per_d):
-        acc += per_d[d]
+    for d in range(1, max_d + 1):
+        if not per_d.get(d):
+            break
+        acc += per_d[d] // 2
         counts.append((d, acc))
     return counts
 
@@ -212,132 +320,158 @@ def connected_pairs_by_distance(
     edges: DataFrame,
     max_d: int = 20,
     checkpoint_every: int = 3,
-    local_threshold: int = 2000,
 ) -> list[tuple[int, int]]:
-    """Frontier BFS over pairs: returns [(d, cumulative #unordered connected
-    pairs with shortest distance <= d)] until convergence or max_d.
+    """[(d, cumulative #unordered connected pairs with shortest distance
+    <= d)] of the undirected graph on `edges` (src, dst), until no pair
+    is new or d = max_d. `edges` carries both orientations, as
+    `bidirectional` and `snapshot_edges` produce; self-loops and
+    duplicate edges are ignored.
+
+    Two tiers, split by the session's broadcast budget
+    (`spark.sql.autoBroadcastJoinThreshold`, 8 bytes per edge row — no
+    knob of its own): the edges are read once, up to one row past the
+    budget, as an Arrow table. If they fit, the bit-parallel
+    multi-source BFS runs over a broadcast CSR in a single job
+    (`_bitbfs_pairs_by_distance`); only adjacencies above the budget
+    take the distributed pair BFS (`_pair_bfs_by_distance`). Past what
+    that can hold, the approximate hop-plot (`approx_hop_plot`,
+    HyperBall) is the remaining path.
+    """
+    spark = edges.sparkSession
+    budget_rows = _broadcast_budget_rows(spark)
+    if budget_rows > 0:
+        table = edges.select("src", "dst").limit(budget_rows + 1).toArrow()
+        if table.num_rows <= budget_rows:
+            return _bitbfs_pairs_by_distance(spark, table, max_d)
+        del table
+    return _pair_bfs_by_distance(edges, max_d, checkpoint_every)
+
+
+def _pair_bfs_by_distance(
+    edges: DataFrame, max_d: int, checkpoint_every: int
+) -> list[tuple[int, int]]:
+    """Frontier BFS over pairs, the tier for adjacencies above the
+    broadcast budget; same contract as `connected_pairs_by_distance`.
 
     Invariant per round: `frontier` holds DIRECTED pairs at shortest
     distance exactly d (both orientations — needed so the next hop can
     extend from either end); `seen` holds CANONICAL pairs at distance <= d.
     A distance-(d+1) pair is always a distance-d pair extended by one edge,
-    so candidates = frontier ⋈ edges, anti-joined against seen.
-
-    Graphs at or below `local_threshold` edges take a driver-local exact
-    BFS instead: the distributed loop costs ~8 Spark jobs per round
-    (frontier join, fused dedup shuffle, checkpoint materializations) —
-    pure fixed overhead when the whole graph fits in one pair of driver
-    lists. Same cutover reasoning as broadcast-vs-shuffle join: below the
-    threshold the data movement IS the cost. The fixture graphs (tens of
-    edges) go from ~10 s to milliseconds; any real corpus is far above
-    the threshold and unaffected.
+    so candidates = frontier ⋈ edges, anti-joined against seen. Every
+    persisted or lineage-cut round state is `release`d before return.
     """
-    spark = edges.sparkSession
-    n_edges = edges.limit(local_threshold + 1).count()
-    if n_edges <= local_threshold:
-        rows = edges.collect()
-        return _local_pairs_by_distance([(r[0], r[1]) for r in rows], max_d)
-    edges = edges.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
+    held: list[DataFrame] = []
 
-    d1 = canonical_pairs(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    seen = d1
-    frontier = d1.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
-        d1.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    def hold(df: DataFrame) -> DataFrame:
+        held.append(df)
+        return df
 
-    counts: list[tuple[int, int]] = []
-    total = d1.count()
-    if total == 0:
-        edges.unpersist()
-        return counts
-    counts.append((1, total))
-
-    # unpersist of a round's structures must wait until the NEXT round's
-    # count has materialized `next_seen`/`next_frontier` (they read the
-    # previous round's persisted blocks; releasing earlier forces a full
-    # recompute of the round)
-    pending_release: list[DataFrame] = []
-    for d in range(2, max_d + 1):
-        if d == 2:
-            # Wedge-centered candidates for the first extension round
-            # (r13 optimization, guide §2.3 — shuffle fewer bytes): at
-            # d=2 the frontier IS the (symmetric, distinct) edge set, so
-            # a distance-2 candidate is exactly an unordered pair of
-            # distinct neighbors of a common center. The generic
-            # frontier-extension join below emits every such pair TWICE
-            # (once per traversal direction: (a,b)⋈(b,c) and
-            # (c,b)⋈(b,a) both canonicalize to {a,c}); the self-join on
-            # the center with a strict dst< dst order emits each pair
-            # ONCE — half the candidate rows into the fused dedup
-            # shuffle (measured 25.2M -> 12.6M at sf0.1, identical
-            # result set). Both join sides are the src-partitioned
-            # persisted edge cache, so the join itself adds NO exchange.
-            e2 = edges.select(
-                F.col("src").alias("c_src"), F.col("dst").alias("c_dst")
-            )
-            cand = edges.join(
-                e2,
-                (edges["src"] == e2["c_src"]) & (edges["dst"] < e2["c_dst"]),
-            ).select(F.col("dst").alias("a"), F.col("c_dst").alias("b"))
-        else:
-            fr = frontier.select(
-                F.col("src").alias("f_src"), F.col("dst").alias("f_dst")
-            )
-            cand = (
-                fr.join(edges, fr["f_dst"] == edges["src"], "inner")
-                .select(
-                    F.least("f_src", "dst").alias("a"),
-                    F.greatest("f_src", "dst").alias("b"),
-                )
-                .filter(F.col("a") != F.col("b"))
-            )
-        # dedup + seen-subtraction fused into ONE shuffle: tag candidates 0
-        # and seen pairs 1, group once, keep groups with no seen member —
-        # equivalent to distinct() followed by a left_anti join but a full
-        # shuffle pass cheaper on the (large) candidate set
-        new_pairs = (
-            cand.select("a", "b", F.lit(0).alias("_seen"))
-            .unionByName(seen.select("a", "b", F.lit(1).alias("_seen")))
-            .groupBy("a", "b")
-            .agg(F.max("_seen").alias("_seen"))
-            .filter(F.col("_seen") == 0)
-            .select("a", "b")
+    try:
+        edges = hold(edges.repartition("src").persist(StorageLevel.MEMORY_AND_DISK))
+        d1 = hold(canonical_pairs(edges).persist(StorageLevel.MEMORY_AND_DISK))
+        seen = d1
+        frontier = hold(
+            d1.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+            .unionByName(d1.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        if d < max_d:
-            # persisted because the next round unions it into `seen`; at the
-            # final round the count below is the only consumer — skipping the
-            # persist avoids serializing the full pair set once more
-            new_pairs = new_pairs.persist(StorageLevel.MEMORY_AND_DISK)
-        n_new = new_pairs.count()
-        for df in pending_release:
-            df.unpersist()
-        pending_release = []
-        if n_new == 0:
-            new_pairs.unpersist()
-            break
 
-        next_seen = seen.unionByName(new_pairs)
-        next_frontier = new_pairs.select(
-            F.col("a").alias("src"), F.col("b").alias("dst")
-        ).unionByName(new_pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+        counts: list[tuple[int, int]] = []
+        total = d1.count()
+        if total == 0:
+            return counts
+        counts.append((1, total))
 
-        if d % checkpoint_every == 0:
-            # truncate lineage: each round unions onto the last, and without
-            # this the d-th count recomputes all prior rounds (the
-            # reference's unbounded-lineage flaw, SURVEY.md §4.3)
-            next_seen = next_seen.transform(cut_lineage)
-            next_frontier = next_frontier.transform(cut_lineage)
-        else:
-            next_seen = next_seen.persist(StorageLevel.MEMORY_AND_DISK)
-            next_frontier = next_frontier.persist(StorageLevel.MEMORY_AND_DISK)
+        # unpersist of a round's structures must wait until the NEXT round's
+        # count has materialized `next_seen`/`next_frontier` (they read the
+        # previous round's persisted blocks; releasing earlier forces a
+        # full recompute of the round)
+        pending_release: list[DataFrame] = []
+        for d in range(2, max_d + 1):
+            if d == 2:
+                # Wedge-centered candidates for the first extension round
+                # (r13 optimization, guide §2.3 — shuffle fewer bytes): at
+                # d=2 the frontier IS the (symmetric, distinct) edge set, so
+                # a distance-2 candidate is exactly an unordered pair of
+                # distinct neighbors of a common center. The generic
+                # frontier-extension join below emits every such pair TWICE
+                # (once per traversal direction: (a,b)⋈(b,c) and
+                # (c,b)⋈(b,a) both canonicalize to {a,c}); the self-join on
+                # the center with a strict dst< dst order emits each pair
+                # ONCE — half the candidate rows into the fused dedup
+                # shuffle (measured 25.2M -> 12.6M at sf0.1, identical
+                # result set). Both join sides are the src-partitioned
+                # persisted edge cache, so the join itself adds NO exchange.
+                e2 = edges.select(
+                    F.col("src").alias("c_src"), F.col("dst").alias("c_dst")
+                )
+                cand = edges.join(
+                    e2,
+                    (edges["src"] == e2["c_src"]) & (edges["dst"] < e2["c_dst"]),
+                ).select(F.col("dst").alias("a"), F.col("c_dst").alias("b"))
+            else:
+                fr = frontier.select(
+                    F.col("src").alias("f_src"), F.col("dst").alias("f_dst")
+                )
+                cand = (
+                    fr.join(edges, fr["f_dst"] == edges["src"], "inner")
+                    .select(
+                        F.least("f_src", "dst").alias("a"),
+                        F.greatest("f_src", "dst").alias("b"),
+                    )
+                    .filter(F.col("a") != F.col("b"))
+                )
+            # dedup + seen-subtraction fused into ONE shuffle: tag candidates 0
+            # and seen pairs 1, group once, keep groups with no seen member —
+            # equivalent to distinct() followed by a left_anti join but a full
+            # shuffle pass cheaper on the (large) candidate set
+            new_pairs = (
+                cand.select("a", "b", F.lit(0).alias("_seen"))
+                .unionByName(seen.select("a", "b", F.lit(1).alias("_seen")))
+                .groupBy("a", "b")
+                .agg(F.max("_seen").alias("_seen"))
+                .filter(F.col("_seen") == 0)
+                .select("a", "b")
+            )
+            if d < max_d:
+                # persisted because the next round unions it into `seen`; at the
+                # final round the count below is the only consumer — skipping the
+                # persist avoids serializing the full pair set once more
+                new_pairs = hold(new_pairs.persist(StorageLevel.MEMORY_AND_DISK))
+            n_new = new_pairs.count()
+            for df in pending_release:
+                # plain unpersist: a lineage-cut frame's blocks may still
+                # back a later round's partially built cache, so those
+                # wait for the final `release`
+                df.unpersist()
+            pending_release = []
+            if n_new == 0:
+                break
+            counts.append((d, counts[-1][1] + n_new))
+            if d == max_d:
+                break
 
-        pending_release = [seen, frontier, new_pairs]
-        seen, frontier = next_seen, next_frontier
-        counts.append((d, counts[-1][1] + n_new))
+            next_seen = seen.unionByName(new_pairs)
+            next_frontier = new_pairs.select(
+                F.col("a").alias("src"), F.col("b").alias("dst")
+            ).unionByName(new_pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
 
-    for df in [edges, seen, frontier, d1, *pending_release]:
-        df.unpersist()
-    return counts
+            if d % checkpoint_every == 0:
+                # truncate lineage: each round unions onto the last, and without
+                # this the d-th count recomputes all prior rounds (the
+                # reference's unbounded-lineage flaw, SURVEY.md §4.3)
+                next_seen = hold(next_seen.transform(cut_lineage))
+                next_frontier = hold(next_frontier.transform(cut_lineage))
+            else:
+                next_seen = hold(next_seen.persist(StorageLevel.MEMORY_AND_DISK))
+                next_frontier = hold(next_frontier.persist(StorageLevel.MEMORY_AND_DISK))
+
+            pending_release = [seen, frontier, new_pairs]
+            seen, frontier = next_seen, next_frontier
+        return counts
+    finally:
+        for df in held:
+            release(df)
 
 
 def hop_plot(
@@ -395,51 +529,40 @@ def effective_diameter(rows: list[HopPlotRow]) -> float | None:
     return None
 
 
-def hop_plot_df(
-    spark,
-    edges: DataFrame,
-    total_pairs: int | None = None,
-    max_d: int = 20,
-    strict_stop: bool = True,
-) -> DataFrame:
-    """Hop-plot as a DataFrame with the reference's output schema
-    (d, `g(d)`, percent_of_total) — S7 local-collection source."""
+def hop_plot_df(spark, rows: list[HopPlotRow]) -> DataFrame:
+    """Hop-plot rows (from `hop_plot` or `approx_hop_plot`) as a
+    DataFrame with the reference's output schema (d, `g(d)`,
+    percent_of_total) — S7 local-collection source."""
     from .. import schemas
 
-    rows = hop_plot(edges, total_pairs=total_pairs, max_d=max_d, strict_stop=strict_stop)
-    data = [(r.d, r.pairs, r.percent) for r in rows]
-    return spark.createDataFrame(data, schema=schemas.HOP_PLOT)
+    return spark.createDataFrame(
+        [(r.d, r.pairs, r.percent) for r in rows], schema=schemas.HOP_PLOT
+    )
 
 
-def approx_hop_plot_df(
-    spark,
+def approx_hop_plot(
     edges: DataFrame,
     total_pairs: int | None = None,
     max_d: int = 20,
     p: int = 6,
     strict_stop: bool = True,
-) -> DataFrame:
-    """Hop-plot in the reference's output schema, estimated by HyperBall
-    (functions/sketches.py) instead of the exact pair BFS — O(|V|·2^p)
-    state instead of O(connected pairs), the path that still runs when
-    the pair set no longer fits anywhere (100 TB graphs). Estimates carry
-    ~1 % relative error at p=6 on sf0.1 (asserted in tests)."""
-    from .. import schemas
+) -> list[HopPlotRow]:
+    """Hop-plot rows estimated by HyperBall (functions/sketches.py)
+    instead of the exact BFS — O(|V|·2^p) state instead of O(connected
+    pairs) or a broadcast adjacency, the path that still runs when
+    neither fits anywhere (100 TB graphs). Estimates carry ~1 % relative
+    error at p=6 on sf0.1 (asserted in tests)."""
     from ..functions.sketches import hyperball_hopplot
 
     counts = hyperball_hopplot(edges, p=p, max_d=max_d)
     if not counts:
-        return spark.createDataFrame([], schema=schemas.HOP_PLOT)
+        return []
     total = float(total_pairs) if total_pairs is not None else counts[-1][1]
     rows = [
         HopPlotRow(d, int(round(g)), g / total if total else 0.0)
         for d, g in counts
     ]
-    if strict_stop:
-        rows = _apply_strict_stop(rows)
-    return spark.createDataFrame(
-        [(r.d, r.pairs, r.percent) for r in rows], schema=schemas.HOP_PLOT
-    )
+    return _apply_strict_stop(rows) if strict_stop else rows
 
 
 def connected_components(
@@ -1624,8 +1747,7 @@ def harmonic_centrality(
     """Exact harmonic centrality sum_{v != u} 1/d(u, v) over an
     undirected edge list given with BOTH orientations (columns s, d).
 
-    Same two-tier shape as `connected_pairs_by_distance`: at or below
-    `local_threshold` directed edges the whole graph is BFS'd
+    Two tiers: at or below `local_threshold` directed edges the whole graph is BFS'd
     driver-local (the distributed loop's ~6 jobs/round are pure overhead
     on a fixture-sized graph); above it, a simultaneous multi-source BFS
     runs distributed — the frontier carries (src, node) pairs, each
@@ -1684,7 +1806,7 @@ def harmonic_centrality(
             .select("src", F.col("d").alias("node"), F.lit(d).alias("dist"))
         )
         # dedup + seen-subtraction fused into one shuffle (tag-and-group,
-        # same trick as connected_pairs_by_distance)
+        # same trick as the hop-plot's pair BFS)
         nxt = (
             cand.select("src", "node", F.lit(0).alias("_seen"))
             .unionByName(seen.select("src", "node", F.lit(1).alias("_seen")))
@@ -1721,7 +1843,7 @@ def betweenness_sampled(
     sigma_st(v)/sigma_st over ORDERED (s, t) pairs — no /2 halving — so
     sampled and exact runs share one definition.
 
-    Two-tier like `connected_pairs_by_distance`: driver-local Brandes
+    Two tiers, like `harmonic_centrality`: driver-local Brandes
     below `local_threshold` edges; above it, the standard distributed
     formulation — a forward multi-source BFS accumulating per-(src,node)
     shortest-path counts sigma (one join + one sum-aggregate per level),
@@ -1888,7 +2010,7 @@ def maximal_independent_set(
     gate's independent replay and the oracle certify it), with the same
     round indices and the same max_rounds bound. The collect is bounded
     by `local_threshold` rows — driver-sized at any data scale, the
-    same argument as connected_pairs_by_distance's local BFS cutover.
+    same argument as harmonic_centrality's local BFS cutover.
     Per-round counts ride the round's own checkpoint materialization as
     observed metrics instead of separate count jobs."""
     import hashlib

@@ -11,12 +11,13 @@ hop-plot parity is unattainable. What IS attainable:
   CLI + CSV sink, cross-checked against an independent DuckDB oracle
   over the raw text files;
 - the diameter task runs end-to-end on the 1993-truncated dataset
-  (2826 nodes / 2919 edges — big enough to take the DISTRIBUTED BFS
-  path, >2000-edge threshold), with every emitted row verified against
-  an independent driver-side BFS replay honoring the reference's strict
-  stop rule (d=1,2 always; d>=3 while previous percent <= 0.90 —
-  Analytics.scala:176-214) and against a DuckDB recursive-CTE replay for
-  the driver-local 1992 snapshot.
+  (2826 nodes / 2919 edges) through both exact BFS tiers — the
+  broadcast bit-parallel kernel the session's budget selects, and the
+  distributed pair BFS forced by turning the broadcast budget off —
+  with every emitted row verified against an independent driver-side
+  BFS replay honoring the reference's strict stop rule (d=1,2 always;
+  d>=3 while previous percent <= 0.90 — Analytics.scala:176-214) and
+  the 1992 snapshot's counts against a DuckDB recursive-CTE replay.
 """
 
 from __future__ import annotations
@@ -142,10 +143,15 @@ def _strict_stop(counts: list[tuple[int, int]], total: int) -> list[tuple[int, i
     return out
 
 
-def test_cli_diameter_distributed_path_vs_replays(spark, hepth93_dir, tmp_path):
+def test_cli_diameter_both_tiers_vs_replays(
+    spark, broadcast_off, hepth93_dir, tmp_path
+):
     from citegraph_spark import cli
 
-    assert cli.main(["diameter", hepth93_dir, str(tmp_path)]) == 0
+    kernel_out, fallback_out = tmp_path / "kernel", tmp_path / "fallback"
+    assert cli.main(["diameter", hepth93_dir, str(kernel_out)]) == 0
+    with broadcast_off():
+        assert cli.main(["diameter", hepth93_dir, str(fallback_out)]) == 0
 
     # reconstruct both snapshots from the raw files
     pairs = []
@@ -167,18 +173,20 @@ def test_cli_diameter_distributed_path_vs_replays(spark, hepth93_dir, tmp_path):
         snap = [
             (f, t) for f, t in pairs if years[f] <= year and years[t] <= year
         ]
-        # 1993 must exercise the distributed (>2000 undirected edges) path
+        # 1993 is the larger snapshot: thousands of directed edges, so
+        # the pair BFS runs several rounds and cuts lineage
         if year == 1993:
             assert len({(min(f, t), max(f, t)) for f, t in snap}) * 2 > 2000
         counts = _bfs_pair_counts(_undirected_adj(snap), max_d=20)
         want = _strict_stop(counts, total=counts[-1][1])
 
-        rows = _read_csv(f"{tmp_path}/diameter_{year}/part*.csv")
-        assert rows[0] == ["d", "g(d)", "percent_of_total"]
-        got = [(int(d), int(g), float(p)) for d, g, p in rows[1:]]
-        assert got == want, f"year {year}"
+        for out in (kernel_out, fallback_out):
+            rows = _read_csv(f"{out}/diameter_{year}/part*.csv")
+            assert rows[0] == ["d", "g(d)", "percent_of_total"]
+            got = [(int(d), int(g), float(p)) for d, g, p in rows[1:]]
+            assert got == want, f"{out.name} year {year}"
 
-    # DuckDB recursive-CTE replay for the driver-local 1992 snapshot:
+    # DuckDB recursive-CTE replay of the 1992 snapshot's counts:
     # shortest distance = first level a pair appears at
     snap92 = [(f, t) for f, t in pairs if years[f] <= 1992 and years[t] <= 1992]
     values = ", ".join(f"({f}, {t})" for f, t in snap92)

@@ -137,19 +137,20 @@ def test_connected_components_hand_graph(spark):
 
 
 @pytest.mark.parametrize("year", [1997, 1998])
-def test_distributed_bfs_matches_local_exact(spark, year):
-    """Force the DISTRIBUTED frontier-BFS path (local_threshold=0) and
-    pin it to the driver-local exact BFS on the same fixture snapshot —
-    covers the wedge-centered d=2 candidate round (r13 optimization),
-    which the fixture entries otherwise bypass via the local cutover."""
-    from citegraph_spark.operators.graph import (
-        _local_pairs_by_distance,
-        connected_pairs_by_distance,
-    )
+def test_distributed_bfs_matches_local_exact(spark, broadcast_off, year):
+    """Force the DISTRIBUTED pair-BFS fallback (broadcast budget off) and
+    pin it to the broadcast bit-parallel kernel and to the pure-Python
+    reference BFS on the same fixture snapshot — covers the
+    wedge-centered d=2 candidate round (r13 optimization) and the
+    lineage-cut round, which the fixture entries otherwise bypass."""
+    from citegraph_spark.operators.graph import connected_pairs_by_distance
+    from _bfs_reference import reference_pairs_by_distance
 
     edges = snapshot_edges(fixture_citations(spark), fixture_published(spark), year)
-    dist = connected_pairs_by_distance(edges, max_d=20, local_threshold=0)
-    local = _local_pairs_by_distance(
+    with broadcast_off():
+        dist = connected_pairs_by_distance(edges, max_d=20)
+    kernel = connected_pairs_by_distance(edges, max_d=20)
+    local = reference_pairs_by_distance(
         [(r[0], r[1]) for r in edges.collect()], max_d=20
     )
-    assert dist == local == EXPECTED_HOPPLOT_FULL[year]
+    assert dist == kernel == local == EXPECTED_HOPPLOT_FULL[year]
