@@ -7,13 +7,13 @@ Analytics.scala:152-414). Here everything is DataFrame ops:
 - density (G1): groupBy + window running totals + broadcast-able joins.
 - snapshot (G2): double vertex join + year filter + bidirectional union.
 - hop-plot (G4-G9): exact all-pairs BFS in two tiers, chosen by the
-  session's broadcast budget (`spark.sql.autoBroadcastJoinThreshold`,
-  8 bytes per directed edge):
-  * below it, a bit-parallel multi-source BFS (Then et al., "The More
-    the Merrier", VLDB 2014) over a broadcast int32 CSR adjacency — ONE
-    Spark job per snapshot: each task runs its share of the sources 64
-    at a time, one uint64 bit per source, and returns per-distance pair
-    counts. State is O(|V|) words per task, never O(connected pairs);
+  session's broadcast budget (`spark.sql.autoBroadcastJoinThreshold`)
+  against the bytes of the snapshot's int32 CSR adjacency:
+  * within it, a bit-parallel multi-source BFS (Then et al., "The More
+    the Merrier", VLDB 2014) over the broadcast CSR — ONE Spark job per
+    snapshot: each task runs its share of the sources 64 at a time, one
+    uint64 bit per source, and returns per-distance pair counts. State
+    is O(|V|) words per task, never O(connected pairs);
   * above it, a frontier BFS over *pairs* — the frontier carries
     12-byte (src, dst) rows instead of the reference's O(d)-length path
     arrays, the `seen` set is canonical (unordered) pairs, and lineage
@@ -179,13 +179,12 @@ class HopPlotRow:
     percent: float
 
 
-def _broadcast_budget_rows(spark) -> int:
-    """Directed edge rows the bit-parallel BFS may hold: the session's
-    broadcast budget (`spark.sql.autoBroadcastJoinThreshold`) at 8
-    bytes per row — each row becomes at most two int32 CSR entries.
-    0 when the session has broadcasting turned off."""
+def _broadcast_budget_bytes(spark) -> int:
+    """The session's broadcast budget (`spark.sql.autoBroadcastJoinThreshold`)
+    in bytes, 0 when the session has broadcasting turned off. The
+    bit-parallel BFS runs when its int32 CSR fits it."""
     budget = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    return max(int(budget), 0) // 8
+    return max(int(budget), 0)
 
 
 def _csr_from_arrow(table) -> tuple:
@@ -226,7 +225,15 @@ def _bitbfs_level_counts(indptr, indices, words, max_d: int):
     (`bitwise_or.at`, while those edges are under a quarter of all
     edges) or pulls densely — every vertex ORs its neighbours' words
     with one `reduceat` over the CSR. Newly reached bits are `next &
-    ~seen`; their popcount is that level's pair count."""
+    ~seen`; their popcount is that level's pair count.
+
+    The length-V `seen`, `frontier` and `nxt` arrays are allocated once
+    per call and only the entries a word touched are reset, so a word's
+    cost is proportional to the edges it expands: a push level touches
+    its fanout, and a pull level runs only when that fanout is over a
+    quarter of the edges (every vertex has degree >= 1, so V <= E).
+    Graphs of many small components thus cost O(V + E) per call, not
+    O(V) per word."""
     import numpy as np
 
     popcount8 = np.frombuffer(_POPCOUNT8, np.uint8)
@@ -234,15 +241,17 @@ def _bitbfs_level_counts(indptr, indices, words, max_d: int):
     n_edges = len(indices)
     deg = np.diff(indptr).astype(np.int64)
     per_d = np.zeros(max_d + 1, np.int64)
+    seen = np.zeros(n, np.uint64)
+    frontier = np.zeros(n, np.uint64)
+    nxt = np.zeros(n, np.uint64)
     for w in words:
         lo = 64 * w
         width = min(64, n - lo)
-        seen = np.zeros(n, np.uint64)
-        seen[lo:lo + width] = np.left_shift(
-            np.uint64(1), np.arange(width, dtype=np.uint64)
-        )
-        frontier = seen.copy()
         active = np.arange(lo, lo + width)
+        new = np.left_shift(np.uint64(1), np.arange(width, dtype=np.uint64))
+        seen[active] = new
+        frontier[active] = new
+        reached = [active]
         for d in range(1, max_d + 1):
             counts = deg[active]
             fanout = int(counts.sum())
@@ -250,33 +259,43 @@ def _bitbfs_level_counts(indptr, indices, words, max_d: int):
                 starts = indptr[active].astype(np.int64)
                 offsets = np.cumsum(counts) - counts
                 pos = np.repeat(starts - offsets, counts) + np.arange(fanout)
-                nxt = np.zeros(n, np.uint64)
-                np.bitwise_or.at(
-                    nxt, indices[pos], np.repeat(frontier[active], counts)
-                )
+                hops = indices[pos]
+                np.bitwise_or.at(nxt, hops, np.repeat(new, counts))
+                targets = np.unique(hops)
+                frontier[active] = 0
+                new = nxt[targets] & ~seen[targets]
+                nxt[targets] = 0
+                hit = new != 0
+                active, new = targets[hit], new[hit]
             else:
-                nxt = np.bitwise_or.reduceat(frontier[indices], indptr[:-1])
-            new = nxt & ~seen
-            active = np.flatnonzero(new)
+                full = np.bitwise_or.reduceat(frontier[indices], indptr[:-1])
+                frontier[active] = 0
+                full &= ~seen
+                active = np.flatnonzero(full)
+                new = full[active]
             if not len(active):
                 break
-            bits = popcount8[new[active].view(np.uint8)]
+            bits = popcount8[new.view(np.uint8)]
             per_d[d] += int(bits.sum(dtype=np.int64))
-            seen |= new
-            frontier = new
+            seen[active] |= new
+            frontier[active] = new
+            reached.append(active)
+        frontier[active] = 0
+        seen[np.concatenate(reached)] = 0
     return per_d
 
 
-def _bitbfs_pairs_by_distance(spark, table, max_d: int) -> list[tuple[int, int]]:
+def _bitbfs_pairs_by_distance(
+    spark, indptr, indices, max_d: int
+) -> list[tuple[int, int]]:
     """Exact [(d, cumulative unordered pairs at distance <= d)] of the
-    graph in Arrow `table`, in ONE Spark job: the CSR is broadcast and
+    graph in CSR form, in ONE Spark job: the CSR is broadcast and
     P = min(defaultParallelism, ceil(V/64)) tasks each BFS a contiguous
     block of 64-source words, returning per-distance ORDERED pair
     counts; the driver sums them, halves them (the graph is undirected)
     and accumulates up to the first empty level."""
     import pyarrow as pa
 
-    indptr, indices = _csr_from_arrow(table)
     n_words = -(-(len(indptr) - 1) // 64)
     if n_words == 0:
         return []
@@ -328,23 +347,37 @@ def connected_pairs_by_distance(
     duplicate edges are ignored.
 
     Two tiers, split by the session's broadcast budget
-    (`spark.sql.autoBroadcastJoinThreshold`, 8 bytes per edge row — no
-    knob of its own): the edges are read once, up to one row past the
-    budget, as an Arrow table. If they fit, the bit-parallel
-    multi-source BFS runs over a broadcast CSR in a single job
-    (`_bitbfs_pairs_by_distance`); only adjacencies above the budget
-    take the distributed pair BFS (`_pair_bfs_by_distance`). Past what
-    that can hold, the approximate hop-plot (`approx_hop_plot`,
-    HyperBall) is the remaining path.
+    (`spark.sql.autoBroadcastJoinThreshold` — no knob of its own): the
+    edges are persisted and read once as an Arrow table, up to one row
+    past budget/4 (with both orientations given, each row is one 4-byte
+    CSR entry). If they fit and their int32 CSR (entries plus row
+    offsets) is within the budget, the bit-parallel multi-source BFS runs over the
+    broadcast CSR in a single job (`_bitbfs_pairs_by_distance`). Larger
+    adjacencies take the distributed pair BFS (`_pair_bfs_by_distance`),
+    which reuses the persisted edges. The budget is a memory cap, not a
+    speed crossover: the kernel is the faster tier at every size
+    measured, but it holds the whole graph on the driver and in every
+    task. Past what the pair BFS can hold, the approximate hop-plot
+    (`approx_hop_plot`, HyperBall) is the remaining path.
     """
     spark = edges.sparkSession
-    budget_rows = _broadcast_budget_rows(spark)
-    if budget_rows > 0:
-        table = edges.select("src", "dst").limit(budget_rows + 1).toArrow()
-        if table.num_rows <= budget_rows:
-            return _bitbfs_pairs_by_distance(spark, table, max_d)
+    budget = _broadcast_budget_bytes(spark)
+    if budget == 0:
+        return _pair_bfs_by_distance(edges, max_d, checkpoint_every)
+    # persisted for the probe's one pass, so that a graph over the budget
+    # does not recompute its edge plan in the pair BFS
+    edges = edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        max_rows = budget // 4
+        table = edges.limit(max_rows + 1).toArrow()
+        csr = _csr_from_arrow(table) if table.num_rows <= max_rows else None
         del table
-    return _pair_bfs_by_distance(edges, max_d, checkpoint_every)
+        if csr is not None and csr[0].nbytes + csr[1].nbytes <= budget:
+            return _bitbfs_pairs_by_distance(spark, *csr, max_d)
+        del csr
+        return _pair_bfs_by_distance(edges, max_d, checkpoint_every)
+    finally:
+        edges.unpersist()
 
 
 def _pair_bfs_by_distance(

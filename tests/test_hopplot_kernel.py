@@ -3,8 +3,10 @@
 Below the session's broadcast budget `connected_pairs_by_distance` runs
 the bit-parallel multi-source kernel over a broadcast CSR; above it, the
 distributed pair BFS. The cases here are the kernel's edge cases, run
-both through Spark and through its numpy core on the driver, plus the
-persisted-state hygiene of both tiers in one session."""
+through Spark with both orientations of every edge (the function's input
+contract) and through the kernel's numpy core on the driver. A subset
+also runs through the pair BFS, so both tiers are held to one contract.
+Last comes the persisted-state hygiene of both tiers in one session."""
 
 from __future__ import annotations
 
@@ -15,6 +17,7 @@ import pytest
 from _bfs_reference import reference_pairs_by_distance
 
 from citegraph_spark.fixtures import fixture_citations, fixture_published
+from citegraph_spark.operators import graph
 from citegraph_spark.operators.graph import (
     _bitbfs_level_counts,
     _csr_from_arrow,
@@ -33,7 +36,18 @@ def _v130() -> list[tuple[int, int]]:
     return _path(130) + [(rng.randrange(130), rng.randrange(130)) for _ in range(60)]
 
 
-#: name -> (edge rows, one orientation unless noted; max_d)
+def _many_components() -> list[tuple[int, int]]:
+    """2,000 disjoint edges and 300 triangles: 4,900 vertices in 2,300
+    components, so each of the 77 source words reaches only a few
+    vertices."""
+    edges = [(2 * i, 2 * i + 1) for i in range(2000)]
+    for t in range(300):
+        a = 4000 + 3 * t
+        edges += [(a, a + 1), (a + 1, a + 2), (a + 2, a)]
+    return edges
+
+
+#: name -> (edge rows, one orientation each; max_d)
 CASES = {
     "empty": ([], 20),
     "single_edge": ([(1, 2)], 20),
@@ -47,7 +61,18 @@ CASES = {
     # vertex 0's 100 edges are over a quarter of all edges, so the level
     # that expands it pulls densely instead of pushing
     "hub_forces_pull": ([(0, i) for i in range(1, 101)] + _path(11, start=100), 20),
+    "many_small_components": (_many_components(), 20),
 }
+
+#: cases the distributed pair BFS is held to as well
+FALLBACK_CASES = ["empty", "self_loops_and_duplicates", "two_components", "max_d_truncates"]
+
+
+def _both_orientations(spark, pairs: list[tuple[int, int]]):
+    """The public contract's input: every row also reversed. Self-loops
+    and duplicates are kept, since the BFS must ignore them."""
+    rows = pairs + [(b, a) for a, b in pairs]
+    return spark.createDataFrame(rows, "src long, dst long")
 
 
 def _arrow(pairs: list[tuple[int, int]]) -> pa.Table:
@@ -60,8 +85,18 @@ def _arrow(pairs: list[tuple[int, int]]) -> pa.Table:
 @pytest.mark.parametrize("name", sorted(CASES))
 def test_kernel_matches_reference(spark, name):
     pairs, max_d = CASES[name]
-    edges = spark.createDataFrame(pairs, "src long, dst long")
-    got = connected_pairs_by_distance(edges, max_d=max_d)
+    got = connected_pairs_by_distance(_both_orientations(spark, pairs), max_d=max_d)
+    assert got == reference_pairs_by_distance(pairs, max_d)
+
+
+@pytest.mark.parametrize("name", FALLBACK_CASES)
+def test_pair_bfs_matches_reference(spark, broadcast_off, name):
+    """The same contract with the broadcast budget off, which sends the
+    call to the distributed pair BFS."""
+    pairs, max_d = CASES[name]
+    edges = _both_orientations(spark, pairs)
+    with broadcast_off():
+        got = connected_pairs_by_distance(edges, max_d=max_d)
     assert got == reference_pairs_by_distance(pairs, max_d)
 
 
@@ -79,6 +114,30 @@ def test_kernel_core_matches_reference(name):
         assert per_d[d] == 2 * (cum - prev)
         prev = cum
     assert per_d.sum() == 2 * prev
+
+
+@pytest.mark.parametrize(
+    "budget, tier",
+    [
+        # 10 disjoint edges, both orientations: 20 rows, and a CSR of
+        # 20 int32 entries plus 21 int32 offsets = 164 bytes
+        (164, "kernel"),
+        (163, "pair"),  # the rows fit budget/4, the CSR does not
+        (79, "pair"),  # the rows alone are over budget/4
+        (-1, "pair"),  # broadcasting off
+    ],
+)
+def test_tier_follows_csr_bytes(spark, monkeypatch, budget, tier):
+    monkeypatch.setattr(graph, "_bitbfs_pairs_by_distance", lambda *a: "kernel")
+    monkeypatch.setattr(graph, "_pair_bfs_by_distance", lambda *a: "pair")
+    edges = _both_orientations(spark, [(2 * i, 2 * i + 1) for i in range(10)])
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(budget))
+    try:
+        assert connected_pairs_by_distance(edges) == tier
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_csr_shapes():
