@@ -26,16 +26,28 @@ def entry(spark: SparkSession) -> DataFrame:
 # --- BEGIN GENERATED ROTATION (python tools/staleness.py sync) ---
 # Derived from CORRECTNESS_r*.json + git-tree fingerprints; do not
 # hand-edit. Head block = entries whose transitive code closure
-# changed since the round-14 sweep (8 entries); then never-certified (0);
+# changed since the round-14 sweep (20 entries); then never-certified (0);
 # then oldest-certification-first (cheap-first within a round).
 _ROTATION = [
+    'graph_hyperball',
+    'graph_effective_diameter_approx',
     'fixture_effective_diameter',
     'fixture_hopplot',
+    'logreg_train_gate',
     'graph_hopplot_d2',
     'fixture_betweenness',
     'fixture_harmonic_centrality',
+    'graph_closeness_sampled',
     'graph_mis_gate',
     'graph_betweenness_sampled',
+    'coreset_kcenter',
+    'graph_diameter_double_sweep',
+    'graph_sssp',
+    'graph_pagerank',
+    'graph_ppr',
+    'graph_hits',
+    'graph_lpa',
+    'dedup_clusters',
     'hyperball_accuracy_gate',
     'events_cohort_retention',
     'events_transitions',
@@ -61,11 +73,9 @@ _ROTATION = [
     'q18_large_orders',
     'bpe_top_merges',
     'events_ewma',
-    'graph_hyperball',
     'doc_novelty_trigrams',
     'dedup_prefix_filter',
     'dedup_incremental',
-    'graph_effective_diameter_approx',
     'dedup_edit_distance',
     'sketch_mergeable_distinct',
     'pipeline_truncation_report',
@@ -161,7 +171,6 @@ _ROTATION = [
     'graph_assortativity',
     'streaming_windowed_append',
     'mad_outlier_prices',
-    'logreg_train_gate',
     'kmeans_quality_gate',
     'pca_power_gate',
     'q6_forecast_revenue',
@@ -239,23 +248,14 @@ _ROTATION = [
     'winsorized_prices',
     'similarity_ivf',
     'stats_moments',
-    'graph_closeness_sampled',
     'graph_matching_gate',
-    'coreset_kcenter',
     'similarity_pq',
     'graph_cc_star_gate',
-    'graph_diameter_double_sweep',
     'graph_ktruss_gate',
-    'graph_sssp',
     'skyline_parts',
-    'graph_pagerank',
     'graph_mst_gate',
-    'graph_ppr',
     'graph_link_prediction',
-    'graph_hits',
-    'graph_lpa',
     'similarity_ivf_trained',
-    'dedup_clusters',
     'similarity_recall_gate',
     'graph_cocitation_triangles',
 ]

@@ -200,7 +200,6 @@ def kcenter_greedy(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint_every: int = 4,
 ):
     """Gonzalez (1985) greedy k-center — the classic coreset-selection /
     diversity-sampling primitive for training-data curation: pick the
@@ -235,7 +234,7 @@ def kcenter_greedy(
     for rank in range(2, k + 1):
         d = _kcenter_dist_expr(center)
         cur = cur.withColumn("_mind", F.least(F.col("_mind"), d))
-        if rank % checkpoint_every == 0:
+        if rank % 4 == 0:
             cur = cur.transform(cut_lineage)
         # farthest-first: max mind, ties to the smallest id
         best = cur.agg(

@@ -36,9 +36,10 @@ TOPK_SCHEMA = "vec_id bigint, neighbor_id bigint, cosine double, rank int"
 
 
 #: Max corpus matrix size the brute-force path may collect+broadcast.
-#: Mirrors operators/graph.py pagerank's broadcast_budget_bytes pattern:
-#: the driver-collect shortcut must FAIL FAST above the budget instead of
-#: silently OOMing the driver at scale.
+#: Same 256 MiB as the iterative operators' round-state budget
+#: (`lineage.STATE_BROADCAST_BYTES`), but here a hard limit: the
+#: driver-collect shortcut must FAIL FAST above it instead of silently
+#: OOMing the driver at scale.
 BROADCAST_BUDGET_BYTES = 256 << 20
 
 

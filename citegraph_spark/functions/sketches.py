@@ -25,9 +25,10 @@ Spark-first design — NO Python UDFs, no RDDs:
   edges are harmless (max is idempotent), so the edge feed skips its
   dedup shuffle.
 - The one-hop absorb joins the self-loop-augmented edge list with the
-  counters. When the counter table fits a broadcast budget (|V| *
-  (m + overhead) bytes), the counters are BROADCAST and the edges are
-  pre-partitioned by `src`: the join is map-side and the group-by key
+  counters, one `lineage.relax_rounds` round per hop. When the counter
+  table fits the round-state budget (|V| * (m + overhead) bytes), the
+  counters are BROADCAST and the edges are pre-partitioned by `src`:
+  the join is map-side and the group-by key
   (src, aliased `node`) already matches the edges' partitioning, so a
   whole round runs with ZERO shuffle — only the ~|V|*m-byte broadcast
   republish per round. Past the budget (1e9-node graphs at 100 TB
@@ -50,15 +51,12 @@ Spark-first design — NO Python UDFs, no RDDs:
 
 from __future__ import annotations
 
-import contextlib
-import gc
 import math
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ..lineage import cut_lineage
+from ..lineage import cut_lineage, relax_rounds, release
 
 
 def _alpha(m: int) -> float:
@@ -252,21 +250,23 @@ def hyperball_hopplot(
     p: int = 6,
     max_d: int = 20,
     rel_tol: float = 1e-3,
-    broadcast_budget_bytes: int = 256 << 20,
 ) -> list[tuple[int, float]]:
     """Approximate hop-plot: [(d, estimated #unordered connected pairs at
     dist <= d)] until the neighborhood function stabilizes (relative
-    change < rel_tol) or max_d.
+    change < rel_tol) or max_d; [] for a graph with no vertex.
 
     `edges`: (src, dst), both orientations. Standard error of each HLL
     estimate is ~1.04/sqrt(2^p) (p=6 -> ~13 %); sums over nodes
     concentrate tighter, and for balls far smaller than m the
     linear-counting regime is near-exact.
 
-    Counters fitting `broadcast_budget_bytes` (|V| * (m + row overhead))
-    are broadcast each round — with the self-loop-augmented edge table
-    pre-partitioned by src, a round is then a single zero-shuffle job.
-    Larger vertex sets fall back to a shuffled join transparently.
+    The rounds run through `lineage.relax_rounds`: counters fitting the
+    round-state budget (|V| * (m + row overhead)) are broadcast each
+    round — with the self-loop-augmented edge table pre-partitioned by
+    src, a round is then a single zero-shuffle job. Larger vertex sets
+    fall back to a shuffled join transparently. Each round's estimate
+    rides its lineage cut as an `observe` metric, which also decides the
+    rel_tol stop.
     """
     spark = edges.sparkSession
     m = 1 << p
@@ -281,7 +281,6 @@ def hyperball_hopplot(
     # serializing the (interpreted) loop stages.
     codegen_before = spark.conf.get("spark.sql.codegen.wholeStage", "true")
     coalesce_before = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try:
@@ -289,68 +288,51 @@ def hyperball_hopplot(
             edges.select(F.col("src").alias("node")), p=p
         ).transform(cut_lineage)
         n = counters.count()
-        use_broadcast = n * (m + 32) <= broadcast_budget_bytes
+        if n == 0:
+            release(counters)
+            return []
         # self-loops make absorb a pure join+agg (each node's own ball
         # rides the (v, v) message) — no union with the previous
         # counters, so the broadcast path needs no exchange at all.
         # Loops come from the checkpointed counters (already distinct),
         # so the upstream edge lineage is scanned once here, not twice.
-        edges_aug = (
-            edges.unionByName(
-                counters.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-            )
-            # persist, NOT localCheckpoint (a PySpark checkpoint scans
-            # back with UnknownPartitioning and every round re-shuffles
-            # this O(edges) table — see operators/graph.py pagerank).
-            # Broadcast mode partitions by the AGG key `src` so a round
-            # is join + agg with zero exchange; the fallback partitions
-            # by the JOIN key `dst` and hash-builds on the counter side,
-            # so the only per-round exchanges are the counter table and
-            # the map-side-combined aggregate — never the edges.
-            .repartition(n_shuffle, "src" if use_broadcast else "dst")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        edges_aug = edges.unionByName(
+            counters.select(F.col("node").alias("src"), F.col("node").alias("dst"))
         )
-        edges_aug.count()  # materialize once
-
-        out: list[tuple[int, float]] = []
-        prev_total = float(n)  # N(0): every node reaches itself
         max_aggs = [F.expr(f"max({c}) AS {c}") for c in cols]
-        est_sum = F.expr(f"sum({_estimate_sql(p)})").alias("total")
-        for d in range(1, max_d + 1):
-            build = (
-                F.broadcast(counters)
-                if use_broadcast
-                else counters.hint("shuffle_hash")
-            )
-            # the round estimate rides the checkpoint materialization as
-            # an `observe` metric (r13 optimization, guide §1.2): the
-            # estimate previously ran as a separate per-round job over
-            # the checkpointed counters — same sum, one job instead of
-            # two per round, and the observed aggregate is computed on
-            # the absorb output rows as they materialize
-            obs = Observation(f"hyperball_d{d}")
-            nxt = (
-                edges_aug.join(build, edges_aug["dst"] == build["node"], "inner")
+
+        def step(edges_aug: DataFrame, counters: DataFrame) -> DataFrame:
+            return (
+                edges_aug.join(counters, edges_aug["dst"] == counters["node"], "inner")
                 .select(edges_aug["src"].alias("node"), *cols)
                 .groupBy("node")
                 .agg(*max_aggs)
-                .observe(obs, est_sum)
-            ).transform(cut_lineage)
-            total = float(obs.get["total"] or 0.0)
-            counters = nxt
-            # release superseded round state promptly: Python's lazy
-            # collection of Py4J refs otherwise pins old checkpoint
-            # blocks/broadcasts JVM-side and rounds degrade sharply
-            gc.collect()
-            pairs = max(0.0, (total - n) / 2.0)
-            out.append((d, pairs))
-            if prev_total > 0 and abs(total - prev_total) / prev_total < rel_tol:
-                break
-            prev_total = total
+            )
+
+        out: list[tuple[int, float]] = []
+        totals = [float(n)]  # N(0): every node reaches itself
+
+        def stop(d: int, total) -> bool:
+            total = float(total or 0.0)
+            out.append((d, max(0.0, (total - n) / 2.0)))
+            prev = totals[-1]
+            totals.append(total)
+            return prev > 0 and abs(total - prev) / prev < rel_tol
+
+        release(
+            relax_rounds(
+                edges_aug,
+                counters,
+                step,
+                max_d,
+                state_bytes=n * (m + 32),
+                keys=("src", "dst"),
+                observe=F.expr(f"sum({_estimate_sql(p)})").alias("total"),
+                stop=stop,
+            )
+        )
+        return out
     finally:
-        with contextlib.suppress(Exception):
-            edges_aug.unpersist()
+        release(edges)
         spark.conf.set("spark.sql.codegen.wholeStage", codegen_before)
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coalesce_before)
-
-    return out

@@ -5,7 +5,10 @@ Every iterative operator in this engine (pagerank/hits/sssp/BFS
 frontiers, star-contraction CC, Borůvka MSF, k-truss peeling, LPA,
 HyperBall, MIS/matching, BPE merge rounds, k-center, and the
 partition-carry relational idioms) truncates its per-round plan lineage
-so round N+1's plan does not embed round N's. `DataFrame.localCheckpoint`
+so round N+1's plan does not embed round N's. The broadcast-relaxation
+operators (pagerank, hits, sssp_bounded, multi_source_bfs, HyperBall)
+run their whole loop through `relax_rounds` below, which owns the cut
+cadence along with the tier choice and the cleanup. `DataFrame.localCheckpoint`
 is the right default on local[*] and for short jobs: blocks live in
 executor storage, no DFS round-trip. It is NOT fault-tolerant — the
 truncated lineage cannot recompute lost blocks, so on a multi-hour
@@ -35,13 +38,26 @@ point the dir at a storage-lifecycle-managed path — otherwise a
 
 from __future__ import annotations
 
+import contextlib
+import gc
 import hashlib
 import json
 import sys
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 RELIABLE_FLAG = "spark.citegraph.reliableCheckpoint"
+
+#: Largest per-round state (rows × the operator's bytes per row) that
+#: `relax_rounds` broadcasts into each round's join.
+STATE_BROADCAST_BYTES = 256 << 20
+
+#: `relax_rounds` cuts the round state's lineage every CUT_EVERY rounds
+#: and at the last round.
+CUT_EVERY = 3
 
 
 def cut_lineage(df: DataFrame) -> DataFrame:
@@ -70,6 +86,118 @@ def release(df: DataFrame) -> None:
     plan = df._jdf.queryExecution().analyzed()
     if plan.getClass().getSimpleName() == "LogicalRDD":
         plan.rdd().unpersist(False)
+
+
+def session_broadcast_bytes(spark) -> int:
+    """The session's broadcast budget (`spark.sql.autoBroadcastJoinThreshold`)
+    in bytes, 0 when the session has broadcasting turned off."""
+    budget = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return max(int(budget), 0)
+
+
+@contextlib.contextmanager
+def _aqe_off_for_rounds(spark, active: bool):
+    """Turn AQE off around a zero-shuffle broadcast-round loop (r13,
+    guide §1.2): with the static side pre-partitioned and the per-round
+    state broadcast, a round's plan has NO exchange for AQE to adapt —
+    its stage-by-stage materialization and replanning is pure per-job
+    latency (~0.1 s/round measured on the pagerank/hits/sssp loops).
+    `active=False` (the shuffled fallback) is a no-op: those rounds DO
+    shuffle the per-round state and AQE's coalescing is load-bearing
+    there. Restores the caller's setting on exit."""
+    if not active:
+        yield
+        return
+    before = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", before)
+
+
+def relax_rounds(
+    static: DataFrame,
+    state: DataFrame,
+    step: Callable[[DataFrame, DataFrame], DataFrame],
+    rounds: int,
+    *,
+    state_bytes: int = 0,
+    keys: tuple[str, str] | None = None,
+    observe: Column | None = None,
+    stop: Callable[[int, Any], bool] | None = None,
+) -> DataFrame:
+    """Run up to `rounds` relaxation rounds, `state = step(static, build)`,
+    where `build` is the previous state marked as the round join's build
+    side — a Pregel superstep (Malewicz et al., SIGMOD 2010) whose
+    messages and aggregate are DataFrame columns. Returns the last state;
+    it is lineage-cut and belongs to the caller (`release` it when done).
+
+    Tier: the state is broadcast while `state_bytes` (its row count ×
+    the operator's bytes per row) fits STATE_BROADCAST_BYTES and the
+    session broadcasts at all; otherwise each round is a shuffled-hash
+    join that hash-builds on the state. `keys=(agg_key, join_key)`:
+    `static` is partitioned ONCE by the round's aggregate key on the
+    broadcast tier (the join output then already carries the aggregate's
+    distribution, so a round has zero exchanges) or by the join key on
+    the fallback (the O(static) side streams into the join without a
+    re-shuffle or a sort; only the state and the map-side-combined
+    aggregate move). It is persisted, not checkpointed: a PySpark
+    localCheckpoint scans back with UnknownPartitioning and every round
+    would re-shuffle it, while the cached InMemoryTableScan keeps its
+    hashpartitioning visible to the planner. `keys=None`: `static` is
+    already partitioned by the aggregate key and persisted by the
+    caller, who keeps it, and the rounds are broadcast-only.
+
+    Mechanics: AQE is off around broadcast rounds (`_aqe_off_for_rounds`).
+    The state's lineage is cut every CUT_EVERY rounds and at the last
+    one, and Python GC (which releases Py4J references to superseded
+    JVM state) runs only at those cuts. `observe`: an aggregate Column
+    computed over each new state as it materializes (a
+    `DataFrame.observe` metric, so no extra job); the state is then cut
+    every round and `stop(k, value)` after round k ends the loop when it
+    returns True.
+
+    Ownership: `state` is taken over. Every state this loop cut, and the
+    static table it persisted, is released before it returns, except
+    the returned state.
+    """
+    spark = static.sparkSession
+    broadcast = keys is None or (
+        state_bytes <= STATE_BROADCAST_BYTES and session_broadcast_bytes(spark) > 0
+    )
+    if keys is not None:
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        static = static.repartition(
+            n_shuffle, keys[0] if broadcast else keys[1]
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+    held = state  # the newest materialized state, released when superseded
+    try:
+        if keys is not None:
+            static.count()  # materialize once
+        with _aqe_off_for_rounds(spark, broadcast):
+            for k in range(1, rounds + 1):
+                build = F.broadcast(state) if broadcast else state.hint("shuffle_hash")
+                state = step(static, build)
+                if observe is not None:
+                    obs = Observation()
+                    state = state.observe(obs, observe)
+                elif k % CUT_EVERY and k != rounds:
+                    continue
+                state = cut_lineage(state)
+                release(held)
+                held = state
+                gc.collect()
+                if observe is not None and stop is not None:
+                    if stop(k, next(iter(obs.get.values()))):
+                        break
+    except BaseException:
+        release(held)
+        raise
+    finally:
+        if keys is not None:
+            release(static)
+    return state
 
 
 # --------------------------------------------------------------------------
@@ -201,9 +329,9 @@ def resumable_rounds(
                                       by the scan-scramble boards)
     snapshot_every                    snapshot cadence; rounds between
                                       snapshots are recomputed on resume
-                                      (cost/durability trade — same knob
-                                      shape as checkpoint_every on the
-                                      iterative operators)
+                                      (cost/durability trade; the rounds
+                                      between snapshots are lineage-cut
+                                      instead)
     on_round(k)                       optional progress hook (the kill
                                       probe keys its SIGKILL off it)
 

@@ -38,31 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..lineage import cut_lineage, release
-
-
-import contextlib
-
-
-@contextlib.contextmanager
-def _aqe_off_for_rounds(spark, active: bool):
-    """Turn AQE off around a zero-shuffle broadcast-round loop (r13,
-    guide §1.2): with the static side pre-partitioned and the per-round
-    state broadcast, a round's plan has NO exchange for AQE to adapt —
-    its stage-by-stage materialization and replanning is pure per-job
-    latency (~0.1 s/round measured on the pagerank/hits/sssp loops).
-    `active=False` (the shuffled fallback) is a no-op: those rounds DO
-    shuffle the per-round state and AQE's coalescing is load-bearing
-    there. Restores the caller's setting on exit."""
-    if not active:
-        yield
-        return
-    before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", before)
+from ..lineage import cut_lineage, relax_rounds, release, session_broadcast_bytes
 
 
 # ---------------------------------------------------------------- density
@@ -177,14 +153,6 @@ class HopPlotRow:
     d: int
     pairs: int
     percent: float
-
-
-def _broadcast_budget_bytes(spark) -> int:
-    """The session's broadcast budget (`spark.sql.autoBroadcastJoinThreshold`)
-    in bytes, 0 when the session has broadcasting turned off. The
-    bit-parallel BFS runs when its int32 CSR fits it."""
-    budget = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    return max(int(budget), 0)
 
 
 def _csr_from_arrow(table) -> tuple:
@@ -338,7 +306,6 @@ def _bitbfs_pairs_by_distance(
 def connected_pairs_by_distance(
     edges: DataFrame,
     max_d: int = 20,
-    checkpoint_every: int = 3,
 ) -> list[tuple[int, int]]:
     """[(d, cumulative #unordered connected pairs with shortest distance
     <= d)] of the undirected graph on `edges` (src, dst), until no pair
@@ -361,9 +328,9 @@ def connected_pairs_by_distance(
     (`approx_hop_plot`, HyperBall) is the remaining path.
     """
     spark = edges.sparkSession
-    budget = _broadcast_budget_bytes(spark)
+    budget = session_broadcast_bytes(spark)
     if budget == 0:
-        return _pair_bfs_by_distance(edges, max_d, checkpoint_every)
+        return _pair_bfs_by_distance(edges, max_d)
     # persisted for the probe's one pass, so that a graph over the budget
     # does not recompute its edge plan in the pair BFS
     edges = edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
@@ -375,14 +342,12 @@ def connected_pairs_by_distance(
         if csr is not None and csr[0].nbytes + csr[1].nbytes <= budget:
             return _bitbfs_pairs_by_distance(spark, *csr, max_d)
         del csr
-        return _pair_bfs_by_distance(edges, max_d, checkpoint_every)
+        return _pair_bfs_by_distance(edges, max_d)
     finally:
         edges.unpersist()
 
 
-def _pair_bfs_by_distance(
-    edges: DataFrame, max_d: int, checkpoint_every: int
-) -> list[tuple[int, int]]:
+def _pair_bfs_by_distance(edges: DataFrame, max_d: int) -> list[tuple[int, int]]:
     """Frontier BFS over pairs, the tier for adjacencies above the
     broadcast budget; same contract as `connected_pairs_by_distance`.
 
@@ -489,7 +454,7 @@ def _pair_bfs_by_distance(
                 F.col("a").alias("src"), F.col("b").alias("dst")
             ).unionByName(new_pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
 
-            if d % checkpoint_every == 0:
+            if d % 3 == 0:
                 # truncate lineage: each round unions onto the last, and without
                 # this the d-th count recomputes all prior rounds (the
                 # reference's unbounded-lineage flaw, SURVEY.md §4.3)
@@ -598,11 +563,7 @@ def approx_hop_plot(
     return _apply_strict_stop(rows) if strict_stop else rows
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 25,
-    checkpoint_every: int = 3,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """Connected components by hash-min label propagation: every node
     starts labeled with its own id; each round a node takes the min of
     its label and its neighbors' labels; converged when no label changes.
@@ -621,9 +582,9 @@ def connected_components(
     rev = edges.select(F.col("dst").alias("node"), F.col("src").alias("nbr"))
     # static adjacency partitioned once by the per-round join key and
     # cached (persist keeps the hashpartitioning visible — see
-    # pagerank); labels hash-build into it so rounds move only the
-    # O(nodes) label table + the combined min-aggregate, never the
-    # O(edges) adjacency
+    # lineage.relax_rounds); labels hash-build into it so rounds move
+    # only the O(nodes) label table + the combined min-aggregate, never
+    # the O(edges) adjacency
     adj = (
         fwd.unionByName(rev)
         .distinct()
@@ -651,7 +612,7 @@ def connected_components(
             .groupBy("node")
             .agg(F.min("component").alias("component"))
         )
-        if it % checkpoint_every == 0:
+        if it % 3 == 0:
             new_labels = new_labels.transform(cut_lineage)
         else:
             new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
@@ -775,8 +736,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 3,
-    broadcast_budget_bytes: int = 256 << 20,
     seeds: list[int] | None = None,
 ) -> DataFrame:
     """PageRank on a DIRECTED edge list (src, dst), fixed iteration count:
@@ -793,113 +752,72 @@ def pagerank(
     (random walk with restart). Identical round shape and cost; only the
     teleport expression changes.
 
-    Same mechanics as the HyperBall loop (functions/sketches.py),
-    mirrored for the src->dst message direction: the edge table is
+    The rounds run through `lineage.relax_rounds`. The edge table is
     augmented once with ZERO-WEIGHT self-loops so every node receives at
     least one message per round (a round is then a pure join +
-    groupBy-sum, no left join against the previous ranks), and it is
-    pre-partitioned ONCE for whichever join strategy the node count
-    selects:
-
-    - rank table under `broadcast_budget_bytes`: partition e_aug by DST
-      — with the (16-byte-per-node) rank table BROADCAST into the join,
-      the join output already carries the group-by key's partitioning,
-      so a whole round runs with ZERO shuffle.
-    - past the budget (1e9-node graphs), the join must shuffle — so
-      partition e_aug by SRC instead: the per-round rank table comes
-      out of its groupBy hash-partitioned on node with the same
-      partition count, both join sides already satisfy the join's
-      distribution, and the only per-round exchange left is the
-      map-side-combined message aggregate (O(distinct dst) per
-      partition, not O(edges)). Without this the static 100TB edge
-      table would re-shuffle on src EVERY iteration — the round-7 100x
-      rehearsal measured that as the dominant cost of the fallback
-      (15.6 GB/10 rounds); src-partitioning cut the forced-fallback
-      A/B's per-round shuffle by ~2.9x and wall by ~1.5x at 6M edges.
-
-    Round state is localCheckpoint-ed (lineage truncation) with prompt
-    Py4J release.
+    groupBy-sum, no left join against the previous ranks). The rank
+    table (48 bytes/node) is broadcast while it fits the round-state
+    budget, with the edges partitioned by DST, so a whole round runs
+    with ZERO shuffle. Past it (1e9-node graphs) the edges are
+    partitioned by SRC and each round is a shuffled-hash join: the only
+    per-round exchanges are the rank table and the map-side-combined
+    message aggregate, never the O(edges) table. Without that
+    partitioning the static 100TB edge table would re-shuffle on src
+    EVERY iteration — the round-7 100x rehearsal measured that as the
+    dominant cost of the fallback (15.6 GB/10 rounds); src-partitioning
+    cut the forced-fallback A/B's per-round shuffle by ~2.9x and wall
+    by ~1.5x at 6M edges.
     """
-    import gc
-
-    spark = edges.sparkSession
     edges = edges.transform(cut_lineage)
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
         .transform(cut_lineage)
     )
-    n = nodes.count()
-    use_broadcast = n * 48 <= broadcast_budget_bytes
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    e_aug = (
-        edges.join(outdeg, "src")
-        .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
-        .unionByName(
-            nodes.select(
-                F.col("node").alias("src"),
-                F.col("node").alias("dst"),
-                F.lit(0.0).alias("w"),
+    try:
+        n = nodes.count()
+        outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
+        e_aug = (
+            edges.join(outdeg, "src")
+            .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
+            .unionByName(
+                nodes.select(
+                    F.col("node").alias("src"),
+                    F.col("node").alias("dst"),
+                    F.lit(0.0).alias("w"),
+                )
             )
         )
-        .repartition(n_shuffle, "dst" if use_broadcast else "src")
-        # persist, NOT localCheckpoint: a PySpark localCheckpoint scans
-        # back as ExistingRDD with UnknownPartitioning, so every round
-        # would silently re-shuffle the static O(edges) table — the
-        # cached InMemoryTableScan keeps hashpartitioning(key, n) visible
-        # to EnsureRequirements and the per-round plan starts from the
-        # already-partitioned cache (verified in .explain: no Exchange
-        # above the InMemoryTableScan in either join mode)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e_aug.count()  # materialize once
+        if seeds is None:
+            init_rank = F.lit(1.0 / n)
+            teleport = F.lit((1.0 - damping) / n)
+        else:
+            is_seed = F.col("node").isin(*[int(x) for x in seeds])
+            init_rank = F.when(is_seed, F.lit(1.0 / len(seeds))).otherwise(F.lit(0.0))
+            teleport = F.when(is_seed, F.lit((1.0 - damping) / len(seeds))).otherwise(
+                F.lit(0.0)
+            )
 
-    if seeds is None:
-        init_rank = F.lit(1.0 / n)
-        teleport = F.lit((1.0 - damping) / n)
-    else:
-        is_seed = F.col("node").isin(*[int(x) for x in seeds])
-        init_rank = F.when(is_seed, F.lit(1.0 / len(seeds))).otherwise(F.lit(0.0))
-        teleport = F.when(is_seed, F.lit((1.0 - damping) / len(seeds))).otherwise(
-            F.lit(0.0)
-        )
-    ranks = nodes.select("node", init_rank.alias("rank")).transform(cut_lineage)
-    with _aqe_off_for_rounds(spark, use_broadcast):
-        for it in range(1, iterations + 1):
-            # fallback build side: SHUFFLE_HASH, not sort-merge — the rank
-            # table is the per-round hash build (its shuffle is O(nodes)),
-            # while the src-partitioned edge table streams with neither a
-            # re-shuffle nor the per-round SORT a merge join would force on
-            # the O(edges) side
-            build = (
-                F.broadcast(ranks) if use_broadcast else ranks.hint("shuffle_hash")
-            )
-            nxt = (
-                e_aug.join(build, e_aug["src"] == build["node"], "inner")
+        def step(e_aug: DataFrame, ranks: DataFrame) -> DataFrame:
+            return (
+                e_aug.join(ranks, e_aug["src"] == ranks["node"], "inner")
                 .select(
                     e_aug["dst"].alias("node"),
                     (F.col("rank") * F.col("w")).alias("c"),
                 )
                 .groupBy("node")
                 .agg(F.sum("c").alias("_s"))
-                .select(
-                    "node", (teleport + F.lit(damping) * F.col("_s")).alias("rank")
-                )
+                .select("node", (teleport + F.lit(damping) * F.col("_s")).alias("rank"))
             )
-            if it % checkpoint_every == 0 or it == iterations:
-                nxt = nxt.transform(cut_lineage)
-                # release superseded checkpoint blocks promptly — but only
-                # at checkpoint rounds: a Python full GC costs ~50 ms, and
-                # the intermediate rounds hold no materialized state to
-                # release (r13, guide §1.2 — fixed per-round driver costs)
-                gc.collect()
-            ranks = nxt
-    # the final ranks are checkpointed (it == iterations), so they no
-    # longer depend on the cached edge table — release it eagerly
-    e_aug.unpersist()
-    return ranks
+
+        ranks = nodes.select("node", init_rank.alias("rank")).transform(cut_lineage)
+        return relax_rounds(
+            e_aug, ranks, step, iterations, state_bytes=n * 48, keys=("dst", "src")
+        )
+    finally:
+        release(edges)
+        release(nodes)
 
 
 def k_core(und_edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
@@ -966,11 +884,7 @@ def k_core(und_edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    max_iter: int = 5,
-    checkpoint_every: int = 2,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, max_iter: int = 5) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation: every node
     starts in its own community; each round a node adopts the most
     frequent label among its neighbors and itself (self-vote damps the
@@ -995,10 +909,10 @@ def label_propagation(
     adj = fwd.unionByName(rev).filter(F.col("node") != F.col("nbr")).distinct()
     # partition the static adjacency by the per-round JOIN key and cache
     # it: with the hashpartitioning visible (persist, not checkpoint —
-    # see pagerank) and the label table as a SHUFFLE_HASH build side,
-    # each round moves only the O(nodes) labels and the map-side-
-    # combined vote aggregate — never the O(edges) adjacency, and never
-    # the per-round sort a merge join would force on it
+    # see lineage.relax_rounds) and the label table as a SHUFFLE_HASH
+    # build side, each round moves only the O(nodes) labels and the
+    # map-side-combined vote aggregate — never the O(edges) adjacency,
+    # and never the per-round sort a merge join would force on it
     adj = adj.repartition(n_shuffle, "nbr").persist(StorageLevel.MEMORY_AND_DISK)
     adj.count()  # materialize once
 
@@ -1026,7 +940,7 @@ def label_propagation(
             )
             .select("node", (-F.col("top.neg")).alias("community"))
         )
-        if it % checkpoint_every == 0:
+        if it % 2 == 0:
             new_labels = new_labels.transform(cut_lineage)
         else:
             new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1314,12 +1228,7 @@ def strongly_connected_components(
     return cyclic.unionByName(singletons)
 
 
-def hits(
-    edges: DataFrame,
-    iterations: int = 10,
-    checkpoint_every: int = 3,
-    broadcast_budget_bytes: int = 256 << 20,
-) -> DataFrame:
+def hits(edges: DataFrame, iterations: int = 10) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999, "Authoritative sources in
     a hyperlinked environment") on a DIRECTED edge list (src, dst) —
     the citation-network centrality pair: a good authority is cited by
@@ -1334,88 +1243,63 @@ def hits(
     makes every round ONE message join instead of two: each directed
     edge u->v is pre-expanded into a forward message (to=v carries h(u))
     and a reverse message (to=u carries a(v)), unioned with zero-weight
-    self-messages so every node survives the groupBy. The message table
-    is built once, partitioned for the selected join mode, and CACHED
-    (persist — see `pagerank` for why a checkpoint would lose the
-    partitioning); with the per-node state broadcast (24 bytes/node
-    within `broadcast_budget_bytes`), a round is join + groupBy-sum with
-    ZERO shuffle, and past the budget the shuffled-hash fallback moves
-    only the state + the combined aggregate, never the messages — the
-    same mechanics as `pagerank` above. Scores are left UN-normalized (normalization is a
-    scalar that cancels in ranking); callers who need comparable
-    magnitudes divide by the max, which keeps the recurrence exactly
-    expressible in SQL (the DuckDB oracle replays it with a recursive
-    CTE — per-round normalization would need an aggregate over the
-    working table, which recursive SQL cannot express).
+    self-messages so every node survives the groupBy. The rounds run
+    through `lineage.relax_rounds`, the same mechanics as `pagerank`:
+    with the per-node state broadcast (24 bytes/node within the
+    round-state budget) a round is join + groupBy-sum with ZERO shuffle,
+    and past the budget the shuffled-hash fallback moves only the state
+    + the combined aggregate, never the messages. Scores are left
+    UN-normalized (normalization is a scalar that cancels in ranking);
+    callers who need comparable magnitudes divide by the max, which
+    keeps the recurrence exactly expressible in SQL (the DuckDB oracle
+    replays it with a recursive CTE — per-round normalization would need
+    an aggregate over the working table, which recursive SQL cannot
+    express).
 
     Growth bound: 10 unnormalized rounds reach ~(2|E|/|V|)^10-scale
     values — far inside double range for any graph that fits a cluster.
     Output: (node, hub, auth).
     """
-    import gc
-
-    spark = edges.sparkSession
     edges = edges.transform(cut_lineage)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .transform(cut_lineage)
-    )
-    n = nodes.count()
-    use_broadcast = n * 24 <= broadcast_budget_bytes
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    # kind 1: forward (h -> authority of dst); kind 2: reverse (a -> hub
-    # of src); kind 0: zero self-message (keeps isolated-direction nodes)
-    msgs = (
-        edges.select(F.col("src").alias("frm"), F.col("dst").alias("to"), F.lit(1).alias("kind"))
-        .unionByName(
-            edges.select(F.col("dst").alias("frm"), F.col("src").alias("to"), F.lit(2).alias("kind"))
+    try:
+        # the initial state doubles as the node list
+        state = (
+            edges.select(F.col("src").alias("node"))
+            .unionByName(edges.select(F.col("dst").alias("node")))
+            .distinct()
+            .select("node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth"))
+            .transform(cut_lineage)
         )
-        .unionByName(
-            nodes.select(F.col("node").alias("frm"), F.col("node").alias("to"), F.lit(0).alias("kind"))
-        )
-        # partition for the selected join mode and PERSIST (a PySpark
-        # localCheckpoint would scan back with UnknownPartitioning and
-        # silently re-shuffle the static message table every round —
-        # see pagerank above): broadcast mode partitions by the agg key
-        # `to` (zero-shuffle rounds), fallback by the join key `frm`
-        # (the O(edges) side streams into a shuffled-hash join without
-        # re-shuffle or sort; only the per-round state + the map-side-
-        # combined aggregate move)
-        .repartition(n_shuffle, "to" if use_broadcast else "frm")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    msgs.count()  # materialize once
-
-    state = nodes.select("node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth"))
-    with _aqe_off_for_rounds(spark, use_broadcast):
-        for it in range(1, iterations + 1):
-            build = (
-                F.broadcast(state) if use_broadcast else state.hint("shuffle_hash")
+        n = state.count()
+        # kind 1: forward (h -> authority of dst); kind 2: reverse (a -> hub
+        # of src); kind 0: zero self-message (keeps isolated-direction nodes)
+        msgs = (
+            edges.select(F.col("src").alias("frm"), F.col("dst").alias("to"), F.lit(1).alias("kind"))
+            .unionByName(
+                edges.select(F.col("dst").alias("frm"), F.col("src").alias("to"), F.lit(2).alias("kind"))
             )
-            nxt = (
-                msgs.join(build, msgs["frm"] == build["node"], "inner")
+            .unionByName(
+                state.select(F.col("node").alias("frm"), F.col("node").alias("to"), F.lit(0).alias("kind"))
+            )
+        )
+
+        def step(msgs: DataFrame, state: DataFrame) -> DataFrame:
+            return (
+                msgs.join(state, msgs["frm"] == state["node"], "inner")
                 .select(
                     F.col("to").alias("node"),
-                    F.when(F.col("kind") == 2, F.col("auth"))
-                    .otherwise(0.0)
-                    .alias("h_c"),
-                    F.when(F.col("kind") == 1, F.col("hub"))
-                    .otherwise(0.0)
-                    .alias("a_c"),
+                    F.when(F.col("kind") == 2, F.col("auth")).otherwise(0.0).alias("h_c"),
+                    F.when(F.col("kind") == 1, F.col("hub")).otherwise(0.0).alias("a_c"),
                 )
                 .groupBy("node")
                 .agg(F.sum("h_c").alias("hub"), F.sum("a_c").alias("auth"))
             )
-            if it % checkpoint_every == 0 or it == iterations:
-                nxt = nxt.transform(cut_lineage)
-                # GC only at checkpoint rounds (see pagerank)
-                gc.collect()
-            state = nxt
-    # final state is checkpointed — the cached message table can go
-    msgs.unpersist()
-    return state
+
+        return relax_rounds(
+            msgs, state, step, iterations, state_bytes=n * 24, keys=("to", "frm")
+        )
+    finally:
+        release(edges)
 
 
 def link_prediction(
@@ -1500,84 +1384,53 @@ def link_prediction(
     ).limit(top_k)
 
 
-def sssp_bounded(
-    edges_w: DataFrame,
-    source: int,
-    rounds: int = 15,
-    checkpoint_every: int = 3,
-    broadcast_budget_bytes: int = 256 << 20,
-) -> DataFrame:
+def sssp_bounded(edges_w: DataFrame, source: int, rounds: int = 15) -> DataFrame:
     """Weighted single-source shortest distances within `rounds` hops
     (bounded Bellman-Ford): d_{k+1}(v) = min(d_k(v), min_{u->v} d_k(u) +
     w(u,v)), run for a FIXED round count so the result ("shortest
     distance using <= k edges") is exactly replayable in recursive SQL.
 
     `edges_w`: (src, dst, w), non-negative weights. Same zero-shuffle
-    round mechanics as `pagerank`/`hits`: the edge table is augmented
-    once with zero-weight self-loops (carrying each node's own distance
-    forward, so a round is ONE join + min-aggregate with no union
-    against the previous state), partitioned once for the selected join
-    mode and cached (see `pagerank`), and the
+    round mechanics as `pagerank`/`hits` (`lineage.relax_rounds`): the
+    edge table is augmented once with zero-weight self-loops (carrying
+    each node's own distance forward, so a round is ONE join +
+    min-aggregate with no union against the previous state), and the
     distance table — which only ever holds REACHED nodes, a frontier
-    that grows like the ball around the source — is broadcast while it
-    fits `broadcast_budget_bytes`. Distances are sums of the input
-    weights selected by min: no divisions, so integer-valued weights
-    stay exact in double and the DuckDB oracle matches bit-for-bit.
+    that grows like the ball around the source — is broadcast while its
+    16 bytes/node for every node fit the round-state budget. Distances
+    are sums of the input weights selected by min: no divisions, so
+    integer-valued weights stay exact in double and the DuckDB oracle
+    matches bit-for-bit.
 
     Output: (node, dist) for nodes within `rounds` hops of `source`.
     """
-    import gc
-
     spark = edges_w.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     nodes = (
         edges_w.select(F.col("src").alias("node"))
         .unionByName(edges_w.select(F.col("dst").alias("node")))
         .distinct()
     )
     n = nodes.count()
-    use_broadcast = n * 16 <= broadcast_budget_bytes
-    e_aug = (
-        edges_w.select("src", "dst", F.col("w").cast("double").alias("w"))
-        .unionByName(
-            nodes.select(
-                F.col("node").alias("src"),
-                F.col("node").alias("dst"),
-                F.lit(0.0).alias("w"),
-            )
+    e_aug = edges_w.select("src", "dst", F.col("w").cast("double").alias("w")).unionByName(
+        nodes.select(
+            F.col("node").alias("src"),
+            F.col("node").alias("dst"),
+            F.lit(0.0).alias("w"),
         )
-        # same persist-not-checkpoint / mode-keyed partitioning as
-        # pagerank: agg key (dst) for zero-shuffle broadcast rounds,
-        # join key (src) + shuffled-hash build for the fallback
-        .repartition(n_shuffle, "dst" if use_broadcast else "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    e_aug.count()  # materialize once
+    dist = spark.createDataFrame([(int(source), 0.0)], "node long, dist double")
 
-    dist = e_aug.sparkSession.createDataFrame(
-        [(int(source), 0.0)], "node long, dist double"
+    def step(e_aug: DataFrame, dist: DataFrame) -> DataFrame:
+        return (
+            e_aug.join(dist, e_aug["src"] == dist["node"], "inner")
+            .select(e_aug["dst"].alias("node"), (F.col("dist") + F.col("w")).alias("d"))
+            .groupBy("node")
+            .agg(F.min("d").alias("dist"))
+        )
+
+    return relax_rounds(
+        e_aug, dist, step, rounds, state_bytes=n * 16, keys=("dst", "src")
     )
-    with _aqe_off_for_rounds(spark, use_broadcast):
-        for it in range(1, rounds + 1):
-            build = (
-                F.broadcast(dist) if use_broadcast else dist.hint("shuffle_hash")
-            )
-            nxt = (
-                e_aug.join(build, e_aug["src"] == build["node"], "inner")
-                .select(
-                    e_aug["dst"].alias("node"),
-                    (F.col("dist") + F.col("w")).alias("d"),
-                )
-                .groupBy("node")
-                .agg(F.min("d").alias("dist"))
-            )
-            if it % checkpoint_every == 0 or it == rounds:
-                nxt = nxt.transform(cut_lineage)
-                # GC only at checkpoint rounds (see pagerank)
-                gc.collect()
-            dist = nxt
-    e_aug.unpersist()
-    return dist
 
 
 def prepare_bfs_edges(und_edges: DataFrame) -> DataFrame:
@@ -1606,10 +1459,10 @@ def prepare_bfs_edges(und_edges: DataFrame) -> DataFrame:
                 F.lit(0).alias("w"),
             )
         )
-        # persist, not localCheckpoint (UnknownPartitioning — see
-        # pagerank): with the dst partitioning visible, the broadcast
-        # join preserves it and the (src_id, node=dst) aggregate needs
-        # no exchange — rounds are zero-shuffle
+        # partitioned by the aggregate key and persisted, as
+        # `lineage.relax_rounds` does for its own static tables: with the
+        # dst partitioning visible, the broadcast join preserves it and
+        # the (src_id, node=dst) aggregate needs no exchange
         .repartition(n_shuffle, "dst")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -1621,7 +1474,6 @@ def multi_source_bfs(
     und_edges: DataFrame,
     sources: list[int],
     rounds: int = 6,
-    checkpoint_every: int = 3,
     prepared: DataFrame | None = None,
 ) -> DataFrame:
     """Exact shortest hop-distances from a small set of landmark sources
@@ -1633,43 +1485,39 @@ def multi_source_bfs(
     `und_edges`: (src, dst) ALREADY undirected (both orientations
     present). State is (src_id, node, dist) — |sources| x reached-ball
     rows, a small multiple of the node count for small landmark sets, so
-    the distance table is broadcast into each relaxation round: a round
-    is ONE broadcast-hash join + min-aggregate, zero shuffle on the edge
-    side. Self-loops carry settled distances forward (same mechanics as
-    `sssp_bounded` with w=1 on real edges, w=0 on loops); lineage is cut
-    with localCheckpoint. Output: (src_id, node, dist INT).
+    the distance table is broadcast into every relaxation round
+    (`lineage.relax_rounds` over the prepared table): a round is ONE
+    broadcast-hash join + min-aggregate, zero shuffle on the edge side.
+    Self-loops carry settled distances forward (same mechanics as
+    `sssp_bounded` with w=1 on real edges, w=0 on loops). Output:
+    (src_id, node, dist INT).
 
     `prepared`: a prepare_bfs_edges() result for the same graph — the
     augmented table is then reused as-is (and NOT unpersisted here).
     """
-    import gc
-
     spark = und_edges.sparkSession
     e_aug = prepared if prepared is not None else prepare_bfs_edges(und_edges)
-
     dist = spark.createDataFrame(
         [(int(s), int(s), 0) for s in sources], "src_id long, node long, dist int"
     )
-    with _aqe_off_for_rounds(spark, True):
-        for it in range(1, rounds + 1):
-            nxt = (
-                e_aug.join(F.broadcast(dist), e_aug["src"] == dist["node"], "inner")
-                .select(
-                    "src_id",
-                    e_aug["dst"].alias("node"),
-                    (F.col("dist") + F.col("w")).cast("int").alias("d"),
-                )
-                .groupBy("src_id", "node")
-                .agg(F.min("d").alias("dist"))
+
+    def step(e_aug: DataFrame, dist: DataFrame) -> DataFrame:
+        return (
+            e_aug.join(dist, e_aug["src"] == dist["node"], "inner")
+            .select(
+                "src_id",
+                e_aug["dst"].alias("node"),
+                (F.col("dist") + F.col("w")).cast("int").alias("d"),
             )
-            if it % checkpoint_every == 0 or it == rounds:
-                nxt = nxt.transform(cut_lineage)
-                # GC only at checkpoint rounds (see pagerank)
-                gc.collect()
-            dist = nxt
-    if prepared is None:
-        e_aug.unpersist()
-    return dist
+            .groupBy("src_id", "node")
+            .agg(F.min("d").alias("dist"))
+        )
+
+    try:
+        return relax_rounds(e_aug, dist, step, rounds)
+    finally:
+        if prepared is None:
+            e_aug.unpersist()
 
 
 def closeness_from_landmarks(bfs_dist: DataFrame) -> DataFrame:

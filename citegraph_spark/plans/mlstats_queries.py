@@ -384,7 +384,7 @@ def logreg_train_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_tax") * 10.0).alias("f3"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    from ..operators.graph import _aqe_off_for_rounds
+    from ..lineage import _aqe_off_for_rounds
 
     d = 4
     w = [0.0] * d

@@ -45,8 +45,9 @@ def test_cli_diameter_exact_vs_approx(spark):
         assert main(["diameter", d, f"{d}/approx", "--approx"]) == 0
         exact = _read_rows(f"{d}/exact/diameter_1994/part*.csv")
         approx = _read_rows(f"{d}/approx/diameter_1994/part*.csv")
-        # the 1992 snapshot has no edge: the exact path skips it
+        # the 1992 snapshot has no edge: both paths skip it
         assert not glob.glob(f"{d}/exact/diameter_1992")
+        assert not glob.glob(f"{d}/approx/diameter_1992")
         assert [r["d"] for r in exact] == [r["d"] for r in approx]
         # same emission rule, monotone estimates, bounded relative error
         pcts = [float(r["percent_of_total"]) for r in approx]

@@ -27,6 +27,11 @@ def test_hyperball_monotone_and_converges(spark):
     assert len(rows) < 15
 
 
+def test_hyperball_empty_graph_has_no_rows(spark):
+    edges = spark.createDataFrame([], "src long, dst long")
+    assert hyperball_hopplot(edges, p=6, max_d=5) == []
+
+
 def test_init_counters_rho_exact(spark):
     """rho must be the exact leading-zero rank of the hash suffix —
     verified against a pure-Python xxhash-free recomputation from the
