@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from . import schemas
+from .sources.local import local_rows
 
 FIXTURE_EDGES: list[tuple[int, int]] = [
     (2, 1), (3, 1), (4, 1), (9, 3), (5, 3), (7, 3), (4, 2), (9, 2),
@@ -24,12 +25,12 @@ FIXTURE_YEARS: dict[int, int] = {
 
 
 def fixture_citations(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(FIXTURE_EDGES, schema=schemas.CITATIONS)
+    return local_rows(spark, FIXTURE_EDGES, schema=schemas.CITATIONS)
 
 
 def fixture_published(spark: SparkSession) -> DataFrame:
     rows = sorted(FIXTURE_YEARS.items())
-    return spark.createDataFrame(rows, schema=schemas.PUBLISHED_DATES)
+    return local_rows(spark, rows, schema=schemas.PUBLISHED_DATES)
 
 
 def edges_values_sql() -> str:

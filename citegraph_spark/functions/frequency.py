@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.local import local_rows
+
 
 def _mg_merge(counters: dict[str, int], batch: dict[str, int], k: int) -> dict[str, int]:
     """Merge an exact (or MG) summary `batch` into `counters`, keeping
@@ -153,6 +155,6 @@ def count_min_estimates(
             for r, b in enumerate(_cms_buckets(key, depth, width))
         )
         rows.append((key, est))
-    return spark.createDataFrame(rows, "tok string, est_cnt long").orderBy(
+    return local_rows(spark, rows, "tok string, est_cnt long").orderBy(
         F.desc("est_cnt"), "tok"
     )

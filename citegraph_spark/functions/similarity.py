@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.tables import round_robin
+
 TOPK_SCHEMA = "vec_id bigint, neighbor_id bigint, cosine double, rank int"
 
 
@@ -51,22 +53,6 @@ class CorpusTooLargeError(ValueError):
     cells), or `pq_topk` (32× compressed ADC shortlist)."""
 
 
-def _fanout(df: DataFrame) -> DataFrame:
-    """Round-robin repartition to the session's shuffle parallelism
-    (r13, guide §2.6 — idle capacity): the embeddings tables arrive as
-    ONE parquet file, so every mapInPandas scorer and HOF probe below
-    otherwise runs its whole corpus pass as a single task on a
-    many-core session (measured: the similarity_pq query spent 6.7 s in
-    three 1-task jobs). Scale-adaptive (session shuffle partitions, not
-    a core-count constant); the shuffled bytes are the narrow
-    (id, vector) projection. Row order within partitions changes, but
-    every consumer ranks/sorts deterministically downstream. Shared
-    rationale and scale argument: sources/tables.py fanout_scan."""
-    from ..sources.tables import fanout_scan
-
-    return fanout_scan(df)
-
-
 def _corpus_matrix(
     emb: DataFrame,
     id_col: str,
@@ -77,13 +63,15 @@ def _corpus_matrix(
     side fits driver/executor memory (64-dim × 1 M rows = 256 MB: fine;
     beyond that, use lsh_ann_topk or IVF partitioning).
 
-    Guarded: estimates the matrix size from (row count × dim) BEFORE
-    collecting and raises `CorpusTooLargeError` above `budget_bytes` —
-    a cheap count+first aggregate, so an over-budget corpus costs two
-    small jobs instead of a driver OOM."""
-    n = emb.count()
-    first = emb.select(vec_col).first()
-    dim = len(first[0]) if first and first[0] is not None else 0
+    Guarded: estimates the matrix size from (row count × widest vector)
+    in one small aggregate job BEFORE collecting, and raises
+    `CorpusTooLargeError` above `budget_bytes`, so an over-budget corpus
+    costs that job instead of a driver OOM. The corpus then arrives in
+    one Arrow collect (`toArrow`), read column-wise; every float32 widens
+    to float64 exactly, so the matrix equals the old Row-by-Row build bit
+    for bit (a null element is NaN in both)."""
+    n, dim = emb.select(F.count(F.lit(1)), F.max(F.size(vec_col))).first()
+    dim = max(dim or 0, 0)
     est = n * dim * 8 + n * 8  # float64 matrix + int64 ids
     if est > budget_bytes:
         raise CorpusTooLargeError(
@@ -92,9 +80,10 @@ def _corpus_matrix(
             "lsh_ann_topk / ivf_topk / pq_topk for corpora beyond broadcast "
             "size"
         )
-    rows = emb.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    m = np.array([r[1] for r in rows], dtype=np.float64)
+    table = emb.select(id_col, vec_col).toArrow()
+    ids = np.asarray(table.column(0).to_numpy(), dtype=np.int64)
+    flat = table.column(1).combine_chunks().flatten()
+    m = flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(len(ids), dim)
     norms = np.linalg.norm(m, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     return ids, m / norms
@@ -146,11 +135,15 @@ def cosine_topk_bruteforce(
                 }
             )
 
-    return (
-        _fanout(emb.select(id_col, vec_col))
-        .mapInPandas(batches, schema=TOPK_SCHEMA)
-        .orderBy("vec_id", "rank")
+    # round-robin on both sides of the kernel: the embeddings table is
+    # one parquet file, so the scan alone would run the whole corpus pass
+    # as a single task (the similarity_pq query spent 6.7 s in three
+    # 1-task jobs); and the sort's range sampler must read shuffle files,
+    # not re-run the kernel (sources/tables.py round_robin)
+    scored = round_robin(emb.select(id_col, vec_col)).mapInPandas(
+        batches, schema=TOPK_SCHEMA
     )
+    return round_robin(scored).orderBy("vec_id", "rank")
 
 
 def embedding_near_pairs(
@@ -190,11 +183,12 @@ def embedding_near_pairs(
                 {"a": vids[rr], "b": c_ids[jj], "cosine": sims[rr, jj]}
             )
 
-    return (
-        emb.select(id_col, vec_col)
-        .mapInPandas(batches, schema="a bigint, b bigint, cosine double")
-        .orderBy("a", "b")
+    pairs = emb.select(id_col, vec_col).mapInPandas(
+        batches, schema="a bigint, b bigint, cosine double"
     )
+    # a shuffle boundary under the sort, so its sampler does not re-run
+    # the kernel (sources/tables.py round_robin)
+    return round_robin(pairs).orderBy("a", "b")
 
 
 def ivf_cell_count(n: int, target_cell_size: int = 32, floor: int = 16) -> int:
@@ -580,7 +574,7 @@ def pq_topk(
                 {"a": np.concatenate(out_a), "b": np.concatenate(out_b)}
             )
 
-    cand = _fanout(emb.select(id_col, vec_col)).mapInPandas(
+    cand = round_robin(emb.select(id_col, vec_col)).mapInPandas(
         batches, schema="a bigint, b bigint"
     )
     va = emb.select(F.col(id_col).alias("a"), F.col(vec_col).alias("_va"))

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..lineage import cut_lineage, relax_rounds, release, session_broadcast_bytes
+from ..sources.local import local_rows
 
 
 # ---------------------------------------------------------------- density
@@ -533,8 +534,8 @@ def hop_plot_df(spark, rows: list[HopPlotRow]) -> DataFrame:
     percent_of_total) — S7 local-collection source."""
     from .. import schemas
 
-    return spark.createDataFrame(
-        [(r.d, r.pairs, r.percent) for r in rows], schema=schemas.HOP_PLOT
+    return local_rows(
+        spark, [(r.d, r.pairs, r.percent) for r in rows], schema=schemas.HOP_PLOT
     )
 
 
@@ -726,7 +727,8 @@ def triangle_stats(und_edges: DataFrame) -> DataFrame:
     )
     spark = und_edges.sparkSession
     coeff = round(3.0 * n_tri / n_wedges, 6) if n_wedges else 0.0
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(int(n_edges), int(n_wedges), int(n_tri), coeff)],
         schema="n_edges bigint, n_wedges bigint, n_triangles bigint, clustering_coeff double",
     )
@@ -1077,19 +1079,13 @@ def strongly_connected_components(
     )
 
     def _local_residue(residue: DataFrame) -> DataFrame:
-        import pandas as pd
-
         pairs = [(r["src"], r["dst"]) for r in residue.collect()]
         rows = [
             (int(n), int(max(comp)))
             for comp in _tarjan_scc(pairs)
             for n in comp
         ]
-        # Arrow path: createDataFrame on a plain tuple list falls back to
-        # row-at-a-time pickling (measured 8.9 s for 19k rows); the same
-        # rows through a pandas frame upload as one Arrow batch (<0.5 s).
-        pdf = pd.DataFrame(rows, columns=["node", "scc"], dtype="int64")
-        return spark.createDataFrame(pdf, "node long, scc long")
+        return local_rows(spark, rows, "node long, scc long")
 
     # ---- phase 1: trim acyclic fringe (cannot be on any cycle)
     n_edges = live.count()
@@ -1418,7 +1414,7 @@ def sssp_bounded(edges_w: DataFrame, source: int, rounds: int = 15) -> DataFrame
             F.lit(0.0).alias("w"),
         )
     )
-    dist = spark.createDataFrame([(int(source), 0.0)], "node long, dist double")
+    dist = local_rows(spark, [(int(source), 0.0)], "node long, dist double")
 
     def step(e_aug: DataFrame, dist: DataFrame) -> DataFrame:
         return (
@@ -1497,8 +1493,8 @@ def multi_source_bfs(
     """
     spark = und_edges.sparkSession
     e_aug = prepared if prepared is not None else prepare_bfs_edges(und_edges)
-    dist = spark.createDataFrame(
-        [(int(s), int(s), 0) for s in sources], "src_id long, node long, dist int"
+    dist = local_rows(
+        spark, [(int(s), int(s), 0) for s in sources], "src_id long, node long, dist int"
     )
 
     def step(e_aug: DataFrame, dist: DataFrame) -> DataFrame:
@@ -1666,8 +1662,8 @@ def harmonic_centrality(
                         dq.append(v)
                         h += 1.0 / dist[v]
             rows.append((s, round(h, 6)))
-        return spark.createDataFrame(
-            sorted(rows), "id int, harmonic double"
+        return local_rows(
+            spark, sorted(rows), "id int, harmonic double"
         ).orderBy("id")
 
     par = spark.sparkContext.defaultParallelism
@@ -1773,7 +1769,7 @@ def betweenness_sampled(
                 if v != s:
                     bc[v] += val
         rows = sorted((int(v), round(val, 6)) for v, val in bc.items() if val > 0)
-        return spark.createDataFrame(rows, "node int, bc double").orderBy("node")
+        return local_rows(spark, rows, "node int, bc double").orderBy("node")
 
     par = spark.sparkContext.defaultParallelism
     edges = bidir.filter(F.col("s") != F.col("d")).repartition(
@@ -1848,7 +1844,7 @@ def betweenness_sampled(
 
     edges.unpersist()
     if not bc_parts:
-        return spark.createDataFrame([], "node int, bc double")
+        return local_rows(spark, [], "node int, bc double")
     allc = bc_parts[0]
     for p in bc_parts[1:]:
         allc = allc.unionByName(p)
@@ -1956,8 +1952,8 @@ def maximal_independent_set(
                 raise ConvergenceError("maximal_independent_set", max_rounds)
             n_active = 0
             if out:
-                tail_df = edges.sparkSession.createDataFrame(
-                    [(v,) for v in sorted(out)], node_schema
+                tail_df = local_rows(
+                    edges.sparkSession, [(v,) for v in sorted(out)], node_schema
                 )
                 mis = tail_df if mis is None else mis.unionByName(tail_df)
             break
@@ -2010,7 +2006,7 @@ def maximal_independent_set(
         # which downstream consumers cannot distinguish — fail loudly.
         raise ConvergenceError("maximal_independent_set", max_rounds)
     if mis is None:
-        return edges.sparkSession.createDataFrame([], "node long")
+        return local_rows(edges.sparkSession, [], "node long")
     return mis
 
 
@@ -2100,8 +2096,8 @@ def maximal_matching(
                 raise ConvergenceError("maximal_matching", max_rounds)
             n_edges = 0
             if out:
-                tail_df = edges.sparkSession.createDataFrame(
-                    sorted(out), pair_schema
+                tail_df = local_rows(
+                    edges.sparkSession, sorted(out), pair_schema
                 )
                 matched = (
                     tail_df if matched is None else matched.unionByName(tail_df)
@@ -2159,7 +2155,7 @@ def maximal_matching(
         # refuse rather than return it.
         raise ConvergenceError("maximal_matching", max_rounds)
     if matched is None:
-        return edges.sparkSession.createDataFrame([], "a long, b long")
+        return local_rows(edges.sparkSession, [], "a long, b long")
     return matched
 
 
@@ -2260,7 +2256,7 @@ def connected_components_star(
                     T.StructField("component", id_t),
                 ]
             )
-            return edges.sparkSession.createDataFrame(sorted(out_rows), sch)
+            return local_rows(edges.sparkSession, sorted(out_rows), sch)
         # large-star
         adj = _adj(cur)
         m = _minmap(adj)
@@ -2489,8 +2485,8 @@ def k_truss(
                     break
                 es -= drop
             converged = True
-            return edges.sparkSession.createDataFrame(
-                sorted(es), cur.schema
+            return local_rows(
+                edges.sparkSession, sorted(es), cur.schema
             )
         # pin the oriented table's partitioning only once the surviving
         # edge set is past plausible broadcast size (same idea as

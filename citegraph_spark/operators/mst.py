@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..lineage import cut_lineage
+from ..sources.local import local_rows
 
 
 def minimum_spanning_forest(
@@ -143,7 +144,7 @@ def minimum_spanning_forest(
                     uf[ra] = rb
                     tail_rows.append((r[2], r[3], r[4]))
             if tail_rows:
-                tail_df = spark.createDataFrame(tail_rows, e.schema)
+                tail_df = local_rows(spark, tail_rows, e.schema)
                 forest = (
                     tail_df if forest is None else forest.unionByName(tail_df)
                 )
@@ -280,8 +281,8 @@ def minimum_spanning_forest(
             raise ConvergenceError("minimum_spanning_forest", max_rounds)
     e.unpersist()
     if forest is None:
-        return edges.sparkSession.createDataFrame(
-            [], "a long, b long, weight double"
+        return local_rows(
+            edges.sparkSession, [], "a long, b long, weight double"
         )
     return forest
 

@@ -33,7 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
+from ..sources.local import local_rows
+from ..sources.tables import load_table, round_robin
 from .entry_queries import register
 
 # --------------------------------------------------------------------------
@@ -318,13 +319,15 @@ def udtf_chunk_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.udtf.register("chunker", Chunker)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
     docs.createOrReplaceTempView("udtf_docs")
-    return spark.sql(
+    chunks = spark.sql(
         """
         SELECT d.doc_id, c.chunk_idx, c.chunk_len, c.first_word
         FROM udtf_docs d, LATERAL chunker(d.text, 10) c
-        ORDER BY d.doc_id, c.chunk_idx
         """
     )
+    # a shuffle boundary under the sort, so its range sampler reads the
+    # UDTF's output instead of re-running it (round_robin)
+    return round_robin(chunks).orderBy("doc_id", "chunk_idx")
 
 
 # --------------------------------------------------------------------------
@@ -470,8 +473,8 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
     )
     merges = bpe_train(vocab, n_merges=8)
-    return spark.createDataFrame(
-        merges, "step int, left string, right string, cnt bigint"
+    return local_rows(
+        spark, merges, "step int, left string, right string, cnt bigint"
     )
 
 

@@ -22,6 +22,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.local import local_rows
 from ..sources.tables import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -216,8 +217,8 @@ def graph_hopplot_d2(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = bidirectional(_citations(spark, sf_dir))
     rows = hop_plot(edges, max_d=2, strict_stop=False)
     total = rows[-1].pairs if rows else 1
-    df = spark.createDataFrame(
-        [(r.d, r.pairs) for r in rows], schema="d int, `g(d)` long"
+    df = local_rows(
+        spark, [(r.d, r.pairs) for r in rows], schema="d int, `g(d)` long"
     )
     return df.select(
         "d",
@@ -380,7 +381,8 @@ def graph_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = bidirectional(_citations(spark, sf_dir), dedup=False)
     rows = hyperball_hopplot(edges, p=6, max_d=2)
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(d, float(round(g, 2))) for d, g in rows],
         schema="d int, est_pairs double",
     )
@@ -404,7 +406,7 @@ def graph_effective_diameter_approx(spark: SparkSession, sf_dir: str) -> DataFra
     rows = [HopPlotRow(d, int(g), g / total) for d, g in counts]
     d_star = effective_diameter(rows)
     data = [(float(round(d_star, 4)),)] if d_star is not None else []
-    return spark.createDataFrame(data, schema="effective_diameter double")
+    return local_rows(spark, data, schema="effective_diameter double")
 
 
 # --------------------------------------------------------------------------
@@ -1040,7 +1042,8 @@ def hyperball_accuracy_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ok = {
         d: abs(est.get(d, 0.0) - exact[d]) <= 0.10 * exact[d] for d in (1, 2)
     }
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(int(exact[1]), int(exact[2]), bool(ok[1]), bool(ok[2]))],
         "exact_d1 bigint, exact_d2 bigint, d1_within_10pct boolean, "
         "d2_within_10pct boolean",

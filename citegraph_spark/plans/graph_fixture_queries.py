@@ -15,6 +15,7 @@ from ..fixtures import (
     fixture_published,
     years_values_sql,
 )
+from ..sources.local import local_rows
 from .entry_queries import register
 
 _FIXTURE_CTES = f"""
@@ -83,8 +84,8 @@ def fixture_hopplot(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = snapshot_edges(fixture_citations(spark), fixture_published(spark), 1998)
     rows = hop_plot(edges, strict_stop=False)
     total = rows[-1].pairs if rows else 1
-    df = spark.createDataFrame(
-        [(r.d, r.pairs) for r in rows], schema="d int, `g(d)` long"
+    df = local_rows(
+        spark, [(r.d, r.pairs) for r in rows], schema="d int, `g(d)` long"
     )
     return df.select(
         "d",
@@ -136,7 +137,7 @@ def fixture_effective_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = hop_plot(edges, strict_stop=False)
     d_star = effective_diameter(rows)
     data = [(round(d_star, 6),)] if d_star is not None else []
-    return spark.createDataFrame(data, schema="effective_diameter double")
+    return local_rows(spark, data, schema="effective_diameter double")
 
 
 _RAW_DATE_LINES = [
@@ -188,5 +189,5 @@ def loader_normalize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     mutations directly (mutation-audit mutants M01-M03)."""
     from ..sources.citations import published_dates_from_lines
 
-    lines = spark.createDataFrame([(l,) for l in _RAW_DATE_LINES], "value string")
+    lines = local_rows(spark, [(l,) for l in _RAW_DATE_LINES], "value string")
     return published_dates_from_lines(lines).orderBy("id")

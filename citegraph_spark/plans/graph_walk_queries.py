@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fixtures import edges_values_sql, fixture_citations
+from ..sources.local import local_rows
 from ..sources.tables import load_table
 from .entry_queries import _CIT_SQL, _citations, register
 
@@ -391,7 +392,8 @@ def scc_partition_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = [(r["src"], r["dst"]) for r in edges.collect()]
     nodes = {n for p in pairs for n in p}
     ref_partition = set(_tarjan_scc(pairs))
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(len(nodes), dist_partition == ref_partition)],
         "n_nodes bigint, partitions_match_tarjan boolean",
     )
@@ -542,7 +544,8 @@ def graph_mst_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
     )
     raw.unpersist()
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(n_nodes, got == ref)],
         "n_nodes long, forest_matches_kruskal boolean",
     )
@@ -663,7 +666,8 @@ def graph_mis_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     raw.unpersist()
     mis_df.unpersist()
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [
             (
                 cert["n_nodes"],
@@ -780,7 +784,8 @@ def graph_matching_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     mv.unpersist()
     raw.unpersist()
     m_df.unpersist()
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(nodes, got == ref, bool(valid), uncovered == 0)],
         "n_nodes long, matches_replay boolean, is_valid_matching boolean, "
         "is_maximal boolean",
@@ -863,7 +868,8 @@ def graph_cc_star_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         for v in ms:
             ref[v] = m
     raw.unpersist()
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(len(ref), got == ref)],
         "n_nodes long, partitions_match_union_find boolean",
     )
@@ -962,7 +968,8 @@ def graph_ktruss_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         cur = nxt
     proj.unpersist()
     truss.unpersist()
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(n_edges, got == cur, bool(min_ok))],
         "n_input_edges long, truss_matches_replay boolean, "
         "min_support_ok boolean",
@@ -1050,7 +1057,8 @@ def graph_diameter_double_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     aug.unpersist()
     und.unpersist()
     d2.unpersist()
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         rows,
         "start_node int, far_node int, diameter_lower_bound int, "
         "reached_from_far bigint",

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.local import local_rows
 from ..sources.tables import load_table
 from .entry_queries import _citations, register
 
@@ -419,7 +420,8 @@ def logreg_train_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 first = last
             w = [w[j] - lr * grad[j] for j in range(d)]
     feats.unpersist()
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(
             n_rows,
             n_iters,
@@ -487,8 +489,8 @@ def coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     sel = kcenter_greedy(emb, _KCENTER_K)
     return (
-        spark.createDataFrame(
-            sel, "center_rank int, vec_id long, radius double"
+        local_rows(
+            spark, sel, "center_rank int, vec_id long, radius double"
         )
         .select(
             "center_rank", "vec_id", F.round("radius", 6).alias("radius")
@@ -525,7 +527,8 @@ def pca_power_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     n, lams, _vec, resid = pca_power_top1(emb, n_iters=12)
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(n, 12, bool(lams[-1] > lams[0]), bool(resid < 0.1))],
         "n_rows long, n_iters int, rayleigh_increased boolean, "
         "residual_below_tol boolean",

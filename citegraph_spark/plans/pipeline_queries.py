@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import clustering, text
+from ..sources.local import local_rows
 from ..sources.tables import load_table
 from .entry_queries import register
 from .money import disc_price, money, money_sum_pair
@@ -421,7 +422,8 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("ss") - F.col("s") * F.col("s") / n).alias("total_ss"))
         .first()
     )
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [
             (
                 n,
@@ -1554,7 +1556,8 @@ def kmeans_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     i1, n1, _ = inertia(1)
     i8, n8, c8 = inertia(8)
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(n_points, n1 == n_points and n8 == n_points, c8 <= 10, i8 < i1)],
         "n_points bigint, all_assigned boolean, cells_within_k boolean, "
         "inertia_decreased boolean",

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from datetime import date
 
+from ..sources.local import local_rows
 from ..sources.tables import load_table
 from .date_filters import date_window as _date_window
 from .entry_queries import register
@@ -1212,7 +1213,7 @@ def csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         path = f"{out}/nation_sorted"
         save_sorted_csv_single(n, path, "n_name")
         back = spark.read.option("header", "true").schema(n.schema).csv(path)
-        return spark.createDataFrame(back.collect(), back.schema)
+        return local_rows(spark, back.collect(), back.schema)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 

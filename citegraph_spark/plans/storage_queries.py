@@ -26,6 +26,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.local import local_rows
 from ..sources.tables import load_table
 from .entry_queries import register
 from .money import money, money_sum_pair
@@ -33,7 +34,7 @@ from .money import money, money_sum_pair
 
 def _materialize(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Pin rows driver-side so the backing temp files can be deleted."""
-    return spark.createDataFrame(df.collect(), df.schema)
+    return local_rows(spark, df.collect(), df.schema)
 
 
 @register(

@@ -11,7 +11,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import dedup, frequency, multimodal, similarity, text
-from ..sources.tables import load_table
+from ..sources.local import local_rows
+from ..sources.tables import load_table, round_robin
 from .entry_queries import register
 
 # Shared SQL fragments (kept in lockstep with functions/text.py)
@@ -734,7 +735,9 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature dimension with the exact integer bucket count."""
     docs = load_table(spark, sf_dir, "documents")
     binary = multimodal.to_binary_payload(docs, "doc_id", "text")
-    feats = multimodal.extract_features(binary)
+    # a shuffle boundary under the final sort, so its range sampler reads
+    # the kernel's output instead of re-running it (round_robin)
+    feats = round_robin(multimodal.extract_features(binary))
     return (
         feats.select(
             "doc_id", "n_bytes", "modality",
@@ -789,7 +792,9 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic sample_frames uses."""
     docs = load_table(spark, sf_dir, "documents")
     binary = multimodal.to_binary_payload(docs, "doc_id", "text", modality="video")
-    frames = multimodal.sample_frames(binary)
+    # a shuffle boundary under the final sort, so its range sampler reads
+    # the kernel's output instead of re-running it (round_robin)
+    frames = round_robin(multimodal.sample_frames(binary))
     sizes = binary.select("doc_id", F.col("meta.n_bytes").alias("n_bytes"))
     slice_len = F.expr(
         "((frame_idx + 1) * greatest(n_bytes, 1)) div 4"
@@ -985,7 +990,7 @@ def _ann_certificate(
     zero."""
     n = emb.count()
     if n == 0:
-        return spark.createDataFrame([(0, True, True, True, True)], _CERT_SCHEMA)
+        return local_rows(spark, [(0, True, True, True, True)], _CERT_SCHEMA)
     # the ANN pipeline (codebook/bucket pass + rerank + window) feeds
     # BOTH the structural aggregate below and the recall join — persist
     # it so the pipeline executes once, not twice (r13, guide §5;
@@ -1019,7 +1024,8 @@ def _ann_certificate(
     ann.unpersist()
     # n_sample == 1 means the lone vector has no possible neighbor;
     # recall is vacuous there too (ann is empty, hits == 0).
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [
             (
                 n,
@@ -1089,8 +1095,8 @@ def _sample_top1_exact(emb: DataFrame) -> DataFrame:
         .collect()
     )
     if not q_rows:
-        return emb.sparkSession.createDataFrame(
-            [], "vec_id bigint, bf_neighbor bigint"
+        return local_rows(
+            emb.sparkSession, [], "vec_id bigint, bf_neighbor bigint"
         )
     q_ids = [int(r[0]) for r in q_rows]
     # a NULL element becomes NaN: its cosines map to -inf below, the
@@ -1099,12 +1105,10 @@ def _sample_top1_exact(emb: DataFrame) -> DataFrame:
         [float("nan") if x is None else float(x) for x in r[1]] for r in q_rows
     ]
 
-    from ..functions.similarity import _fanout
-
     # the corpus arrives as one parquet file — fan the probe side out so
     # the O(sample x N) kernel runs wide, not as one task (r13, guide
     # §2.6; measured 2.4 s single-task at sf0.1)
-    corpus = _fanout(emb.select(F.col("vec_id").alias("c_id"), "embedding"))
+    corpus = round_robin(emb.select(F.col("vec_id").alias("c_id"), "embedding"))
 
     def batches(it):
         import numpy as np
@@ -1265,7 +1269,8 @@ def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics straight from the text bytes, so a header mis-write,
     chunk misparse, or sample-order corruption anywhere in
     encode_wav/decode_wav hash-mismatches. Arrow-batched mapInPandas,
-    one encode+decode per row, no shuffle before the final sort."""
+    one encode+decode per row, one round-robin shuffle before the final
+    sort."""
     import pandas as pd
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1292,10 +1297,13 @@ def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out["rms"].append(round(st["rms"], 6))
             yield pd.DataFrame(out)
 
-    return docs.mapInPandas(
+    stats = docs.mapInPandas(
         batches,
         schema="doc_id bigint, n_samples int, rate int, peak int, zcr int, rms double",
-    ).orderBy("doc_id")
+    )
+    # a shuffle boundary under the sort, so its range sampler reads the
+    # kernel's output instead of re-running it (round_robin)
+    return round_robin(stats).orderBy("doc_id")
 
 
 @register(
@@ -1345,7 +1353,8 @@ def similarity_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     if n_queries == 0:
         # vacuous pass on an empty corpus — no query can miss its
         # (nonexistent) true neighbor, and 0/0 must not raise
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [(0, True, True, True, True)],
             "n_queries bigint, lsh_recall_ok boolean, ivf_recall_ok boolean, "
             "ivf_trained_recall_ok boolean, pq_recall_ok boolean",
@@ -1364,7 +1373,8 @@ def similarity_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .count()
         )
         flags[name] = hits / n_queries >= thr
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [
             (
                 n_queries,

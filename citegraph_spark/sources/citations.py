@@ -35,12 +35,13 @@ def load_citations(spark: SparkSession, path: str) -> DataFrame:
     """`(from INT, to INT)` directed edge list from whitespace text."""
     lines = _non_comment_lines(spark, path)
     toks = lines.select(F.split(F.trim(F.col("value")), r"\s+").alias("t"))
-    # try_cast: ANSI mode (Spark 4 default) makes plain cast THROW on a
-    # malformed token; try_cast -> null -> na.drop reproduces the
-    # reference's drop-bad-rows behavior (DataFrameLoader.scala:37)
+    # try_element_at / try_cast: ANSI mode (Spark 4 default) makes
+    # element_at THROW on a one-token line and plain cast THROW on a
+    # malformed token; both -> null -> na.drop reproduces the reference's
+    # drop-bad-rows behavior (DataFrameLoader.scala:37)
     df = toks.select(
-        F.element_at("t", 1).try_cast("int").alias("from"),
-        F.element_at("t", 2).try_cast("int").alias("to"),
+        F.try_element_at("t", F.lit(1)).try_cast("int").alias("from"),
+        F.try_element_at("t", F.lit(2)).try_cast("int").alias("to"),
     )
     return df.na.drop()
 
@@ -69,9 +70,12 @@ def published_dates_from_lines(lines: DataFrame) -> DataFrame:
         (~F.col("value").contains("#")) & (F.trim(F.col("value")) != "")
     )
     toks = keep.select(F.split(F.trim(F.col("value")), r"\s+").alias("t"))
+    # try_element_at: a one-token line has no date; null -> dropped
     df = toks.select(
-        normalize_paper_id(F.trim(F.element_at("t", 1))).alias("id"),
-        F.substring(F.trim(F.element_at("t", 2)), 1, 4).try_cast("int").alias("year"),
+        normalize_paper_id(F.trim(F.try_element_at("t", F.lit(1)))).alias("id"),
+        F.substring(F.trim(F.try_element_at("t", F.lit(2))), 1, 4)
+        .try_cast("int")
+        .alias("year"),
     ).na.drop()
     return df.groupBy("id").agg(F.min("year").alias("year"))
 

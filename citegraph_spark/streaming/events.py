@@ -30,6 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sources.local import local_rows
+
+
 def _events_read_schema(spark: SparkSession, path: str):
     """Physical read schema of an events parquet file, plus whether `ts`
     surfaces as a raw long (TIMESTAMP(NANOS) files under nanosAsLong) or
@@ -212,7 +215,7 @@ def run_windowed_append_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
         res = spark.table(name)
         # materialize before deleting the replay files (same cleanup
         # contract as the other foreachBatch/statestore demos)
-        return spark.createDataFrame(res.collect(), res.schema)
+        return local_rows(spark, res.collect(), res.schema)
     finally:
         import shutil
 
@@ -462,7 +465,7 @@ def run_stream_static_enrich_demo(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         # materialize before deleting the backing files (same contract
         # as run_state_inspect_demo's cleanup)
-        return spark.createDataFrame(res.collect(), res.schema)
+        return local_rows(spark, res.collect(), res.schema)
     finally:
         import shutil
 
@@ -551,7 +554,7 @@ def run_state_inspect_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize before the checkpoint dir (the statestore source's
         # backing files) is removed — state is small: windows × types
-        return spark.createDataFrame(projected.collect(), projected.schema)
+        return local_rows(spark, projected.collect(), projected.schema)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
 
@@ -604,6 +607,6 @@ def run_incremental_rollup_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("day", "event_type")
         )
-        return spark.createDataFrame(res.collect(), res.schema)
+        return local_rows(spark, res.collect(), res.schema)
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)

@@ -104,6 +104,29 @@ def test_pq_codes_shape_and_determinism(spark, emb):
     assert codes.max() < 16
 
 
+def test_corpus_matrix_equals_the_row_by_row_build(spark, emb):
+    """`_corpus_matrix` reads the corpus as one Arrow table; its ids and
+    normalized matrix equal, bit for bit, the Row-by-Row build it
+    replaced, including a NULL element (NaN in both) and a zero vector."""
+    from citegraph_spark.functions.similarity import _corpus_matrix
+
+    corpus = emb.select("vec_id", "embedding")
+    extra = spark.createDataFrame(
+        [(10**6, [0.0] * 64), (10**6 + 1, [None] + [0.5] * 63)], corpus.schema
+    )
+    corpus = corpus.unionByName(extra)
+    ids, mat = _corpus_matrix(corpus, "vec_id", "embedding")
+
+    rows = corpus.collect()
+    ref_ids = np.array([r[0] for r in rows], dtype=np.int64)
+    m = np.array([r[1] for r in rows], dtype=np.float64)
+    norms = np.linalg.norm(m, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    assert np.array_equal(ids, ref_ids)
+    assert np.array_equal(mat, m / norms, equal_nan=True)
+    assert np.isnan(mat[-1]).all() and not mat[-2].any()
+
+
 def test_label_knn_agreement_properties(spark):
     from citegraph_spark.plans.entry_queries import QUERIES
 

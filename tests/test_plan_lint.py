@@ -1,6 +1,7 @@
 """The plan linter (tools/plan_lint.py) as a regression gate: a fixed
-cross-family sample is linted on every pytest run so a CartesianProduct
-or row-wise Python UDF cannot re-enter a hot path unnoticed. The full
+cross-family sample is linted on every pytest run so a CartesianProduct,
+a row-wise Python UDF or a global sort straight over a Python kernel
+cannot re-enter a hot path unnoticed. The full
 229-entry sweep runs out-of-band (one JSON line, recorded per round in
 BASELINE.md)."""
 
@@ -11,7 +12,7 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
-from plan_lint import BNLJ_ALLOWED, lint_one  # noqa: E402
+from plan_lint import BNLJ_ALLOWED, lint_one, python_under_range_sort  # noqa: E402
 
 from citegraph_spark.plans.entry_queries import QUERIES  # noqa: E402
 
@@ -45,6 +46,14 @@ SAMPLE = [
     # round-8 adjudication: ANN certificate recall base — bounded
     # 128-row broadcast sample vs corpus (see tools/plan_lint.BNLJ_ALLOWED)
     "similarity_pq",
+    # a global sort over a Python kernel: each needs a shuffle boundary
+    # between the two, or the sort's range sampler re-runs the kernel
+    # (similarity_topk_cosine and udtf_chunk_split, above, have the same
+    # shape)
+    "multimodal_frames",
+    "multimodal_audio",
+    "multimodal_features",
+    "dedup_embedding_cosine",
 ]
 
 
@@ -59,3 +68,25 @@ def test_sampled_plans_have_no_scale_killers(spark):
             assert name in BNLJ_ALLOWED, (
                 f"{name}: BroadcastNestedLoopJoin not allowlisted"
             )
+        assert r["python_under_range_sort"] == 0, (
+            f"{name}: Python exec node under a range-partitioning exchange "
+            "(the sort's sampler re-runs the kernel)"
+        )
+
+
+def test_rule_sees_a_sort_straight_over_a_python_kernel(spark):
+    """The rule fires on a global sort directly over a mapInPandas, and a
+    round-robin exchange between them clears it."""
+    from citegraph_spark.sources.tables import round_robin
+
+    def same(it):
+        yield from it
+
+    kernel = spark.range(64).mapInPandas(same, "id long")
+
+    def hits(df) -> int:
+        return python_under_range_sort(df._jdf.queryExecution().executedPlan())
+
+    assert hits(kernel.orderBy("id")) == 1
+    assert hits(round_robin(kernel).orderBy("id")) == 0
+    assert hits(kernel.groupBy("id").count()) == 0  # hash exchange: not a sort

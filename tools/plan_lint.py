@@ -21,6 +21,14 @@ physical plan for the constructs that kill a 100 TB run:
   than the hot-key straggler it avoids (map-side partial combine
   already bounds reducer load); salt is for JOIN keys only and must be
   dropped before any aggregate.
+- a Python exec node (MapInPandas, ArrowEvalPython, a Python UDTF, ...)
+  below an `Exchange rangepartitioning` with no other exchange in
+  between — a global sort straight over a Python kernel. Spark's
+  RangePartitioner samples its input in a job of its own before the
+  shuffle write, so the kernel runs twice; a round-robin exchange
+  (`sources.tables.round_robin`) between them makes the sampler read
+  shuffle files instead. Found by walking the physical plan's node tree,
+  not the plan text.
 
 Also records, per entry, the Exchange count (shuffle breadth).
 (Codegen spans are NOT linted: under AQE the pre-execution formatted
@@ -106,6 +114,45 @@ BNLJ_ALLOWED = {
 }
 
 
+_PYTHON_EXEC = "org.apache.spark.sql.execution.python."
+
+
+def _children(node) -> list:
+    seq = node.children()
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _is_exchange(node) -> bool:
+    return node.getClass().getName().startswith("org.apache.spark.sql.execution.exchange.")
+
+
+def python_under_range_sort(plan) -> int:
+    """Python exec nodes reachable from a range-partitioning exchange of
+    the physical plan `plan` (a JVM SparkPlan) without crossing another
+    exchange. Each such node runs once for the RangePartitioner's sample
+    and once more for the shuffle write."""
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()  # the plan with its exchanges in place
+
+    def python_nodes_before_exchange(node) -> int:
+        if _is_exchange(node):
+            return 0
+        own = node.getClass().getName().startswith(_PYTHON_EXEC)
+        return own + sum(python_nodes_before_exchange(c) for c in _children(node))
+
+    hits, todo = 0, [plan]
+    while todo:
+        node = todo.pop()
+        kids = _children(node)
+        if (
+            _is_exchange(node)
+            and node.outputPartitioning().getClass().getSimpleName() == "RangePartitioning"
+        ):
+            hits += sum(python_nodes_before_exchange(c) for c in kids)
+        todo += kids
+    return hits
+
+
 def lint_one(name: str, fn, spark, sf_dir: str | None = None) -> dict:
     df = fn(spark, sf_dir or SF_DIR)
     buf = io.StringIO()
@@ -130,6 +177,9 @@ def lint_one(name: str, fn, spark, sf_dir: str | None = None) -> dict:
         # keys as "Keys [n]: [...]" (join keys print as "Left keys"/
         # "Right keys"), so this matches aggregates only.
         "salted_agg": len(re.findall(r"^Keys \[\d+\]: \[[^\n]*_salt", p, re.M)),
+        "python_under_range_sort": python_under_range_sort(
+            df._jdf.queryExecution().executedPlan()
+        ),
     }
 
 
@@ -159,6 +209,11 @@ def main(argv: list[str]) -> int:
             v.append(f"BroadcastNestedLoopJoin x{r['bnlj']} (not allowlisted)")
         if r["salted_agg"]:
             v.append("aggregate keyed on _salt (pre-salted aggregation)")
+        if r["python_under_range_sort"]:
+            v.append(
+                f"Python exec node under a range-partitioning exchange "
+                f"x{r['python_under_range_sort']} (the sort's sampler re-runs it)"
+            )
         if v:
             violations[name] = v
 
