@@ -5,15 +5,15 @@ Every iterative operator in this engine (pagerank/hits/sssp/BFS
 frontiers, star-contraction CC, Borůvka MSF, k-truss peeling, LPA,
 HyperBall, MIS/matching, BPE merge rounds, k-center, and the
 partition-carry relational idioms) truncates its per-round plan lineage
-so round N+1's plan does not embed round N's. The broadcast-relaxation
-operators (pagerank, hits, sssp_bounded, multi_source_bfs, HyperBall)
-run their whole loop through `relax_rounds` below, which owns the cut
-cadence along with the tier choice and the cleanup. `DataFrame.localCheckpoint`
-is the right default on local[*] and for short jobs: blocks live in
-executor storage, no DFS round-trip. It is NOT fault-tolerant — the
-truncated lineage cannot recompute lost blocks, so on a multi-hour
-1000-executor job a single executor loss kills the query (Spark's own
-API docs carry this caveat).
+so round N+1's plan does not embed round N's. The relaxation operators
+(pagerank, hits, sssp_bounded, multi_source_bfs, HyperBall,
+label_propagation) run their whole loop through `relax_rounds` below,
+which owns the cut cadence along with the tier choice and the cleanup.
+`DataFrame.localCheckpoint` is the right default on local[*] and for
+short jobs: blocks live in executor storage, no DFS round-trip. It is
+NOT fault-tolerant — the truncated lineage cannot recompute lost
+blocks, so on a multi-hour 1000-executor job a single executor loss
+kills the query (Spark's own API docs carry this caveat).
 
 At cluster scale, flip ONE knob instead of editing operators:
 
@@ -81,9 +81,12 @@ def release(df: DataFrame) -> None:
     or came out of `cut_lineage`. `DataFrame.unpersist()` only clears
     cache-manager entries; a (local) checkpoint's blocks belong to the
     RDD under its `LogicalRDD` plan and would otherwise stay until the
-    ContextCleaner happens to collect that RDD."""
+    ContextCleaner happens to collect that RDD. A `select` over a cut
+    frame holds that frame's blocks, so it releases them too."""
     df.unpersist()
     plan = df._jdf.queryExecution().analyzed()
+    while plan.getClass().getSimpleName() == "Project":
+        plan = plan.child()
     if plan.getClass().getSimpleName() == "LogicalRDD":
         plan.rdd().unpersist(False)
 

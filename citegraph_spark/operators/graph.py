@@ -564,74 +564,6 @@ def approx_hop_plot(
     return _apply_strict_stop(rows) if strict_stop else rows
 
 
-def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
-    """Connected components by hash-min label propagation: every node
-    starts labeled with its own id; each round a node takes the min of
-    its label and its neighbors' labels; converged when no label changes.
-    Output: (node, component) where component = min node id reachable.
-
-    Rounds needed ~ component diameter — for high-diameter graphs use
-    connected_components_star (large/small-star, O(log) rounds) below;
-    per round: one equi join
-    (messages) + one min-aggregate with map-side combine, lineage
-    truncated via localCheckpoint. All DataFrame ops — no RDDs.
-    """
-    n_shuffle = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    fwd = edges.select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
-    rev = edges.select(F.col("dst").alias("node"), F.col("src").alias("nbr"))
-    # static adjacency partitioned once by the per-round join key and
-    # cached (persist keeps the hashpartitioning visible — see
-    # lineage.relax_rounds); labels hash-build into it so rounds move
-    # only the O(nodes) label table + the combined min-aggregate, never
-    # the O(edges) adjacency
-    adj = (
-        fwd.unionByName(rev)
-        .distinct()
-        .repartition(n_shuffle, "nbr")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    adj.count()  # materialize once
-
-    labels = (
-        adj.select("node").distinct().select("node", F.col("node").alias("component"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    for it in range(1, max_iter + 1):
-        msgs = (
-            adj.alias("a")
-            .join(
-                labels.hint("shuffle_hash").alias("l"),
-                F.col("a.nbr") == F.col("l.node"),
-                "inner",
-            )
-            .select(F.col("a.node").alias("node"), F.col("l.component").alias("component"))
-        )
-        new_labels = (
-            labels.unionByName(msgs)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-        )
-        if it % 3 == 0:
-            new_labels = new_labels.transform(cut_lineage)
-        else:
-            new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
-        n_changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if n_changed == 0:
-            break
-
-    adj.unpersist()
-    return labels
-
-
 # --------------------------------------------- centrality / structure ops
 
 
@@ -894,71 +826,77 @@ def label_propagation(edges: DataFrame, max_iter: int = 5) -> DataFrame:
     broken toward the smallest label — fully deterministic. Output:
     (node, community).
 
-    Per round: one equi join (neighbor labels) + one (node, label) count
+    The rounds run through `lineage.relax_rounds` over the adjacency plus
+    one (node, node) self-loop per node, which casts the self-vote. A
+    round is one equi join (neighbor labels) + one (node, label) count
     aggregate + one argmax-by-struct aggregate. The argmax is
     `max(struct(cnt, -label))` — a regular aggregate with map-side
     combine on the same `node` key as the count's first grouping column,
     NOT a row_number window (a window would force a second full sort
-    exchange per round). Lineage is truncated with localCheckpoint.
-    Fixed small `max_iter`: LPA quality saturates in a few rounds and
-    each extra round is a full join over the edge set.
+    exchange per round). The same aggregate reads each node's old label
+    through its self-loop, and the rounds stop at the first one that
+    changes no label (an `observe` sum, so no extra job): a stable round
+    is the identity. Fixed small `max_iter`: LPA quality saturates in a
+    few rounds and each extra round is a full join over the edge set.
     """
-    n_shuffle = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
     fwd = edges.select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
     rev = edges.select(F.col("dst").alias("node"), F.col("src").alias("nbr"))
-    adj = fwd.unionByName(rev).filter(F.col("node") != F.col("nbr")).distinct()
-    # partition the static adjacency by the per-round JOIN key and cache
-    # it: with the hashpartitioning visible (persist, not checkpoint —
-    # see lineage.relax_rounds) and the label table as a SHUFFLE_HASH
-    # build side, each round moves only the O(nodes) labels and the
-    # map-side-combined vote aggregate — never the O(edges) adjacency,
-    # and never the per-round sort a merge join would force on it
-    adj = adj.repartition(n_shuffle, "nbr").persist(StorageLevel.MEMORY_AND_DISK)
-    adj.count()  # materialize once
+    adj = (
+        fwd.unionByName(rev)
+        .filter(F.col("node") != F.col("nbr"))
+        .distinct()
+        .transform(cut_lineage)
+    )
+    try:
+        # the initial state doubles as the node list
+        labels = (
+            adj.select("node")
+            .distinct()
+            .select("node", F.col("node").alias("community"))
+            .transform(cut_lineage)
+        )
+        n = labels.count()
+        static = adj.unionByName(labels.select("node", F.col("node").alias("nbr")))
 
-    labels = (
-        adj.select("node").distinct().select("node", F.col("node").alias("community"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    for it in range(1, max_iter + 1):
-        msgs = (
-            adj.alias("a")
-            .join(
-                labels.hint("shuffle_hash").alias("l"),
-                F.col("a.nbr") == F.col("l.node"),
-                "inner",
+        def step(static: DataFrame, labels: DataFrame) -> DataFrame:
+            votes = (
+                static.alias("a")
+                .join(labels.alias("l"), F.col("a.nbr") == F.col("l.node"), "inner")
+                .select(
+                    F.col("a.node").alias("node"),
+                    F.col("l.community").alias("community"),
+                    (F.col("a.node") == F.col("a.nbr")).alias("own"),
+                )
+                .groupBy("node", "community")
+                .agg(F.count("*").alias("cnt"), F.max("own").alias("own"))
             )
-            .select(F.col("a.node").alias("node"), F.col("l.community").alias("community"))
-        )
-        votes = msgs.unionByName(labels)
-        new_labels = (
-            votes.groupBy("node", "community")
-            .agg(F.count("*").alias("cnt"))
-            .groupBy("node")
-            .agg(
-                F.max(F.struct(F.col("cnt"), (-F.col("community")).alias("neg"))).alias("top")
+            new = -F.col("top.neg")
+            return (
+                votes.groupBy("node")
+                .agg(
+                    F.max(F.struct("cnt", (-F.col("community")).alias("neg"))).alias("top"),
+                    F.max(F.when(F.col("own"), F.col("community"))).alias("old"),
+                )
+                .select(
+                    "node",
+                    new.alias("community"),
+                    (F.col("old") != new).cast("int").alias("changed"),
+                )
             )
-            .select("node", (-F.col("top.neg")).alias("community"))
-        )
-        if it % 2 == 0:
-            new_labels = new_labels.transform(cut_lineage)
-        else:
-            new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
-        n_changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.community") != F.col("o.community"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if n_changed == 0:
-            break
 
-    adj.unpersist()
-    return labels
+        state = relax_rounds(
+            static,
+            labels,
+            step,
+            max_iter,
+            state_bytes=n * 48,
+            keys=("node", "nbr"),
+            observe=F.sum("changed").alias("changed"),
+            stop=lambda _, n_changed: not n_changed,
+        )
+    finally:
+        release(adj)
+    return state.select("node", "community")
 
 
 def _tarjan_scc(pairs: list[tuple[int, int]]) -> list[frozenset]:
@@ -1059,8 +997,9 @@ def strongly_connected_components(
     distributed-vs-Tarjan comparison honest). Labels are identical
     either way — the partition is unique and both paths emit max-id.
 
-    Round shape matches connected_components: equi join + max-aggregate,
-    localCheckpoint lineage truncation, no RDDs/UDFs. Worst case (one
+    A round is label propagation with max in place of hash-min's min:
+    equi join + max-aggregate, localCheckpoint lineage truncation, no
+    RDDs/UDFs. Worst case (one
     long cycle) pays O(cycle length) rounds — the bound any
     label-propagation SCC pays.
     """
@@ -2178,18 +2117,14 @@ def connected_components_star(
     (toward |V| star edges); convergence is detected by multiset
     equality (count match + empty except).
 
-    Output: (node, component) with component = min node id, matching
-    connected_components exactly — but in logarithmically many rounds
-    on the chain-shaped graphs where hash-min stalls."""
-    cur = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-        .transform(cut_lineage)
-    )
+    Output: (node, component) with component = min node id reachable,
+    for every node with an edge to another node (a self-loop-only node
+    has none) — in logarithmically many rounds on the chain-shaped
+    graphs where hash-min stalls. Every lineage-cut round frame is
+    `release`d once superseded, the rest before return; a result that
+    does not come from the driver-local tail is itself lineage-cut and
+    belongs to the caller.
+    """
 
     def _adj(e: DataFrame) -> DataFrame:
         return e.select(F.col("a").alias("u"), F.col("b").alias("n")).unionByName(
@@ -2212,115 +2147,133 @@ def connected_components_star(
     # cost is dominated by the distinct + join shuffles, and the
     # persist barrier serializes work AQE otherwise pipelines. The
     # duplicate aggregate is the cheaper evil; leave it.
-    converged = False
-    n_cur = cur.count()
-    for _ in range(max_rounds):
-        if 0 <= local_threshold and n_cur <= local_threshold:
-            # Tail cutover (r13 optimization, guide §1.2 — same shape as
-            # the MIS/matching/MST local finishes): star rounds preserve
-            # each component's node set, so the components of the
-            # CURRENT edge set equal the original components and the
-            # final (node, min-id) labelling can be computed directly by
-            # a driver union-find over the collected tail — skipping the
-            # remaining near-empty rounds' fixed costs. Bounded by
-            # local_threshold rows; the gate's driver replay and the
-            # oracle certify equality.
-            rows = cur.collect()
-            uf: dict = {}
-
-            def _find(x):
-                root = x
-                while uf.setdefault(root, root) != root:
-                    root = uf[root]
-                while uf[x] != root:
-                    uf[x], x = root, uf[x]
-                return root
-
-            for a, b in rows:
-                ra, rb = _find(a), _find(b)
-                if ra != rb:
-                    uf[ra] = rb
-            groups: dict = {}
-            for v in uf:
-                groups.setdefault(_find(v), []).append(v)
-            out_rows = []
-            for members in groups.values():
-                lbl = min(members)
-                out_rows.extend((v, lbl) for v in members)
-            from pyspark.sql import types as T
-
-            id_t = cur.schema["a"].dataType
-            sch = T.StructType(
-                [
-                    T.StructField("node", id_t),
-                    T.StructField("component", id_t),
-                ]
-            )
-            return local_rows(edges.sparkSession, sorted(out_rows), sch)
-        # large-star
-        adj = _adj(cur)
-        m = _minmap(adj)
-        ls = (
-            adj.join(m, "u")
-            .filter(F.col("n") > F.col("u"))
-            .select(
-                F.least("n", "m").alias("a"), F.greatest("n", "m").alias("b")
-            )
-            .filter(F.col("a") != F.col("b"))
-            .unionByName(
-                # keep u's own attachment so components never split
-                m.filter(F.col("u") != F.col("m")).select(
-                    F.col("m").alias("a"), F.col("u").alias("b")
-                )
-            )
-            .distinct()
-            .transform(cut_lineage)
+    cur = (
+        edges.filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("a"),
+            F.greatest("src", "dst").alias("b"),
         )
-        # small-star
-        adj2 = _adj(ls)
-        m2 = _minmap(adj2)
-        ss = (
-            adj2.join(m2, "u")
-            .filter(F.col("n") < F.col("u"))
-            .select(
-                F.least("n", "m").alias("a"), F.greatest("n", "m").alias("b")
-            )
-            .unionByName(
-                m2.select(F.least("u", "m").alias("a"),
-                          F.greatest("u", "m").alias("b"))
-            )
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .transform(cut_lineage)
-        )
-        # carried counts: ss/cur are both checkpointed, so the equality
-        # check needs only ONE new count job per round (the previous
-        # round's n_cur is reused)
-        n_ss = ss.count()
-        same = (
-            n_ss == n_cur
-            and ss.exceptAll(cur).limit(1).count() == 0
-        )
-        cur, n_cur = ss, n_ss
-        if same:
-            converged = True
-            break
-    if not converged:
-        # the final extraction below assumes a converged star forest
-        # (one-hop min of incident smaller endpoints); on a partial
-        # contraction it returns silently wrong labels, so refuse.
-        from ..errors import ConvergenceError
-
-        raise ConvergenceError("connected_components_star", max_rounds)
-
-    # converged star set: every edge is (component-min, member)
-    centers = cur.select(F.col("a").alias("node"), F.col("a").alias("component"))
-    members = cur.select(F.col("b").alias("node"), F.col("a").alias("component"))
-    return (
-        members.unionByName(centers)
-        .groupBy("node")
-        .agg(F.min("component").alias("component"))
+        .distinct()
+        .transform(cut_lineage)
     )
+
+    held = [cur]
+    try:
+        n_cur = cur.count()
+        for _ in range(max_rounds):
+            if 0 <= local_threshold and n_cur <= local_threshold:
+                # Tail cutover (r13 optimization, guide §1.2 — same shape as
+                # the MIS/matching/MST local finishes): star rounds preserve
+                # each component's node set, so the components of the
+                # CURRENT edge set equal the original components and the
+                # final (node, min-id) labelling can be computed directly by
+                # a driver union-find over the collected tail — skipping the
+                # remaining near-empty rounds' fixed costs. Bounded by
+                # local_threshold rows; the gate's driver replay and the
+                # oracle certify equality.
+                rows = cur.collect()
+                uf: dict = {}
+
+                def _find(x):
+                    root = x
+                    while uf.setdefault(root, root) != root:
+                        root = uf[root]
+                    while uf[x] != root:
+                        uf[x], x = root, uf[x]
+                    return root
+
+                for a, b in rows:
+                    ra, rb = _find(a), _find(b)
+                    if ra != rb:
+                        uf[ra] = rb
+                groups: dict = {}
+                for v in uf:
+                    groups.setdefault(_find(v), []).append(v)
+                out_rows = []
+                for members in groups.values():
+                    lbl = min(members)
+                    out_rows.extend((v, lbl) for v in members)
+                from pyspark.sql import types as T
+
+                id_t = cur.schema["a"].dataType
+                sch = T.StructType(
+                    [
+                        T.StructField("node", id_t),
+                        T.StructField("component", id_t),
+                    ]
+                )
+                return local_rows(edges.sparkSession, sorted(out_rows), sch)
+            # large-star
+            adj = _adj(cur)
+            m = _minmap(adj)
+            ls = (
+                adj.join(m, "u")
+                .filter(F.col("n") > F.col("u"))
+                .select(
+                    F.least("n", "m").alias("a"), F.greatest("n", "m").alias("b")
+                )
+                .filter(F.col("a") != F.col("b"))
+                .unionByName(
+                    # keep u's own attachment so components never split
+                    m.filter(F.col("u") != F.col("m")).select(
+                        F.col("m").alias("a"), F.col("u").alias("b")
+                    )
+                )
+                .distinct()
+                .transform(cut_lineage)
+            )
+            held.append(ls)
+            # small-star
+            adj2 = _adj(ls)
+            m2 = _minmap(adj2)
+            ss = (
+                adj2.join(m2, "u")
+                .filter(F.col("n") < F.col("u"))
+                .select(
+                    F.least("n", "m").alias("a"), F.greatest("n", "m").alias("b")
+                )
+                .unionByName(
+                    m2.select(F.least("u", "m").alias("a"),
+                              F.greatest("u", "m").alias("b"))
+                )
+                .filter(F.col("a") != F.col("b"))
+                .distinct()
+                .transform(cut_lineage)
+            )
+            held.append(ss)
+            release(ls)
+            # carried counts: ss/cur are both checkpointed, so the equality
+            # check needs only ONE new count job per round (the previous
+            # round's n_cur is reused)
+            n_ss = ss.count()
+            same = (
+                n_ss == n_cur
+                and ss.exceptAll(cur).limit(1).count() == 0
+            )
+            release(cur)
+            cur, n_cur = ss, n_ss
+            if same:
+                break
+        else:
+            # the final extraction below assumes a converged star forest
+            # (one-hop min of incident smaller endpoints); on a partial
+            # contraction it returns silently wrong labels, so refuse.
+            from ..errors import ConvergenceError
+
+            raise ConvergenceError("connected_components_star", max_rounds)
+
+        # converged star set: every edge is (component-min, member)
+        centers = cur.select(F.col("a").alias("node"), F.col("a").alias("component"))
+        members = cur.select(F.col("b").alias("node"), F.col("a").alias("component"))
+        return (
+            members.unionByName(centers)
+            .groupBy("node")
+            .agg(F.min("component").alias("component"))
+            .transform(cut_lineage)
+        )
+    finally:
+        for df in held:
+            release(df)
 
 
 def edge_support(

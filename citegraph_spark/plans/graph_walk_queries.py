@@ -810,10 +810,10 @@ def graph_cc_star_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correctness gate for large-star/small-star connected components
     on the hash-induced subgraph: the component partition (canonical
     min-id labels) must equal a driver-side union-find exactly. This is
-    the CC implementation to reach for at extreme diameter — hash-min
-    (connected_components) needs O(diameter) rounds, star contraction
-    O(log) — so the gate certifies the scale path, while the unit tests
-    pin the chain case hash-min cannot finish in bounded rounds."""
+    the engine's one CC operator — star contraction needs O(log) rounds
+    where hash-min label propagation needs O(diameter) — so the gate
+    certifies the scale path, while the unit tests pin the chain case
+    and the distributed rounds past the local tail."""
     from ..operators.graph import connected_components_star
 
     raw = (

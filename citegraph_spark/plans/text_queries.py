@@ -904,14 +904,16 @@ ORDER BY doc_id
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full near-dup pipeline: MinHash-LSH pairs → connected components
-    (hash-min label propagation, operators/graph.py) → min-id canonical
-    doc per cluster; docs in no cluster survive as their own canonical."""
-    from ..operators.graph import connected_components
+    (large-star/small-star contraction, operators/graph.py
+    connected_components_star; a few hundred pairs go straight to its
+    driver-local finish) → min-id canonical doc per cluster; docs in no
+    cluster survive as their own canonical."""
+    from ..operators.graph import connected_components_star
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(docs)
     edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    comp = connected_components(edges)
+    comp = connected_components_star(edges)
     return (
         docs.select("doc_id")
         .join(comp, docs["doc_id"] == comp["node"], "left")

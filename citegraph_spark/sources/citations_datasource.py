@@ -25,6 +25,7 @@ fully visible to Catalyst)."""
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
 
@@ -36,6 +37,10 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 from pyspark.sql.types import IntegerType, StructField, StructType
+
+
+#: Java's `\s` (the column loaders split with it), not Python's Unicode one
+_WHITESPACE = re.compile(r"\s+", re.ASCII)
 
 
 def _normalize_id(tok: str) -> int:
@@ -100,15 +105,19 @@ class _CitationsReader(DataSourceReader):
     def read(self, partition: _FilePartition) -> Iterator[tuple]:
         with open(partition.path, encoding="utf-8") as fh:
             for line in fh:
-                if "#" in line or not line.strip():
+                # the column loaders' tokenizer: Spark's `trim` strips
+                # spaces only, then `split(..., '\s+')`, so a tab-led line
+                # has an empty first token and is dropped below
+                line = line.rstrip("\n").strip(" ")
+                if "#" in line or not line:
                     continue
-                toks = line.split()
+                toks = _WHITESPACE.split(line)
                 if len(toks) < 2:
                     continue
                 try:
                     if self.kind == "published":
                         # id \t yyyy-mm-dd → (normalized id, year)
-                        yield _normalize_id(toks[0].strip()), int(toks[1][:4])
+                        yield _normalize_id(toks[0]), int(toks[1][:4])
                     else:
                         yield int(toks[0]), int(toks[1])
                 except ValueError:

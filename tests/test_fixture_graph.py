@@ -124,16 +124,21 @@ def test_max_d_cap_on_path_graph(spark):
 
 
 def test_connected_components_hand_graph(spark):
-    from citegraph_spark.operators.graph import connected_components
+    """The driver-local tail (default) and the distributed star rounds."""
+    from citegraph_spark.operators.graph import connected_components_star
 
-    # two components {1,2,3,4} (chain) and {10,11}; 20 isolated via self-ref
+    # two components {1,2,3,4} (chain) and {10,11}
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "src int, dst int"
     )
-    got = {
-        r["node"]: r["component"] for r in connected_components(edges).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    for local_threshold in (50_000, -1):
+        got = {
+            r["node"]: r["component"]
+            for r in connected_components_star(
+                edges, local_threshold=local_threshold
+            ).collect()
+        }
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}, local_threshold
 
 
 @pytest.mark.parametrize("year", [1997, 1998])

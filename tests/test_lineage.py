@@ -30,15 +30,18 @@ def test_default_path_is_localcheckpoint(spark, edges):
 
 
 def test_reliable_mode_matches_default_and_writes_files(spark, edges, tmp_path):
-    from citegraph_spark.operators.graph import connected_components, pagerank
+    from citegraph_spark.operators.graph import connected_components_star, pagerank
+
+    def cc() -> set:
+        # local_threshold=-1: every star round goes through cut_lineage
+        star = connected_components_star(edges.select("src", "dst"), local_threshold=-1)
+        return {tuple(r) for r in star.collect()}
 
     base_pr = {
         (r["node"], round(r["rank"], 9))
         for r in pagerank(edges, iterations=5).collect()
     }
-    base_cc = {
-        tuple(r) for r in connected_components(edges.select("src", "dst")).collect()
-    }
+    base_cc = cc()
 
     ckpt = str(tmp_path / "ckpt")
     spark.sparkContext.setCheckpointDir(ckpt)
@@ -48,10 +51,7 @@ def test_reliable_mode_matches_default_and_writes_files(spark, edges, tmp_path):
             (r["node"], round(r["rank"], 9))
             for r in pagerank(edges, iterations=5).collect()
         }
-        got_cc = {
-            tuple(r)
-            for r in connected_components(edges.select("src", "dst")).collect()
-        }
+        got_cc = cc()
     finally:
         spark.conf.unset(RELIABLE_FLAG)
 

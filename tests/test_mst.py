@@ -328,18 +328,12 @@ def test_cc_star_random_matches_union_find(spark):
         assert _cc_star(spark, pairs) == _uf_components(pairs), seed
 
 
-def test_cc_star_agrees_with_hashmin(spark):
-    from citegraph_spark.operators.graph import connected_components
-
+def test_cc_star_crafted_matches_union_find(spark):
+    """A self-loop-only node (12) has no component row."""
     pairs = [(1, 2), (2, 3), (10, 11), (12, 12), (11, 13), (5, 6)]
-    df = spark.createDataFrame(
-        [(a, b) for a, b in pairs if a != b], "src long, dst long"
-    )
-    hashmin = {
-        r["node"]: r["component"] for r in connected_components(df).collect()
-    }
-    star = _cc_star(spark, [(a, b) for a, b in pairs if a != b])
-    assert star == hashmin
+    star = _cc_star(spark, pairs)
+    assert star == _uf_components([(a, b) for a, b in pairs if a != b])
+    assert 12 not in star
 
 
 def test_ktruss_crafted_and_random(spark):

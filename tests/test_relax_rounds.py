@@ -1,5 +1,6 @@
-"""`lineage.relax_rounds` and the five operators that run on it (pagerank,
-hits, sssp_bounded, multi_source_bfs, HyperBall).
+"""`lineage.relax_rounds` and the operators that run on it (pagerank,
+hits, sssp_bounded, multi_source_bfs, HyperBall, label_propagation), plus
+the lineage-cut state of connected_components_star.
 
 The round state is broadcast while it fits the round-state budget; with
 `spark.sql.autoBroadcastJoinThreshold=-1` (the `broadcast_off` fixture)
@@ -21,7 +22,9 @@ from citegraph_spark.fixtures import fixture_citations, fixture_published
 from citegraph_spark.functions.sketches import hyperball_hopplot
 from citegraph_spark.lineage import relax_rounds, release
 from citegraph_spark.operators.graph import (
+    connected_components_star,
     hits,
+    label_propagation,
     multi_source_bfs,
     pagerank,
     snapshot_edges,
@@ -71,12 +74,18 @@ def _hyperball(spark) -> list:
     return [(d, round(g, 2)) for d, g in hyperball_hopplot(_undirected(spark), max_d=10)]
 
 
+def _lpa(spark) -> dict:
+    rows = label_propagation(_directed(spark), max_iter=5).collect()
+    return {r["node"]: r["community"] for r in rows}
+
+
 TIER_CASES = {
     "pagerank": _pagerank,
     "ppr": lambda spark: _pagerank(spark, seeds=[1, 2, 3]),
     "hits": _hits,
     "sssp": _sssp,
     "hyperball": _hyperball,
+    "lpa": _lpa,
 }
 
 
@@ -163,6 +172,11 @@ def test_ported_operators_release_their_state(spark, broadcast_off):
         "sssp_bounded": lambda: sssp_bounded(_weighted(spark), 11, rounds=4),
         "multi_source_bfs": lambda: multi_source_bfs(_undirected(spark), [1, 5], rounds=4),
         "hyperball_hopplot": lambda: hyperball_hopplot(_undirected(spark), max_d=4),
+        "label_propagation": lambda: label_propagation(_directed(spark), max_iter=4),
+        "connected_components_star": lambda: connected_components_star(_directed(spark)),
+        "connected_components_star (rounds)": lambda: connected_components_star(
+            _directed(spark), local_threshold=-1
+        ),
     }
     before = persisted()
     for scope in (contextlib.nullcontext, broadcast_off):

@@ -401,21 +401,30 @@ def test_citations_datasource_write_read_roundtrip(spark):
 
 
 def test_citation_loaders_drop_one_token_and_malformed_lines(spark, tmp_path):
-    """Both text loaders drop what they cannot parse instead of failing
-    the job: a one-token line (no second field; `element_at` would throw
-    under ANSI mode), a tab-led line (empty first token) and non-numeric
-    tokens, next to good rows that must survive."""
+    """Both text loaders, and the `citations` DataSource, drop what they
+    cannot parse instead of failing the job: a one-token line (no second
+    field; `element_at` would throw under ANSI mode), a tab-led line
+    (empty first token) and non-numeric tokens, next to good rows that
+    must survive."""
     from citegraph_spark.sources.citations import (
         load_citations,
         load_published_dates,
     )
+    from citegraph_spark.sources.citations_datasource import CitationsDataSource
 
+    spark.dataSource.register(CitationsDataSource)
     cit = tmp_path / "citations.txt"
     cit.write_text("# c\n2 1\n3\n\t4 2\nx 1\n5 y\n6 3\n")
-    got = sorted((r["from"], r["to"]) for r in load_citations(spark, str(cit)).collect())
-    assert got == [(2, 1), (6, 3)]
+    for df in (
+        load_citations(spark, str(cit)),
+        spark.read.format("citations").load(str(cit)),
+    ):
+        assert sorted((r["from"], r["to"]) for r in df.collect()) == [(2, 1), (6, 3)]
 
     pub = tmp_path / "published-dates.txt"
     pub.write_text("# c\n1\t1992-01-01\n5\n\t7\t1993-02-03\nab\t1994-01-01\n8\txyz\n9\t1995-05-06\n")
-    got = sorted((r["id"], r["year"]) for r in load_published_dates(spark, str(pub)).collect())
-    assert got == [(1, 1992), (9, 1995)]
+    for df in (
+        load_published_dates(spark, str(pub)),
+        spark.read.format("citations").option("kind", "published").load(str(pub)),
+    ):
+        assert sorted((r["id"], r["year"]) for r in df.collect()) == [(1, 1992), (9, 1995)]
