@@ -26,7 +26,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # --- BEGIN GENERATED ROTATION (python tools/staleness.py sync) ---
 # Derived from CORRECTNESS_r*.json + git-tree fingerprints; do not
 # hand-edit. Head block = entries whose transitive code closure
-# changed since the round-14 sweep (58 entries); then never-certified (0);
+# changed since the round-14 sweep (59 entries); then never-certified (0);
 # then oldest-certification-first (cheap-first within a round).
 _ROTATION = [
     'graph_hyperball',
@@ -40,6 +40,7 @@ _ROTATION = [
     'fixture_hopplot',
     'similarity_topk_cosine',
     'multimodal_frames',
+    'graph_kcore',
     'graph_scc',
     'scc_partition_gate',
     'xml_sink_roundtrip',
@@ -149,7 +150,6 @@ _ROTATION = [
     'dedup_simhash_pairs',
     'dedup_minhash_lsh',
     'percentile_prices',
-    'graph_kcore',
     'dedup_ngram_jaccard',
     'approx_percentile_prices',
     'graph_clustering_coefficient',

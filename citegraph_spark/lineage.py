@@ -9,6 +9,11 @@ so round N+1's plan does not embed round N's. The relaxation operators
 (pagerank, hits, sssp_bounded, multi_source_bfs, HyperBall,
 label_propagation) run their whole loop through `relax_rounds` below,
 which owns the cut cadence along with the tier choice and the cleanup.
+The shrinking-graph operators (k_core, k_truss, maximal_independent_set,
+maximal_matching, connected_components_star, minimum_spanning_forest),
+whose rounds rewrite an edge set instead of a per-node state, run
+theirs through `shrink_rounds`, which owns the residual sizing, the
+cuts and their release, the driver-local tail and the round cap.
 `DataFrame.localCheckpoint` is the right default on local[*] and for
 short jobs: blocks live in executor storage, no DFS round-trip. It is
 NOT fault-tolerant — the truncated lineage cannot recompute lost
@@ -49,6 +54,8 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .errors import ConvergenceError
+
 RELIABLE_FLAG = "spark.citegraph.reliableCheckpoint"
 
 #: Largest per-round state (rows × the operator's bytes per row) that
@@ -58,6 +65,10 @@ STATE_BROADCAST_BYTES = 256 << 20
 #: `relax_rounds` cuts the round state's lineage every CUT_EVERY rounds
 #: and at the last round.
 CUT_EVERY = 3
+
+#: `shrink_rounds` hands the residual to the operator's driver-local tail
+#: once it has at most TAIL_ROWS rows.
+TAIL_ROWS = 50_000
 
 
 def cut_lineage(df: DataFrame) -> DataFrame:
@@ -201,6 +212,153 @@ def relax_rounds(
         if keys is not None:
             release(static)
     return state
+
+
+class ShrinkRound:
+    """One round of `shrink_rounds` as its `step` sees it: `index` is the
+    number of rounds already run. Frames the step materializes through
+    this handle belong to the loop, which releases them (see `cut`,
+    `carry`, `hold`, `emit`)."""
+
+    def __init__(self, index: int):
+        self.index = index
+        self.held: list[DataFrame] = []  # released once this round's residual is cut
+        self.carried: list[DataFrame] = []  # released once the next round's is
+        self.emitted: list[DataFrame] = []  # kept for the result
+
+    def cut(self, df: DataFrame) -> DataFrame:
+        """`cut_lineage(df)`, held until this round's residual is cut."""
+        df = cut_lineage(df)
+        self.held.append(df)
+        return df
+
+    def carry(self, df: DataFrame) -> DataFrame:
+        """`cut_lineage(df)`, kept through the next round as well."""
+        df = cut_lineage(df)
+        self.carried.append(df)
+        return df
+
+    def hold(self, df: DataFrame) -> DataFrame:
+        """Take over a frame the step persisted itself; released as `cut`'s."""
+        self.held.append(df)
+        return df
+
+    def emit(self, df: DataFrame) -> DataFrame:
+        """`cut_lineage(df)`, kept as part of the loop's result."""
+        df = cut_lineage(df)
+        self.emitted.append(df)
+        return df
+
+
+def shrink_rounds(
+    name: str,
+    residual: DataFrame,
+    step: Callable[[DataFrame, ShrinkRound], DataFrame | None],
+    max_rounds: int,
+    *,
+    tail: Callable[[list, int], tuple[DataFrame, int]] | None = None,
+    finish: Callable[[DataFrame], DataFrame] | None = None,
+    fixpoint: bool = False,
+    size: Column | None = None,
+) -> DataFrame:
+    """Run an operator whose rounds rewrite a shrinking frame — an edge
+    set being peeled, matched or contracted — rather than a per-node
+    state (those run on `relax_rounds`). Returns one frame that a single
+    `release` frees.
+
+    Each round `step(residual, rnd)` returns the next residual (lazy),
+    or None when the round finds `residual` already final. The loop cuts
+    the residual's lineage and reads its row count from a
+    `DataFrame.observe` metric on that cut, so sizing costs no job of
+    its own; `size` (an aggregate Column) replaces the row count as the
+    size the tail cutover compares, when the residual also carries rows
+    the operator does not count. It stops when the residual is empty,
+    when `step` returns None, or, with `fixpoint` (rounds that only ever
+    delete rows), when a round leaves the row count unchanged.
+
+    Driver-local tail: once the residual's size is at most TAIL_ROWS,
+    its rows are collected and `tail(rows, index)` finishes the job on
+    the driver, returning a local frame and the number of rounds it ran;
+    it is skipped when the session does not broadcast
+    (`session_broadcast_bytes(spark) == 0`), which runs every round in
+    Spark. ConvergenceError(name, max_rounds) is raised when neither the
+    rounds nor the tail finish within `max_rounds` rounds.
+
+    Result: the frames the steps `emit`-ed, followed by the tail's frame
+    or by `finish(residual)` (default: the residual itself), as one
+    lineage-cut frame; a lone tail frame or residual is returned as is.
+
+    Ownership: the residual the loop cut is released once the next one
+    is cut; a step's `cut`/`hold` frames then too, its `carry` frames a
+    round later, and everything left (emitted frames included) once the
+    result is built, or on an exception.
+    """
+    spark = residual.sparkSession
+    use_tail = tail is not None and session_broadcast_bytes(spark) > 0
+    metrics = [F.count(F.lit(1)).alias("rows")]
+    if size is not None:
+        metrics.append(size.alias("size"))
+
+    def cut_residual(df: DataFrame, k: int) -> tuple[DataFrame, int, int]:
+        obs = Observation(f"{name}_residual_{k}")
+        df = cut_lineage(df.observe(obs, *metrics))
+        got = obs.get
+        return df, got["rows"], got.get("size", got["rows"]) or 0
+
+    live: dict[int, DataFrame] = {}  # every frame the loop holds, by id
+
+    def own(dfs) -> None:
+        live.update((id(df), df) for df in dfs)
+
+    def drop(dfs) -> None:
+        for df in dfs:
+            release(live.pop(id(df), df))
+
+    emitted: list[DataFrame] = []
+    carried: list[DataFrame] = []
+    result = None
+    try:
+        residual, rows, n = cut_residual(residual, 0)
+        own([residual])
+        last = None  # the tail's frame, once it ran
+        k = 0
+        while rows:
+            if k == max_rounds:
+                raise ConvergenceError(name, max_rounds)
+            if use_tail and n <= TAIL_ROWS:
+                last, ran = tail(residual.collect(), k)
+                if k + ran > max_rounds:
+                    raise ConvergenceError(name, max_rounds)
+                break
+            rnd = ShrinkRound(k)
+            try:
+                nxt = step(residual, rnd)
+            finally:
+                own(rnd.held + rnd.carried + rnd.emitted)
+            emitted += rnd.emitted
+            if nxt is None:
+                break
+            nxt, nxt_rows, n = cut_residual(nxt, k + 1)
+            own([nxt])
+            k += 1
+            drop([residual, *rnd.held, *carried])
+            stable = fixpoint and nxt_rows == rows
+            residual, rows, carried = nxt, nxt_rows, rnd.carried
+            if stable:
+                break
+        tail_end = last is not None
+        if not tail_end:
+            last = residual if finish is None else finish(residual)
+        pieces = emitted + [last]
+        result = pieces[0]
+        for piece in pieces[1:]:
+            result = result.unionByName(piece)
+        if len(pieces) > 1 or not (tail_end or last is residual):
+            result = cut_lineage(result)
+        return result
+    finally:
+        live.pop(id(result), None)
+        drop(list(live.values()))
 
 
 # --------------------------------------------------------------------------

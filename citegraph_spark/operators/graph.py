@@ -32,13 +32,23 @@ even that set stops fitting, the path is the approximate hop-plot
 
 from __future__ import annotations
 
+import hashlib
+from collections import defaultdict
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
-from ..lineage import cut_lineage, relax_rounds, release, session_broadcast_bytes
+from ..lineage import (
+    ShrinkRound,
+    cut_lineage,
+    relax_rounds,
+    release,
+    session_broadcast_bytes,
+    shrink_rounds,
+)
 from ..sources.local import local_rows
 
 
@@ -762,59 +772,39 @@ def k_core(und_edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
 
     `und_edges`: canonical pairs (a < b), distinct.
 
-    Each round is one degree aggregate + two semi joins; the edge set
-    only shrinks, so rounds get cheaper. Convergence is detected by a
-    stable edge COUNT (the edge set is monotonically decreasing, so
-    equal counts imply equal sets). Round state is localCheckpoint-ed:
-    without lineage truncation the plan doubles per round and the
-    optimizer re-derives every prior peel. Real-world graphs converge in
-    a handful of rounds (peel depth, not diameter); a path graph is the
-    k=2 worst case, hence the max_rounds backstop.
+    Each round is one degree aggregate + two semi joins, run by
+    `lineage.shrink_rounds`; the edge set only shrinks, so rounds get
+    cheaper, and a round that keeps every edge is the fixpoint (equal
+    counts imply equal sets). Real-world graphs converge in a handful of
+    rounds (peel depth, not diameter); a path graph is the k=2 worst
+    case, hence the max_rounds backstop — an unfinished peel still holds
+    sub-k-degree nodes and would read as a valid (larger) core, so it
+    raises ConvergenceError instead.
     """
-    edges = und_edges.transform(cut_lineage)
-    n_edges = edges.count()
-    converged = False
-    for _ in range(max_rounds):
-        if n_edges == 0:
-            converged = True
-            break
-        deg = (
+
+    def degrees(edges: DataFrame, col: str) -> DataFrame:
+        return (
             edges.select(F.col("a").alias("node"))
             .unionByName(edges.select(F.col("b").alias("node")))
             .groupBy("node")
-            .agg(F.count("*").alias("deg"))
+            .agg(F.count("*").alias(col))
         )
-        keep = deg.filter(F.col("deg") >= k).select("node")
-        nxt = (
-            edges.join(
-                keep.withColumnRenamed("node", "ka"),
-                F.col("a") == F.col("ka"),
-                "left_semi",
-            )
-            .join(
-                keep.withColumnRenamed("node", "kb"),
-                F.col("b") == F.col("kb"),
-                "left_semi",
-            )
-            .transform(cut_lineage)
-        )
-        m = nxt.count()
-        if m == n_edges:
-            converged = True
-            break
-        edges, n_edges = nxt, m
-    if not converged:
-        # an unfinished peel still contains sub-k-degree nodes and would
-        # read as a valid (larger) core downstream — fail loudly
-        # (ADVICE r3 silent-partial-result pattern).
-        from ..errors import ConvergenceError
 
-        raise ConvergenceError("k_core", max_rounds)
-    return (
-        edges.select(F.col("a").alias("node"))
-        .unionByName(edges.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("core_deg"))
+    def step(edges: DataFrame, rnd: ShrinkRound) -> DataFrame:
+        keep = degrees(edges, "deg").filter(F.col("deg") >= k).select("node")
+        return edges.join(
+            keep.withColumnRenamed("node", "ka"), F.col("a") == F.col("ka"), "left_semi"
+        ).join(
+            keep.withColumnRenamed("node", "kb"), F.col("b") == F.col("kb"), "left_semi"
+        )
+
+    return shrink_rounds(
+        "k_core",
+        und_edges,
+        step,
+        max_rounds,
+        finish=lambda edges: degrees(edges, "core_deg"),
+        fixpoint=True,
     )
 
 
@@ -1795,9 +1785,17 @@ def betweenness_sampled(
     )
 
 
-def maximal_independent_set(
-    edges: DataFrame, max_rounds: int = 40, local_threshold: int = 50_000
-) -> DataFrame:
+def _md5_round(*cols: str, r: int):
+    """md5 of the columns' decimal strings and the round index, joined by
+    '|' — the same string `_md5_round_local` hashes on the driver."""
+    return F.md5(F.concat_ws("|", *[F.col(c).cast("string") for c in cols], F.lit(str(r))))
+
+
+def _md5_round_local(*parts) -> str:
+    return hashlib.md5("|".join(map(str, parts)).encode()).hexdigest()
+
+
+def maximal_independent_set(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
     """Luby's maximal-independent-set algorithm (Luby 1986) as pure
     DataFrame rounds: each round every still-active node draws a
     deterministic priority md5(node|round); a node enters the MIS iff
@@ -1815,143 +1813,81 @@ def maximal_independent_set(
     (callers with isolated vertices add them directly: they are always
     in the MIS).
 
-    Tail cutover (r13 optimization, guide §1.2): the surviving edge set
-    shrinks geometrically, so after the first couple of rounds the loop
-    degenerates into dozens of 1-3-task rounds whose cost is pure
-    per-round fixed overhead (4 jobs + driver planning each — measured
-    ~4 s of an 8.5 s gate). Once the surviving directed edge set fits
-    `local_threshold` rows, the REMAINING rounds run driver-side over
-    the collected tail — the identical md5-priority recurrence
-    (deterministic by construction, so the result is bit-equal; the
-    gate's independent replay and the oracle certify it), with the same
-    round indices and the same max_rounds bound. The collect is bounded
-    by `local_threshold` rows — driver-sized at any data scale, the
-    same argument as harmonic_centrality's local BFS cutover.
-    Per-round counts ride the round's own checkpoint materialization as
-    observed metrics instead of separate count jobs."""
-    import hashlib
-    from collections import defaultdict
-
-    from pyspark.sql import Observation
-
-    from ..errors import ConvergenceError
-
+    The rounds run on `lineage.shrink_rounds`. The residual is the
+    directed edge set among active nodes plus one (v, v) row per active
+    node, so a node whose neighbors have all left stays active; the tail
+    cutover counts the edges only. Once they fit the tail, the remaining
+    rounds run the identical md5-priority recurrence on the driver, with
+    the same round indices and the same max_rounds bound, so the result
+    is bit-equal (the gate's independent replay and the oracle certify
+    it). A set left with active nodes is independent but NOT maximal,
+    which downstream consumers cannot tell apart, so it raises
+    ConvergenceError instead."""
     base = edges.filter(F.col("src") != F.col("dst"))
-    adj = (
-        base.select("src", "dst")
-        .unionByName(
-            base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    links = base.select("src", "dst").unionByName(
+        base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    n_edges = adj.count()  # materializes the persist
-    obs0 = Observation("mis_active_0")
-    active = (
-        adj.select(F.col("src").alias("node"))
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .transform(cut_lineage)
-    )
-    n_active = obs0.get["n"]
-    cur = adj
-    mis: DataFrame | None = None
-    node_schema = active.schema
+    cur = links.unionByName(links.select("src", F.col("src").alias("dst"))).distinct()
+    spark = edges.sparkSession
+    schema = T.StructType([T.StructField("node", cur.schema["src"].dataType)])
 
-    r = 0
-    while r < max_rounds:
-        if n_active == 0:
-            break
-        if n_edges <= local_threshold:
-            # driver-local finish of the tail rounds (exact same
-            # recurrence, continuing round index)
-            amap: defaultdict[object, set] = defaultdict(set)
-            for row in cur.select("src", "dst").collect():
-                amap[row[0]].add(row[1])
-            act = {row[0] for row in active.collect()}
-            out: set = set()
-            while act and r < max_rounds:
-                p = {
-                    v: hashlib.md5(f"{v}|{r}".encode()).hexdigest()
-                    for v in act
-                }
-                sel_l = {
-                    v
-                    for v in act
-                    if all(p[v] < p[u] for u in amap[v] if u in act)
-                }
-                out |= sel_l
-                rem = set(sel_l)
-                for v in sel_l:
-                    rem |= amap[v] & act
-                act -= rem
-                r += 1
-            if act:
-                adj.unpersist()
-                raise ConvergenceError("maximal_independent_set", max_rounds)
-            n_active = 0
-            if out:
-                tail_df = local_rows(
-                    edges.sparkSession, [(v,) for v in sorted(out)], node_schema
-                )
-                mis = tail_df if mis is None else mis.unionByName(tail_df)
-            break
-        pri = active.withColumn(
-            "p", F.md5(F.concat_ws("|", F.col("node").cast("string"), F.lit(str(r))))
+    def step(cur: DataFrame, rnd: ShrinkRound) -> DataFrame:
+        pri = cur.filter(F.col("src") == F.col("dst")).select(
+            F.col("src").alias("node"), _md5_round("src", r=rnd.index).alias("p")
         )
+        links = cur.filter(F.col("src") != F.col("dst"))
         nbr_min = (
-            cur.join(
-                pri.select(F.col("node").alias("dst"), F.col("p").alias("pd")),
-                "dst",
-            )
+            links.join(pri.select(F.col("node").alias("dst"), F.col("p").alias("pd")), "dst")
             .groupBy(F.col("src").alias("node"))
             .agg(F.min("pd").alias("np"))
         )
-        sel = (
+        sel = rnd.emit(
             pri.join(nbr_min, "node", "left")
             .filter(F.col("np").isNull() | (F.col("p") < F.col("np")))
             .select("node")
-            .transform(cut_lineage)
         )
-        mis = sel if mis is None else mis.unionByName(sel)
-        removed = (
-            sel.unionByName(
-                cur.join(sel.withColumnRenamed("node", "src"), "src").select(
-                    F.col("dst").alias("node")
-                )
+        removed = sel.unionByName(
+            links.join(sel.withColumnRenamed("node", "src"), "src").select(
+                F.col("dst").alias("node")
             )
-            .distinct()
+        ).distinct()
+        return cur.join(removed.withColumnRenamed("node", "src"), "src", "left_anti").join(
+            removed.withColumnRenamed("node", "dst"), "dst", "left_anti"
         )
-        obs_a = Observation(f"mis_active_{r + 1}")
-        active = (
-            active.join(removed, "node", "left_anti")
-            .observe(obs_a, F.count(F.lit(1)).alias("n"))
-            .transform(cut_lineage)
-        )
-        n_active = obs_a.get["n"]
-        obs_e = Observation(f"mis_edges_{r + 1}")
-        cur = (
-            cur.join(active.withColumnRenamed("node", "src"), "src", "left_semi")
-            .join(active.withColumnRenamed("node", "dst"), "dst", "left_semi")
-            .observe(obs_e, F.count(F.lit(1)).alias("n"))
-            .transform(cut_lineage)
-        )
-        n_edges = obs_e.get["n"]
-        r += 1
 
-    adj.unpersist()
-    if n_active != 0:
-        # active nodes remain: the set is independent but NOT maximal,
-        # which downstream consumers cannot distinguish — fail loudly.
-        raise ConvergenceError("maximal_independent_set", max_rounds)
-    if mis is None:
-        return local_rows(edges.sparkSession, [], "node long")
-    return mis
+    def tail(rows, r: int):
+        amap: defaultdict[object, set] = defaultdict(set)
+        act = set()
+        for s, d in rows:
+            if s == d:
+                act.add(s)
+            else:
+                amap[s].add(d)
+        out: set = set()
+        r0 = r
+        while act:
+            p = {v: _md5_round_local(v, r) for v in act}
+            sel = {v for v in act if all(p[v] < p[u] for u in amap[v] if u in act)}
+            out |= sel
+            rem = set(sel)
+            for v in sel:
+                rem |= amap[v] & act
+            act -= rem
+            r += 1
+        return local_rows(spark, [(v,) for v in sorted(out)], schema), r - r0
+
+    return shrink_rounds(
+        "maximal_independent_set",
+        cur,
+        step,
+        max_rounds,
+        tail=tail,
+        finish=lambda cur: cur.select(F.col("src").alias("node")),
+        size=F.sum((F.col("src") != F.col("dst")).cast("long")),
+    )
 
 
-def maximal_matching(
-    edges: DataFrame, max_rounds: int = 40, local_threshold: int = 50_000
-) -> DataFrame:
+def maximal_matching(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
     """Deterministic maximal matching in parallel rounds (the
     Israeli-Itai shape with md5 edge priorities): each round every
     surviving edge draws priority md5(a|b|round); an edge is matched
@@ -1971,136 +1907,91 @@ def maximal_matching(
     undirected, self-loops dropped. Returns (a, b) canonical matched
     pairs.
 
-    Tail cutover (r13 optimization, guide §1.2 — same shape and
-    rationale as maximal_independent_set): once the surviving canonical
-    edge set fits `local_threshold` rows, the remaining rounds run the
-    identical md5-priority recurrence driver-side over the collected
-    tail (continuing round indices, same max_rounds bound; the result
-    is bit-equal by determinism and the gate's independent replay
-    certifies it). The per-round emptiness/size check rides the round's
-    checkpoint as an observed metric instead of a separate count job."""
-    import hashlib
-
-    from pyspark.sql import Observation
-
-    from ..errors import ConvergenceError
-
-    obs0 = Observation("mm_edges_0")
+    The rounds run on `lineage.shrink_rounds`, with the same driver-local
+    tail as maximal_independent_set: once the surviving canonical edge
+    set fits it, the remaining rounds run the identical md5-priority
+    recurrence on the driver (continuing round indices, same max_rounds
+    bound; bit-equal by determinism, and the gate's independent replay
+    certifies it). Surviving edges past max_rounds make a valid but NOT
+    maximal matching, so that raises ConvergenceError."""
     cur = (
         edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
+        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .transform(cut_lineage)
     )
-    n_edges = obs0.get["n"]
-    matched: DataFrame | None = None
-    pair_schema = cur.schema
+    spark = edges.sparkSession
+    schema = cur.schema
 
-    r = 0
-    while r < max_rounds:
-        if n_edges == 0:
-            break
-        if n_edges <= local_threshold:
-            # driver-local finish of the tail rounds (exact same
-            # recurrence, continuing round index)
-            cur_e = {(row[0], row[1]) for row in cur.collect()}
-            out: set = set()
-            while cur_e and r < max_rounds:
-                p = {
-                    e: hashlib.md5(f"{e[0]}|{e[1]}|{r}".encode()).hexdigest()
-                    for e in cur_e
-                }
-                vmin: dict = {}
-                for (a, b), pe_h in p.items():
-                    if a not in vmin or pe_h < vmin[a]:
-                        vmin[a] = pe_h
-                    if b not in vmin or pe_h < vmin[b]:
-                        vmin[b] = pe_h
-                sel_l = {
-                    e
-                    for e in cur_e
-                    if p[e] == vmin[e[0]] and p[e] == vmin[e[1]]
-                }
-                out |= sel_l
-                mv = {v for e in sel_l for v in e}
-                cur_e = {
-                    e for e in cur_e if e[0] not in mv and e[1] not in mv
-                }
-                r += 1
-            if cur_e:
-                raise ConvergenceError("maximal_matching", max_rounds)
-            n_edges = 0
-            if out:
-                tail_df = local_rows(
-                    edges.sparkSession, sorted(out), pair_schema
-                )
-                matched = (
-                    tail_df if matched is None else matched.unionByName(tail_df)
-                )
-            break
-        pe = cur.withColumn(
-            "p",
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.col("a").cast("string"),
-                    F.col("b").cast("string"),
-                    F.lit(str(r)),
-                )
-            ),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        incid = pe.select(F.col("a").alias("v"), "p").unionByName(
-            pe.select(F.col("b").alias("v"), "p")
+    def step(cur: DataFrame, rnd: ShrinkRound) -> DataFrame:
+        pe = cur.withColumn("p", _md5_round("a", "b", r=rnd.index))
+        vmin = (
+            pe.select(F.col("a").alias("v"), "p")
+            .unionByName(pe.select(F.col("b").alias("v"), "p"))
+            .groupBy("v")
+            .agg(F.min("p").alias("mp"))
         )
-        vmin = incid.groupBy("v").agg(F.min("p").alias("mp"))
-        sel = (
-            pe.join(
-                vmin.select(F.col("v").alias("a"), F.col("mp").alias("ma")),
-                "a",
-            )
-            .join(
-                vmin.select(F.col("v").alias("b"), F.col("mp").alias("mb")),
-                "b",
-            )
+        sel = rnd.emit(
+            pe.join(vmin.select(F.col("v").alias("a"), F.col("mp").alias("ma")), "a")
+            .join(vmin.select(F.col("v").alias("b"), F.col("mp").alias("mb")), "b")
             .filter((F.col("p") == F.col("ma")) & (F.col("p") == F.col("mb")))
             .select("a", "b")
-            .transform(cut_lineage)
         )
-        matched = sel if matched is None else matched.unionByName(sel)
         mv = (
             sel.select(F.col("a").alias("v"))
             .unionByName(sel.select(F.col("b").alias("v")))
             .distinct()
         )
-        obs_e = Observation(f"mm_edges_{r + 1}")
-        cur = (
-            pe.join(mv.withColumnRenamed("v", "a"), "a", "left_anti")
-            .join(mv.withColumnRenamed("v", "b"), "b", "left_anti")
-            .select("a", "b")
-            .observe(obs_e, F.count(F.lit(1)).alias("n"))
-            .transform(cut_lineage)
+        return cur.join(mv.withColumnRenamed("v", "a"), "a", "left_anti").join(
+            mv.withColumnRenamed("v", "b"), "b", "left_anti"
         )
-        n_edges = obs_e.get["n"]
-        pe.unpersist()
-        r += 1
 
-    if n_edges != 0:
-        # surviving edges remain: the matching is valid but NOT maximal
-        # — indistinguishable from a complete result downstream, so
-        # refuse rather than return it.
-        raise ConvergenceError("maximal_matching", max_rounds)
-    if matched is None:
-        return local_rows(edges.sparkSession, [], "a long, b long")
-    return matched
+    def tail(rows, r: int):
+        cur_e = {(a, b) for a, b in rows}
+        out: set = set()
+        r0 = r
+        while cur_e:
+            p = {e: _md5_round_local(e[0], e[1], r) for e in cur_e}
+            vmin: dict = {}
+            for (a, b), pe_h in p.items():
+                if a not in vmin or pe_h < vmin[a]:
+                    vmin[a] = pe_h
+                if b not in vmin or pe_h < vmin[b]:
+                    vmin[b] = pe_h
+            sel = {e for e in cur_e if p[e] == vmin[e[0]] and p[e] == vmin[e[1]]}
+            out |= sel
+            mv = {v for e in sel for v in e}
+            cur_e = {e for e in cur_e if e[0] not in mv and e[1] not in mv}
+            r += 1
+        return local_rows(spark, sorted(out), schema), r - r0
+
+    return shrink_rounds("maximal_matching", cur, step, max_rounds, tail=tail)
 
 
-def connected_components_star(
-    edges: DataFrame, max_rounds: int = 50, local_threshold: int = 50_000
-) -> DataFrame:
+class UnionFind:
+    """Disjoint sets over hashable ids (path compression): the driver-side
+    union-find of the connected-components and spanning-forest tails."""
+
+    def __init__(self):
+        self.parent: dict = {}
+
+    def find(self, x):
+        root = x
+        while self.parent.setdefault(root, root) != root:
+            root = self.parent[root]
+        while self.parent[x] != root:
+            self.parent[x], x = root, self.parent[x]
+        return root
+
+    def union(self, a, b) -> bool:
+        """Merge the sets of a and b; False when they were one set already."""
+        ra, rb = self.find(a), self.find(b)
+        if ra == rb:
+            return False
+        self.parent[ra] = rb
+        return True
+
+
+def connected_components_star(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
     """Connected components by alternating large-star / small-star
     rounds (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14) — the scale-proof alternative to hash-min label
@@ -2113,17 +2004,22 @@ def connected_components_star(
     large-star(u): every neighbor v > u reconnects to m(u), the minimum
     of u's closed neighborhood. small-star(u): every neighbor v <= u,
     and u itself, reconnects to m(u). Both are one min-aggregate plus
-    one join per round over the CURRENT edge set, which only shrinks
-    (toward |V| star edges); convergence is detected by multiset
-    equality (count match + empty except).
+    one join per round over the CURRENT edge set. The edge set is final
+    once it is a star forest centered at each component's minimum, the
+    fixpoint of both phases: then every node u either has no smaller
+    neighbor or exactly one neighbor. The large-star phase counts the
+    nodes that break this on its own min-map, as an observed metric, so
+    the check costs no job; a round that counts none stops the loop
+    (`lineage.shrink_rounds`) on the edge set it was handed.
 
     Output: (node, component) with component = min node id reachable,
     for every node with an edge to another node (a self-loop-only node
-    has none) — in logarithmically many rounds on the chain-shaped
-    graphs where hash-min stalls. Every lineage-cut round frame is
-    `release`d once superseded, the rest before return; a result that
-    does not come from the driver-local tail is itself lineage-cut and
-    belongs to the caller.
+    has none). Tail: star rounds preserve each component's node set, so
+    once the edge set fits the tail a driver union-find over it labels
+    the components directly, skipping the remaining near-empty rounds
+    (the gate's driver replay and the oracle certify equality). A
+    partial contraction would give silently wrong labels, so running
+    out of rounds raises ConvergenceError.
     """
 
     def _adj(e: DataFrame) -> DataFrame:
@@ -2131,10 +2027,8 @@ def connected_components_star(
             e.select(F.col("b").alias("u"), F.col("a").alias("n"))
         )
 
-    def _minmap(adj: DataFrame) -> DataFrame:
-        return adj.groupBy("u").agg(
-            F.least(F.min("n"), F.first("u")).alias("m")
-        )
+    def _minmap(adj: DataFrame, *extra) -> DataFrame:
+        return adj.groupBy("u").agg(F.least(F.min("n"), F.first("u")).alias("m"), *extra)
 
     # NOTE (round-8 audit, measured negative result — do not "fix"
     # this again): each star phase references its min-map TWICE (join
@@ -2149,131 +2043,77 @@ def connected_components_star(
     # duplicate aggregate is the cheaper evil; leave it.
     cur = (
         edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
+        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .distinct()
-        .transform(cut_lineage)
     )
+    spark = edges.sparkSession
+    id_t = cur.schema["a"].dataType
+    schema = T.StructType([T.StructField("node", id_t), T.StructField("component", id_t)])
 
-    held = [cur]
-    try:
-        n_cur = cur.count()
-        for _ in range(max_rounds):
-            if 0 <= local_threshold and n_cur <= local_threshold:
-                # Tail cutover (r13 optimization, guide §1.2 — same shape as
-                # the MIS/matching/MST local finishes): star rounds preserve
-                # each component's node set, so the components of the
-                # CURRENT edge set equal the original components and the
-                # final (node, min-id) labelling can be computed directly by
-                # a driver union-find over the collected tail — skipping the
-                # remaining near-empty rounds' fixed costs. Bounded by
-                # local_threshold rows; the gate's driver replay and the
-                # oracle certify equality.
-                rows = cur.collect()
-                uf: dict = {}
-
-                def _find(x):
-                    root = x
-                    while uf.setdefault(root, root) != root:
-                        root = uf[root]
-                    while uf[x] != root:
-                        uf[x], x = root, uf[x]
-                    return root
-
-                for a, b in rows:
-                    ra, rb = _find(a), _find(b)
-                    if ra != rb:
-                        uf[ra] = rb
-                groups: dict = {}
-                for v in uf:
-                    groups.setdefault(_find(v), []).append(v)
-                out_rows = []
-                for members in groups.values():
-                    lbl = min(members)
-                    out_rows.extend((v, lbl) for v in members)
-                from pyspark.sql import types as T
-
-                id_t = cur.schema["a"].dataType
-                sch = T.StructType(
-                    [
-                        T.StructField("node", id_t),
-                        T.StructField("component", id_t),
-                    ]
+    def step(cur: DataFrame, rnd: ShrinkRound) -> DataFrame | None:
+        # large-star; the self-attachment branch's min-map also counts
+        # the nodes that keep `cur` from being a min-centered star forest
+        adj = _adj(cur)
+        obs = Observation()
+        attach = _minmap(
+            adj, ((F.min("n") > F.first("u")) | (F.count("*") == 1)).alias("settled")
+        ).observe(obs, F.sum((~F.col("settled")).cast("long")).alias("unsettled"))
+        m = _minmap(adj)
+        ls = rnd.cut(
+            adj.join(m, "u")
+            .filter(F.col("n") > F.col("u"))
+            .select(F.least("n", "m").alias("a"), F.greatest("n", "m").alias("b"))
+            .filter(F.col("a") != F.col("b"))
+            .unionByName(
+                # keep u's own attachment so components never split
+                attach.filter(F.col("u") != F.col("m")).select(
+                    F.col("m").alias("a"), F.col("u").alias("b")
                 )
-                return local_rows(edges.sparkSession, sorted(out_rows), sch)
-            # large-star
-            adj = _adj(cur)
-            m = _minmap(adj)
-            ls = (
-                adj.join(m, "u")
-                .filter(F.col("n") > F.col("u"))
-                .select(
-                    F.least("n", "m").alias("a"), F.greatest("n", "m").alias("b")
-                )
-                .filter(F.col("a") != F.col("b"))
-                .unionByName(
-                    # keep u's own attachment so components never split
-                    m.filter(F.col("u") != F.col("m")).select(
-                        F.col("m").alias("a"), F.col("u").alias("b")
-                    )
-                )
-                .distinct()
-                .transform(cut_lineage)
             )
-            held.append(ls)
-            # small-star
-            adj2 = _adj(ls)
-            m2 = _minmap(adj2)
-            ss = (
-                adj2.join(m2, "u")
-                .filter(F.col("n") < F.col("u"))
-                .select(
-                    F.least("n", "m").alias("a"), F.greatest("n", "m").alias("b")
-                )
-                .unionByName(
-                    m2.select(F.least("u", "m").alias("a"),
-                              F.greatest("u", "m").alias("b"))
-                )
-                .filter(F.col("a") != F.col("b"))
-                .distinct()
-                .transform(cut_lineage)
+            .distinct()
+        )
+        if not obs.get["unsettled"]:
+            return None
+        # small-star
+        adj2 = _adj(ls)
+        m2 = _minmap(adj2)
+        return (
+            adj2.join(m2, "u")
+            .filter(F.col("n") < F.col("u"))
+            .select(F.least("n", "m").alias("a"), F.greatest("n", "m").alias("b"))
+            .unionByName(
+                m2.select(F.least("u", "m").alias("a"), F.greatest("u", "m").alias("b"))
             )
-            held.append(ss)
-            release(ls)
-            # carried counts: ss/cur are both checkpointed, so the equality
-            # check needs only ONE new count job per round (the previous
-            # round's n_cur is reused)
-            n_ss = ss.count()
-            same = (
-                n_ss == n_cur
-                and ss.exceptAll(cur).limit(1).count() == 0
-            )
-            release(cur)
-            cur, n_cur = ss, n_ss
-            if same:
-                break
-        else:
-            # the final extraction below assumes a converged star forest
-            # (one-hop min of incident smaller endpoints); on a partial
-            # contraction it returns silently wrong labels, so refuse.
-            from ..errors import ConvergenceError
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
+        )
 
-            raise ConvergenceError("connected_components_star", max_rounds)
+    def tail(rows, r: int):
+        uf = UnionFind()
+        for a, b in rows:
+            uf.union(a, b)
+        groups: dict = {}
+        for v in uf.parent:
+            groups.setdefault(uf.find(v), []).append(v)
+        out = []
+        for members in groups.values():
+            lbl = min(members)
+            out.extend((v, lbl) for v in members)
+        return local_rows(spark, sorted(out), schema), 0
 
-        # converged star set: every edge is (component-min, member)
+    def finish(cur: DataFrame) -> DataFrame:
+        # a star forest: every edge is (component-min, member)
         centers = cur.select(F.col("a").alias("node"), F.col("a").alias("component"))
         members = cur.select(F.col("b").alias("node"), F.col("a").alias("component"))
         return (
             members.unionByName(centers)
             .groupBy("node")
             .agg(F.min("component").alias("component"))
-            .transform(cut_lineage)
         )
-    finally:
-        for df in held:
-            release(df)
+
+    return shrink_rounds(
+        "connected_components_star", cur, step, max_rounds, tail=tail, finish=finish
+    )
 
 
 def edge_support(
@@ -2288,7 +2128,7 @@ def edge_support(
     edges with support >= 1; zero-support edges have no row.
 
     `_pins` selects the materialization mode for the oriented table.
-    With a list supplied (k_truss above its pin threshold), it is
+    With a list supplied (k_truss's distributed rounds), it is
     persisted hash-partitioned on `u` (NOT localCheckpoint-ed, which
     scans back as UnknownPartitioning — the round-7 lesson), so the
     wedge-enumerating self-join on `u` needs NO Exchange on either
@@ -2367,103 +2207,61 @@ def edge_support(
     return tri_edges.groupBy("a", "b").agg(F.count("*").alias("support"))
 
 
-def k_truss(
-    edges: DataFrame,
-    k: int,
-    max_rounds: int = 30,
-    local_threshold: int = 50_000,
-) -> DataFrame:
+def k_truss(edges: DataFrame, k: int, max_rounds: int = 30) -> DataFrame:
     """k-truss decomposition by iterative support peeling (Cohen 2008):
     repeatedly delete every edge lying in fewer than k-2 triangles of
     the CURRENT subgraph until none remains — the standard cohesive-
     subgraph notion one step stronger than k-core (it requires tied-
     together neighborhoods, not just degree). Each round is one
     triangle enumeration over the surviving edges (which only shrink)
-    plus a semi join; rounds are bounded by the peeling depth, and the
+    plus a semi join, run by `lineage.shrink_rounds` until a round
+    deletes nothing; rounds are bounded by the peeling depth, and the
     certificate that the FINAL edge set is truly a k-truss (min support
     >= k-2) is itself one distributed edge_support pass — checkable at
     any scale without the driver replay the gate adds at test sizes.
+
+    Tail: the k-truss is the unique maximal subgraph with every edge in
+    >= k-2 triangles, and simultaneous peeling converges to it from any
+    intermediate state, so once the surviving edges fit the tail the
+    peel finishes on the driver with the identical edge set (a
+    distributed peel round is a triangle enumeration + semi join + cut
+    even when it deletes nothing).
 
     edges: (src, dst) undirected; returns canonical (a, b) pairs of the
     k-truss subgraph (empty when no edge survives). For k <= 2 the
     support requirement is vacuous and the whole simple graph is
     returned — including support-0 edges, which edge_support emits no
-    row for."""
+    row for, so that case never reaches the peel."""
     cur = (
         edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
+        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .distinct()
-        .transform(cut_lineage)
     )
     need = k - 2
     if need <= 0:
-        # the (k<=2)-truss is the whole simple graph: every edge needs
-        # >= 0 supporting triangles, including support-0 edges, which
-        # edge_support emits NO row for — a semi join against it would
-        # silently drop them, so short-circuit before the peel loop.
         return cur
-    converged = False
-    for _ in range(max_rounds):
-        n_before = cur.count()
-        if n_before == 0:
-            converged = True
-            break
-        if 0 <= local_threshold and n_before <= local_threshold:
-            # Tail cutover (r13 optimization, guide §1.2 — same shape as
-            # the MIS/matching/MST local finishes): the k-truss is the
-            # unique maximal subgraph with every edge in >= k-2
-            # triangles, and simultaneous peeling converges to it from
-            # any intermediate state, so finishing the peel driver-side
-            # over the collected tail emits the identical edge set
-            # without the remaining rounds' fixed costs (a full
-            # distributed peel round is a triangle enumeration + semi
-            # join + checkpoint even when it deletes nothing). Bounded
-            # by local_threshold rows; the gate's driver replay and the
-            # oracle certify equality.
-            from collections import defaultdict
+    spark = edges.sparkSession
+    schema = cur.schema
 
-            es = {(row[0], row[1]) for row in cur.collect()}
-            while True:
-                nbrs: defaultdict = defaultdict(set)
-                for a, b in es:
-                    nbrs[a].add(b)
-                    nbrs[b].add(a)
-                drop = {
-                    e for e in es if len(nbrs[e[0]] & nbrs[e[1]]) < need
-                }
-                if not drop:
-                    break
-                es -= drop
-            converged = True
-            return local_rows(
-                edges.sparkSession, sorted(es), cur.schema
-            )
-        # pin the oriented table's partitioning only once the surviving
-        # edge set is past plausible broadcast size (same idea as
-        # pagerank's broadcast budget): below it, AQE broadcasts the
-        # wedge self-join and the repartition pass would be overhead;
-        # above it, the pin removes the per-round 2x O(E') exchange.
-        pins: list[DataFrame] = []
-        if n_before * 48 > 10 << 20:
-            sup = edge_support(cur, _pins=pins)
-        else:
-            sup = edge_support(cur)
+    def step(cur: DataFrame, rnd: ShrinkRound) -> DataFrame:
+        # a residual past the tail is past plausible broadcast size too:
+        # pin the oriented table's partitioning, which removes the
+        # per-round 2x O(E') exchange of the wedge self-join
+        sup = edge_support(cur, _pins=rnd.held)
         keep = sup.filter(F.col("support") >= need).select("a", "b")
-        nxt = cur.join(keep, ["a", "b"], "left_semi").transform(cut_lineage)
-        # the eager checkpoint materialized the whole round; release
-        # the round's pinned oriented-edge cache before the next peel
-        for p in pins:
-            p.unpersist()
-        n_after = nxt.count()
-        cur = nxt
-        if n_after == n_before:
-            converged = True
-            break
-    if not converged:
-        from ..errors import ConvergenceError
+        return cur.join(keep, ["a", "b"], "left_semi")
 
-        raise ConvergenceError("k_truss", max_rounds)
-    return cur
+    def tail(rows, r: int):
+        es = {(a, b) for a, b in rows}
+        while True:
+            nbrs: defaultdict = defaultdict(set)
+            for a, b in es:
+                nbrs[a].add(b)
+                nbrs[b].add(a)
+            drop = {e for e in es if len(nbrs[e[0]] & nbrs[e[1]]) < need}
+            if not drop:
+                break
+            es -= drop
+        return local_rows(spark, sorted(es), schema), 0
+
+    return shrink_rounds("k_truss", cur, step, max_rounds, tail=tail, fixpoint=True)

@@ -32,13 +32,12 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..lineage import cut_lineage
+from ..lineage import ShrinkRound, release, shrink_rounds
 from ..sources.local import local_rows
+from .graph import UnionFind
 
 
-def minimum_spanning_forest(
-    edges: DataFrame, max_rounds: int = 20, local_threshold: int = 50_000
-) -> DataFrame:
+def minimum_spanning_forest(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     """Borůvka MSF over an undirected weighted graph.
 
     edges: (src, dst, weight) — interpreted undirected; parallel edges
@@ -46,6 +45,22 @@ def minimum_spanning_forest(
     minimum weight; self-loops dropped. Returns (a, b, weight): the
     unique minimum spanning forest under the (weight, a, b) total
     order, one component per connected component of the input.
+
+    The rounds run on `lineage.shrink_rounds`. The carried state is the
+    node -> component map; the residual is the cross-component edge set
+    `ec`, re-derived from the static edge table and the new map at the
+    end of each round, so the loop stops once no cross edge is left and
+    each round emits the edges its components picked.
+
+    Tail: the edges Borůvka would still add from a state are exactly the
+    MSF of the CONTRACTED multigraph (components as vertices, surviving
+    cross edges as candidates) under the same strict (weight, a, b)
+    total order — which is unique, so once `ec` fits the tail a driver
+    Kruskal over it emits the identical edge set without the remaining
+    rounds' fixed costs (the gate's full-graph Kruskal replay and the
+    oracle certify the equality). Cross edges left after max_rounds mean
+    missing forest edges, which would read as a valid (smaller) MSF, so
+    that raises ConvergenceError.
 
     Join-strategy note (round-8 100x A/B): the per-round label joins
     deliberately carry NO broadcast()/hint() override. Forcing the
@@ -79,93 +94,41 @@ def minimum_spanning_forest(
         # would scan back as UnknownPartitioning), the cached scan
         # satisfies round joins' distribution directly; only the O(V)
         # comp table and the join-1 output (keyed by `b`) shuffle per
-        # round — both inherent, since comp rewires every round.
+        # round — both inherent, since comp rewires every round. The
+        # first residual's cut materializes it.
         .repartition(n_shuffle, "a")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    e.count()  # materialize the pinned layout once
-    comp = (
+    comp = (  # node -> component; every node starts as its own
         e.select(F.col("a").alias("node"))
         .unionByName(e.select(F.col("b").alias("node")))
         .distinct()
         .select("node", F.col("node").alias("comp"))
-        .transform(cut_lineage)
     )
-    forest: DataFrame | None = None
 
-    converged = False
-    for _ in range(max_rounds):
+    def cross_edges(comp: DataFrame) -> DataFrame:
         ca = comp.select(F.col("node").alias("a"), F.col("comp").alias("ca"))
         cb = comp.select(F.col("node").alias("b"), F.col("comp").alias("cb"))
-        ec = (
+        return (
             e.join(ca, "a")
             .join(cb, "b")
             .filter(F.col("ca") != F.col("cb"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .select("ca", "cb", "a", "b", "weight")
         )
-        # bounded emptiness/size probe: limit(threshold+1) keeps the
-        # probe O(threshold) instead of materializing the full ec when
-        # the round will stay distributed anyway
-        probe = local_threshold + 1 if local_threshold >= 0 else 1
-        n_ec = ec.limit(probe).count()
-        if n_ec == 0:
-            ec.unpersist()
-            converged = True
-            break
-        if 0 <= local_threshold and n_ec <= local_threshold:
-            # Tail cutover (r13 optimization, guide §1.2 — same shape as
-            # the MIS/matching local finishes): the edges Borůvka would
-            # still add from this state are exactly the MSF of the
-            # CONTRACTED multigraph (components as vertices, surviving
-            # cross edges as candidates) under the same strict
-            # (weight, a, b) total order — which is unique, so a driver
-            # Kruskal over the collected component-labelled tail emits
-            # the identical edge set without paying the remaining
-            # rounds' fixed costs (each late round is ~6 near-empty
-            # jobs). Bounded by local_threshold rows — driver-sized at
-            # any data scale; the gate's full-graph Kruskal replay and
-            # the oracle certify the equality.
-            rows = ec.select("ca", "cb", "a", "b", "weight").collect()
-            ec.unpersist()
-            uf: dict = {}
 
-            def _find(x):
-                root = x
-                while uf.setdefault(root, root) != root:
-                    root = uf[root]
-                while uf[x] != root:
-                    uf[x], x = root, uf[x]
-                return root
-
-            tail_rows = []
-            for r in sorted(rows, key=lambda t: (t[4], t[2], t[3])):
-                ra, rb = _find(r[0]), _find(r[1])
-                if ra != rb:
-                    uf[ra] = rb
-                    tail_rows.append((r[2], r[3], r[4]))
-            if tail_rows:
-                tail_df = local_rows(spark, tail_rows, e.schema)
-                forest = (
-                    tail_df if forest is None else forest.unionByName(tail_df)
-                )
-            converged = True
-            break
-
+    def step(ec: DataFrame, rnd: ShrinkRound) -> DataFrame:
+        nonlocal comp
         # each component nominates its minimum outgoing edge under the
         # strict (weight, a, b) order; min_by is a hash aggregate, so
         # this is one shuffle on the component id, no window sort
         cand = ec.select(
-            F.col("ca").alias("comp"),
-            F.col("cb").alias("other"),
-            "a", "b", "weight",
+            F.col("ca").alias("comp"), F.col("cb").alias("other"), "a", "b", "weight"
         ).unionByName(
             ec.select(
-                F.col("cb").alias("comp"),
-                F.col("ca").alias("other"),
-                "a", "b", "weight",
+                F.col("cb").alias("comp"), F.col("ca").alias("other"), "a", "b", "weight"
             )
         )
-        chosen = (
+        chosen = rnd.hold(
             cand.groupBy("comp")
             .agg(
                 F.min_by(
@@ -176,10 +139,7 @@ def minimum_spanning_forest(
             .select("comp", "e.a", "e.b", "e.weight", "e.other")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-
-        picked = chosen.select("a", "b", "weight").distinct()
-        forest = picked if forest is None else forest.unionByName(picked)
-        forest = forest.transform(cut_lineage)
+        rnd.emit(chosen.select("a", "b", "weight").distinct())
 
         # merge components along the chosen pointers (comp -> other).
         # Every comp with a cross edge has exactly one pointer; mutual
@@ -192,7 +152,7 @@ def minimum_spanning_forest(
         # minimum edge — root it at the smaller endpoint. Jumping past a
         # root onto its 2-cycle partner is harmless: the partner's own
         # pointer resolves to the root on the next doubling.
-        parent = (
+        parent = rnd.cut(
             p.alias("x")
             .join(p.alias("y"), F.col("x.other") == F.col("y.comp"))
             .select(
@@ -204,27 +164,18 @@ def minimum_spanning_forest(
                 .otherwise(F.col("y.other"))
                 .alias("parent"),
             )
-            .transform(cut_lineage)
         )
-        jumps = 0
-        while True:
-            # convergence rides the checkpoint materialization as an
-            # observed metric (r13 optimization, guide §1.2 — same idiom
-            # as the hyperball round estimate): a pointer moved this jump
-            # iff grand != parent on the joined row, so summing that flag
-            # under `observe` makes the doubling jump its OWN convergence
-            # check — the separate jumped-vs-parent join+count job that
-            # previously ran every 2nd jump is gone, and convergence is
-            # now seen every jump (one fewer idempotent doubling when the
-            # depth was even). The final parent table is unchanged: a
+        moved = 1
+        while moved:
+            # a pointer moved this jump iff grand != parent on the joined
+            # row; summing that flag under `observe` makes the doubling
+            # jump its OWN convergence check, with no separate job. The
             # jump at convergence is the identity.
-            obs = Observation(f"msf_jump_{jumps}")
-            jumped = (
-                parent.alias("x")
-                .join(
+            obs = Observation()
+            parent = rnd.cut(
+                parent.join(
                     parent.select(
-                        F.col("comp").alias("parent"),
-                        F.col("parent").alias("grand"),
+                        F.col("comp").alias("parent"), F.col("parent").alias("grand")
                     ),
                     "parent",
                 )
@@ -233,58 +184,35 @@ def minimum_spanning_forest(
                     F.col("grand").alias("parent"),
                     (F.col("parent") != F.col("grand")).alias("_moved"),
                 )
-                .observe(
-                    obs, F.sum(F.col("_moved").cast("bigint")).alias("moved")
-                )
-                .transform(cut_lineage)
-            )
-            jumps += 1
-            moved = obs.get["moved"] or 0
-            parent = jumped.drop("_moved")
-            if moved == 0:
-                break
-        comp = (
-            comp.join(parent.withColumnRenamed("comp", "_c"),
-                      F.col("comp") == F.col("_c"), "left")
-            .select(
-                "node",
-                F.coalesce("parent", "comp").alias("comp"),
-            )
-            .transform(cut_lineage)
+                .observe(obs, F.sum(F.col("_moved").cast("bigint")).alias("moved"))
+            ).drop("_moved")
+            moved = obs.get["moved"]
+        comp = rnd.carry(
+            comp.join(parent.withColumnRenamed("comp", "_c"), F.col("comp") == F.col("_c"), "left")
+            .select("node", F.coalesce("parent", "comp").alias("comp"))
         )
-        ec.unpersist()
-        chosen.unpersist()
+        return cross_edges(comp)
 
-    if not converged:
-        # round cap hit before the head-of-loop emptiness check fired;
-        # recheck directly (the final round may have merged the last
-        # components). If cross-component edges remain, the forest is
-        # missing edges and would read as a valid (smaller) MSF
-        # downstream — fail loudly instead.
-        remaining = (
-            e.join(
-                comp.select(F.col("node").alias("a"), F.col("comp").alias("ca")),
-                "a",
-            )
-            .join(
-                comp.select(F.col("node").alias("b"), F.col("comp").alias("cb")),
-                "b",
-            )
-            .filter(F.col("ca") != F.col("cb"))
-            .limit(1)
-            .count()
-        )
-        if remaining != 0:
-            e.unpersist()
-            from ..errors import ConvergenceError
+    def tail(rows, r: int):
+        uf = UnionFind()
+        forest = [
+            (a, b, w)
+            for ca, cb, a, b, w in sorted(rows, key=lambda t: (t[4], t[2], t[3]))
+            if uf.union(ca, cb)
+        ]
+        return local_rows(spark, forest, e.schema), 0
 
-            raise ConvergenceError("minimum_spanning_forest", max_rounds)
-    e.unpersist()
-    if forest is None:
-        return local_rows(
-            edges.sparkSession, [], "a long, b long, weight double"
+    try:
+        return shrink_rounds(
+            "minimum_spanning_forest",
+            e.select(F.col("a").alias("ca"), F.col("b").alias("cb"), "a", "b", "weight"),
+            step,
+            max_rounds,
+            tail=tail,
+            finish=lambda ec: ec.select("a", "b", "weight"),
         )
-    return forest
+    finally:
+        release(e)
 
 
 def kruskal_reference(pairs: list[tuple]) -> set[tuple]:

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fixtures import edges_values_sql, fixture_citations
+from ..lineage import release
 from ..sources.local import local_rows
 from ..sources.tables import load_table
 from .entry_queries import _CIT_SQL, _citations, register
@@ -530,10 +531,9 @@ def graph_mst_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = raw.select(
         F.col("a").alias("src"), F.col("b").alias("dst"), "weight"
     )
-    got = {
-        (r["a"], r["b"], r["weight"])
-        for r in minimum_spanning_forest(edges).collect()
-    }
+    forest = minimum_spanning_forest(edges)
+    got = {(r["a"], r["b"], r["weight"]) for r in forest.collect()}
+    release(forest)
     ref = kruskal_reference(
         [(r["a"], r["b"], r["weight"]) for r in raw.collect()]
     )
@@ -599,7 +599,7 @@ def graph_mis_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "graph_mis_gate: induced subgraph exceeds 500k edges; "
             "raise the induction modulus for this data scale"
         )
-    mis_df = maximal_independent_set(raw).persist()
+    mis_df = maximal_independent_set(raw)
     got = {r["node"] for r in mis_df.collect()}
 
     # driver replay of the same deterministic rounds
@@ -665,7 +665,7 @@ def graph_mis_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("uncovered"),
     ).collect()[0]
     raw.unpersist()
-    mis_df.unpersist()
+    release(mis_df)
     return local_rows(
         spark,
         [
@@ -733,7 +733,7 @@ def graph_matching_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     m_df = maximal_matching(
         raw.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    ).persist()
+    )
     got = {(r["a"], r["b"]) for r in m_df.collect()}
 
     # driver replay
@@ -783,7 +783,7 @@ def graph_matching_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mv.unpersist()
     raw.unpersist()
-    m_df.unpersist()
+    release(m_df)
     return local_rows(
         spark,
         [(nodes, got == ref, bool(valid), uncovered == 0)],
@@ -834,10 +834,9 @@ def graph_cc_star_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "graph_cc_star_gate: induced subgraph exceeds 500k edges; "
             "raise the induction modulus for this data scale"
         )
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components_star(raw).collect()
-    }
+    comp = connected_components_star(raw)
+    got = {r["node"]: r["component"] for r in comp.collect()}
+    release(comp)
 
     parent: dict = {}
 
@@ -928,7 +927,7 @@ def graph_ktruss_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket modulus for this data scale"
         )
     K = 4
-    truss = k_truss(proj, K).persist()
+    truss = k_truss(proj, K)
     got = {(r["a"], r["b"]) for r in truss.collect()}
 
     # distributed certificate: min support of the final subgraph. ONE
@@ -967,7 +966,7 @@ def graph_ktruss_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             break
         cur = nxt
     proj.unpersist()
-    truss.unpersist()
+    release(truss)
     return local_rows(
         spark,
         [(n_edges, got == cur, bool(min_ok))],

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from citegraph_spark.fixtures import fixture_citations, fixture_published
@@ -123,7 +125,7 @@ def test_max_d_cap_on_path_graph(spark):
     assert rows[-1].pairs == sum(25 - k for k in range(1, 21))
 
 
-def test_connected_components_hand_graph(spark):
+def test_connected_components_hand_graph(spark, broadcast_off):
     """The driver-local tail (default) and the distributed star rounds."""
     from citegraph_spark.operators.graph import connected_components_star
 
@@ -131,14 +133,13 @@ def test_connected_components_hand_graph(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "src int, dst int"
     )
-    for local_threshold in (50_000, -1):
-        got = {
-            r["node"]: r["component"]
-            for r in connected_components_star(
-                edges, local_threshold=local_threshold
-            ).collect()
-        }
-        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}, local_threshold
+    for scope in (contextlib.nullcontext, broadcast_off):
+        with scope():
+            got = {
+                r["node"]: r["component"]
+                for r in connected_components_star(edges).collect()
+            }
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}, scope
 
 
 @pytest.mark.parametrize("year", [1997, 1998])

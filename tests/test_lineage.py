@@ -29,13 +29,16 @@ def test_default_path_is_localcheckpoint(spark, edges):
     assert out.count() == 6
 
 
-def test_reliable_mode_matches_default_and_writes_files(spark, edges, tmp_path):
+def test_reliable_mode_matches_default_and_writes_files(
+    spark, broadcast_off, edges, tmp_path
+):
     from citegraph_spark.operators.graph import connected_components_star, pagerank
 
     def cc() -> set:
-        # local_threshold=-1: every star round goes through cut_lineage
-        star = connected_components_star(edges.select("src", "dst"), local_threshold=-1)
-        return {tuple(r) for r in star.collect()}
+        # broadcast_off: every star round goes through cut_lineage
+        with broadcast_off():
+            star = connected_components_star(edges.select("src", "dst"))
+            return {tuple(r) for r in star.collect()}
 
     base_pr = {
         (r["node"], round(r["rank"], 9))

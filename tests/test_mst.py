@@ -133,11 +133,11 @@ def _check_matching(pairs, m):
     assert all(a in mv or b in mv for a, b in canon)
 
 
-def test_mis_matching_local_cutover_matches_distributed(spark):
+def test_mis_matching_local_cutover_matches_distributed(spark, broadcast_off):
     """The r13 driver-local tail finish must agree bit-for-bit with the
-    pure-distributed rounds (local_threshold=-1 disables the cutover;
-    the default takes it immediately on graphs this small). Random
-    graphs + a long path (many rounds) + isolated-active shapes."""
+    pure-distributed rounds (`broadcast_off` disables the cutover; the
+    default takes it immediately on graphs this small). Random graphs +
+    a long path (many rounds) + isolated-active shapes."""
     import random
 
     from citegraph_spark.operators.graph import (
@@ -156,24 +156,18 @@ def test_mis_matching_local_cutover_matches_distributed(spark):
         mis_local = {
             r["node"] for r in maximal_independent_set(df).collect()
         }
-        mis_dist = {
-            r["node"]
-            for r in maximal_independent_set(
-                df, local_threshold=-1
-            ).collect()
-        }
+        with broadcast_off():
+            mis_dist = {r["node"] for r in maximal_independent_set(df).collect()}
         assert mis_local == mis_dist
         m_local = {
             (r["a"], r["b"]) for r in maximal_matching(df).collect()
         }
-        m_dist = {
-            (r["a"], r["b"])
-            for r in maximal_matching(df, local_threshold=-1).collect()
-        }
+        with broadcast_off():
+            m_dist = {(r["a"], r["b"]) for r in maximal_matching(df).collect()}
         assert m_local == m_dist
 
 
-def test_ccstar_ktruss_local_cutover_matches_distributed(spark):
+def test_ccstar_ktruss_local_cutover_matches_distributed(spark, broadcast_off):
     """The r13 union-find / local-peel tail finishes must agree with the
     pure-distributed rounds."""
     import random
@@ -191,25 +185,22 @@ def test_ccstar_ktruss_local_cutover_matches_distributed(spark):
             (r["node"], r["component"])
             for r in connected_components_star(df).collect()
         }
-        cc_dist = {
-            (r["node"], r["component"])
-            for r in connected_components_star(
-                df, local_threshold=-1
-            ).collect()
-        }
+        with broadcast_off():
+            cc_dist = {
+                (r["node"], r["component"])
+                for r in connected_components_star(df).collect()
+            }
         assert cc_local == cc_dist
         for k in (3, 4):
             kt_local = {
                 (r["a"], r["b"]) for r in k_truss(df, k).collect()
             }
-            kt_dist = {
-                (r["a"], r["b"])
-                for r in k_truss(df, k, local_threshold=-1).collect()
-            }
+            with broadcast_off():
+                kt_dist = {(r["a"], r["b"]) for r in k_truss(df, k).collect()}
             assert kt_local == kt_dist
 
 
-def test_mst_local_cutover_matches_distributed(spark):
+def test_mst_local_cutover_matches_distributed(spark, broadcast_off):
     """The r13 local-Kruskal tail finish must emit the identical forest
     as pure-distributed Borůvka rounds (unique MSF under the strict
     (weight, a, b) order)."""
@@ -228,10 +219,11 @@ def test_mst_local_cutover_matches_distributed(spark):
             (r["a"], r["b"], r["weight"])
             for r in minimum_spanning_forest(df).collect()
         }
-        got_dist = {
-            (r["a"], r["b"], r["weight"])
-            for r in minimum_spanning_forest(df, local_threshold=-1).collect()
-        }
+        with broadcast_off():
+            got_dist = {
+                (r["a"], r["b"], r["weight"])
+                for r in minimum_spanning_forest(df).collect()
+            }
         assert got_local == got_dist
 
 
@@ -377,7 +369,7 @@ def test_ktruss_crafted_and_random(spark):
 
 
 def test_edge_support_pinned_mode_matches_and_skips_exchange(spark):
-    """edge_support's pinned mode (k_truss above its pin threshold) must
+    """edge_support's pinned mode (k_truss's distributed rounds) must
     return identical supports to the default localCheckpoint mode, hand
     the persisted oriented table back via _pins, and — with broadcast
     disabled, i.e. the at-scale strategy — plan the wedge self-join
@@ -473,7 +465,7 @@ def test_ktruss_k2_keeps_support0_edges(spark):
     assert got1 == got
 
 
-def test_iterative_ops_raise_on_round_exhaustion(spark):
+def test_iterative_ops_raise_on_round_exhaustion(spark, broadcast_off):
     """Round-capped fixpoint loops must fail loudly instead of returning
     a silently partial result when max_rounds is exhausted (ADVICE r3)."""
     import pytest
@@ -491,8 +483,8 @@ def test_iterative_ops_raise_on_round_exhaustion(spark):
     edges = spark.createDataFrame(pairs, "src long, dst long")
     # cc_star's raise is likewise a distributed-rounds property: the r13
     # union-find cutover always completes (never a partial labelling)
-    with pytest.raises(ConvergenceError):
-        connected_components_star(edges, max_rounds=1, local_threshold=-1)
+    with broadcast_off(), pytest.raises(ConvergenceError):
+        connected_components_star(edges, max_rounds=1)
     assert (
         connected_components_star(edges, max_rounds=1).count() == 40
     )
@@ -512,8 +504,8 @@ def test_iterative_ops_raise_on_round_exhaustion(spark):
     # Kruskal cutover finishes the whole remaining forest in one step
     # (never a partial result), so with the default threshold the same
     # call now completes instead of raising
-    with pytest.raises(ConvergenceError):
-        minimum_spanning_forest(wedges, max_rounds=1, local_threshold=-1)
+    with broadcast_off(), pytest.raises(ConvergenceError):
+        minimum_spanning_forest(wedges, max_rounds=1)
     assert minimum_spanning_forest(wedges, max_rounds=1).count() == len(
         light
     ) + len(heavy)

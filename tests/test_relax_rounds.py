@@ -1,6 +1,8 @@
 """`lineage.relax_rounds` and the operators that run on it (pagerank,
 hits, sssp_bounded, multi_source_bfs, HyperBall, label_propagation), plus
-the lineage-cut state of connected_components_star.
+the ownership of the `lineage.shrink_rounds` operators (k_core, k_truss,
+maximal_independent_set, maximal_matching, connected_components_star,
+minimum_spanning_forest).
 
 The round state is broadcast while it fits the round-state budget; with
 `spark.sql.autoBroadcastJoinThreshold=-1` (the `broadcast_off` fixture)
@@ -22,14 +24,20 @@ from citegraph_spark.fixtures import fixture_citations, fixture_published
 from citegraph_spark.functions.sketches import hyperball_hopplot
 from citegraph_spark.lineage import relax_rounds, release
 from citegraph_spark.operators.graph import (
+    canonical_pairs,
     connected_components_star,
     hits,
+    k_core,
+    k_truss,
     label_propagation,
+    maximal_independent_set,
+    maximal_matching,
     multi_source_bfs,
     pagerank,
     snapshot_edges,
     sssp_bounded,
 )
+from citegraph_spark.operators.mst import minimum_spanning_forest
 
 
 def _directed(spark) -> DataFrame:
@@ -159,8 +167,10 @@ def test_one_round_keeps_the_static_partitioning(spark, broadcast_off, tier):
 
 
 def test_ported_operators_release_their_state(spark, broadcast_off):
-    """One session: each operator on both tiers. Once its result is
-    released, no persisted RDD is left that was not there before."""
+    """One session: each operator on both tiers (for the shrink_rounds
+    operators: with the driver-local tail and with every round in Spark).
+    Once its result is released, no persisted RDD is left that was not
+    there before."""
     sc = spark.sparkContext
 
     def persisted() -> set:
@@ -174,9 +184,11 @@ def test_ported_operators_release_their_state(spark, broadcast_off):
         "hyperball_hopplot": lambda: hyperball_hopplot(_undirected(spark), max_d=4),
         "label_propagation": lambda: label_propagation(_directed(spark), max_iter=4),
         "connected_components_star": lambda: connected_components_star(_directed(spark)),
-        "connected_components_star (rounds)": lambda: connected_components_star(
-            _directed(spark), local_threshold=-1
-        ),
+        "k_core": lambda: k_core(canonical_pairs(_directed(spark)), k=2),
+        "k_truss": lambda: k_truss(_directed(spark), 3),
+        "maximal_independent_set": lambda: maximal_independent_set(_directed(spark)),
+        "maximal_matching": lambda: maximal_matching(_directed(spark)),
+        "minimum_spanning_forest": lambda: minimum_spanning_forest(_weighted(spark).withColumnRenamed("w", "weight")),
     }
     before = persisted()
     for scope in (contextlib.nullcontext, broadcast_off):
