@@ -26,68 +26,9 @@ def entry(spark: SparkSession) -> DataFrame:
 # --- BEGIN GENERATED ROTATION (python tools/staleness.py sync) ---
 # Derived from CORRECTNESS_r*.json + git-tree fingerprints; do not
 # hand-edit. Head block = entries whose transitive code closure
-# changed since the round-14 sweep (59 entries); then never-certified (0);
+# changed since the round-14 sweep (229 entries); then never-certified (0);
 # then oldest-certification-first (cheap-first within a round).
 _ROTATION = [
-    'graph_hyperball',
-    'graph_effective_diameter_approx',
-    'csv_sink_roundtrip',
-    'fixture_density',
-    'dedup_embedding_cosine',
-    'heavy_hitters_cms',
-    'multimodal_features',
-    'fixture_effective_diameter',
-    'fixture_hopplot',
-    'similarity_topk_cosine',
-    'multimodal_frames',
-    'graph_kcore',
-    'graph_scc',
-    'scc_partition_gate',
-    'xml_sink_roundtrip',
-    'parquet_schema_evolution',
-    'json_sink_roundtrip',
-    'parquet_upsert_merge',
-    'streaming_incremental_rollup',
-    'parquet_partitioned_roundtrip',
-    'orc_sink_roundtrip',
-    'multimodal_audio',
-    'label_knn_agreement',
-    'streaming_windowed_append',
-    'logreg_train_gate',
-    'kmeans_quality_gate',
-    'pca_power_gate',
-    'udtf_chunk_split',
-    'fixture_motif_triangles',
-    'streaming_state_inspect',
-    'parquet_zorder_roundtrip',
-    'streaming_enrich',
-    'bucketed_join_roundtrip',
-    'loader_normalize_ids',
-    'kmeans_embeddings',
-    'graph_hopplot_d2',
-    'fixture_betweenness',
-    'fixture_harmonic_centrality',
-    'bpe_train_merges',
-    'graph_closeness_sampled',
-    'graph_matching_gate',
-    'graph_mis_gate',
-    'graph_betweenness_sampled',
-    'coreset_kcenter',
-    'similarity_pq',
-    'graph_cc_star_gate',
-    'graph_diameter_double_sweep',
-    'graph_ktruss_gate',
-    'graph_sssp',
-    'graph_pagerank',
-    'graph_mst_gate',
-    'graph_ppr',
-    'graph_hits',
-    'graph_lpa',
-    'similarity_ivf_trained',
-    'dedup_clusters',
-    'similarity_recall_gate',
-    'graph_cocitation_triangles',
-    'hyperball_accuracy_gate',
     'events_cohort_retention',
     'events_transitions',
     'events_click_attribution',
@@ -112,9 +53,11 @@ _ROTATION = [
     'q18_large_orders',
     'bpe_top_merges',
     'events_ewma',
+    'graph_hyperball',
     'doc_novelty_trigrams',
     'dedup_prefix_filter',
     'dedup_incremental',
+    'graph_effective_diameter_approx',
     'dedup_edit_distance',
     'sketch_mergeable_distinct',
     'pipeline_truncation_report',
@@ -128,12 +71,14 @@ _ROTATION = [
     'regression_price_on_qty',
     'q13_customer_distribution',
     'arrow_token_count',
+    'csv_sink_roundtrip',
     'salted_join_event_nations',
     'events_sliding_window',
     'q16_supplier_part_counts',
     'q7_volume_shipping',
     'text_accent_fold',
     'gopher_quality_filter',
+    'fixture_density',
     'heavy_hitters_mg',
     'q8_market_share',
     'dedup_simhash',
@@ -144,14 +89,24 @@ _ROTATION = [
     'q2_min_cost_supplier',
     'q11_important_stock',
     'contamination_check',
+    'dedup_embedding_cosine',
+    'heavy_hitters_cms',
+    'multimodal_features',
+    'fixture_effective_diameter',
     'events_scd2_history',
+    'fixture_hopplot',
+    'similarity_topk_cosine',
     'doc_repetition_signals',
     'window_ntile_cume',
     'dedup_simhash_pairs',
+    'multimodal_frames',
     'dedup_minhash_lsh',
     'percentile_prices',
+    'graph_kcore',
     'dedup_ngram_jaccard',
     'approx_percentile_prices',
+    'graph_scc',
+    'scc_partition_gate',
     'graph_clustering_coefficient',
     'events_forecast_backtest',
     'dq_key_skew',
@@ -168,28 +123,41 @@ _ROTATION = [
     'text_html_strip',
     'events_anomaly_iqr',
     'events_sessionize',
+    'xml_sink_roundtrip',
     'ab_welch_ttest',
     'markov_next_event_eval',
+    'parquet_schema_evolution',
     'chi2_flag_status',
     'events_dau_wau',
+    'json_sink_roundtrip',
     'ab_mann_whitney',
     'text_js_divergence',
     'kmv_set_ops',
     'graph_temporal_reachability',
+    'parquet_upsert_merge',
+    'streaming_incremental_rollup',
+    'parquet_partitioned_roundtrip',
     'text_pii_redact',
+    'orc_sink_roundtrip',
     'events_inter_arrival',
     'doc_lm_surprisal',
     'graph_random_walks',
+    'multimodal_audio',
     'motif_fanout_top',
     'tokenize_to_ids',
     'dedup_boilerplate_lines',
     'orders_open_backlog',
     'feature_hashing',
+    'label_knn_agreement',
     'naive_bayes_lang',
     'events_session_window',
     'basket_lift_top',
     'graph_assortativity',
+    'streaming_windowed_append',
     'mad_outlier_prices',
+    'logreg_train_gate',
+    'kmeans_quality_gate',
+    'pca_power_gate',
     'q6_forecast_revenue',
     'running_total_orders',
     'anti_join_idle_customers',
@@ -215,6 +183,8 @@ _ROTATION = [
     'graph_density',
     'double_vertex_join',
     'q20_part_promotion',
+    'udtf_chunk_split',
+    'fixture_motif_triangles',
     'streaming_dedup',
     'streaming_windowed',
     'q21_waiting_suppliers',
@@ -222,15 +192,22 @@ _ROTATION = [
     'streaming_stateful_counts',
     'graph_degree_distribution',
     'graph_snapshot_edge_count',
+    'streaming_state_inspect',
     'scalar_functions_showcase',
     'streaming_sessionize',
     'streaming_session_window',
+    'parquet_zorder_roundtrip',
+    'streaming_enrich',
+    'bucketed_join_roundtrip',
     'bloom_semi_join_revenue',
     'graph_adjacency',
     'streaming_join',
     'text_heaps_law',
     'similarity_ann_lsh',
     'graph_canonical_pairs',
+    'loader_normalize_ids',
+    'kmeans_embeddings',
+    'graph_hopplot_d2',
     'multimodal_meta',
     'unpivot_part_measures',
     'sample_stratified',
@@ -251,13 +228,36 @@ _ROTATION = [
     'revenue_concentration',
     'events_json_map_agg',
     'equidepth_histogram_prices',
+    'fixture_betweenness',
     'events_moving_avg_time',
+    'fixture_harmonic_centrality',
     'asof_join_events_orders',
+    'bpe_train_merges',
     'winsorized_prices',
     'similarity_ivf',
     'stats_moments',
+    'graph_closeness_sampled',
+    'graph_matching_gate',
+    'graph_mis_gate',
+    'graph_betweenness_sampled',
+    'coreset_kcenter',
+    'similarity_pq',
+    'graph_cc_star_gate',
+    'graph_diameter_double_sweep',
+    'graph_ktruss_gate',
+    'graph_sssp',
     'skyline_parts',
+    'graph_pagerank',
+    'graph_mst_gate',
+    'graph_ppr',
     'graph_link_prediction',
+    'graph_hits',
+    'graph_lpa',
+    'similarity_ivf_trained',
+    'dedup_clusters',
+    'similarity_recall_gate',
+    'graph_cocitation_triangles',
+    'hyperball_accuracy_gate',
 ]
 # --- END GENERATED ROTATION ---
 

@@ -63,13 +63,13 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     # diameter: per-year hop plots
-    try:
+    nodepairs = f"{args.input_dir}/nodepairs.csv"
+    totals = {}
+    if _exists(spark, nodepairs):
         totals = {
             r["year"]: r["total_pairs"]
-            for r in load_nodepairs(spark, f"{args.input_dir}/nodepairs.csv").collect()
+            for r in load_nodepairs(spark, nodepairs).collect()
         }
-    except Exception:
-        totals = {}
     years = sorted(
         r["year"] for r in published.select("year").distinct().collect()
     )
@@ -92,6 +92,12 @@ def main(argv: list[str] | None = None) -> int:
         save_sorted_csv_single(df, f"{args.output_dir}/diameter_{year}", "d")
         print(f"wrote {args.output_dir}/diameter_{year}")
     return 0
+
+
+def _exists(spark, uri: str) -> bool:
+    """Whether `uri` exists, asked of the Hadoop FileSystem of its scheme."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(uri)
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path)
 
 
 if __name__ == "__main__":

@@ -93,13 +93,15 @@ def release(df: DataFrame) -> None:
     cache-manager entries; a (local) checkpoint's blocks belong to the
     RDD under its `LogicalRDD` plan and would otherwise stay until the
     ContextCleaner happens to collect that RDD. A `select` over a cut
-    frame holds that frame's blocks, so it releases them too."""
+    frame holds that frame's blocks, so it releases them too. The blocks
+    go through `SparkContext.unpersistRDD`: `RDD.unpersist` would log a
+    WARN for every locally checkpointed RDD, whose release is intended."""
     df.unpersist()
     plan = df._jdf.queryExecution().analyzed()
     while plan.getClass().getSimpleName() == "Project":
         plan = plan.child()
     if plan.getClass().getSimpleName() == "LogicalRDD":
-        plan.rdd().unpersist(False)
+        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(plan.rdd().id(), False)
 
 
 def session_broadcast_bytes(spark) -> int:

@@ -7,6 +7,8 @@ import csv
 import glob
 import tempfile
 
+import pytest
+
 from citegraph_spark.cli import main
 
 CITS = "# comment\n2 1\n3 1\n4 2\n5 4\n6 5\n"
@@ -54,3 +56,20 @@ def test_cli_diameter_exact_vs_approx(spark):
         assert all(b >= a for a, b in zip(pcts, pcts[1:]))
         for e, a in zip(exact, approx):
             assert abs(int(a["g(d)"]) - int(e["g(d)"])) / int(e["g(d)"]) < 0.35
+
+
+def test_cli_diameter_uses_nodepairs_totals(spark):
+    """With `nodepairs.csv` present, its per-year totals are the percent
+    denominator; without it, the BFS's own pair count is."""
+    totals = {"1993": 10, "1994": 100}
+    with tempfile.TemporaryDirectory() as d:
+        _write_inputs(d)
+        with open(f"{d}/nodepairs.csv", "w") as f:
+            f.write("# year,total_pairs\n")
+            f.writelines(f"{y},{n}\n" for y, n in totals.items())
+        assert main(["diameter", d, f"{d}/out"]) == 0
+        for year, total in totals.items():
+            rows = _read_rows(f"{d}/out/diameter_{year}/part*.csv")
+            assert rows
+            for r in rows:
+                assert float(r["percent_of_total"]) == pytest.approx(int(r["g(d)"]) / total)

@@ -101,3 +101,19 @@ def test_ship_package_once_per_application(spark):
     assert spark.sparkContext.applicationId in S._SHIPPED_APP_IDS
     for p in added:
         assert os.path.exists(p)
+
+
+def test_driver_memory_defaults_to_half_the_machine(monkeypatch):
+    """`SPARK_GRAFT_DRIVER_MEM` wins; otherwise the heap is half the
+    physical memory, not a fixed size that can outgrow the machine."""
+    import os
+
+    from citegraph_spark.session import default_driver_memory
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert default_driver_memory() == "3g"
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**21
+    got = default_driver_memory()
+    assert got.endswith("m")
+    assert abs(int(got[:-1]) - max(half_mb, 1024)) <= 0.01 * half_mb

@@ -6,6 +6,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import shutil
 import tempfile
 
@@ -400,12 +401,34 @@ def test_citations_datasource_write_read_roundtrip(spark):
         assert spark.read.format("citations").load(path).count() == 2
 
 
+def _two_tokens_reference(text: str, kind: str) -> list[tuple[int, int]]:
+    """The loaders' rule in Python: lines end at LF or CRLF; drop lines
+    with `#` or blank after Spark's `trim` (spaces only); split on Java's
+    ASCII whitespace runs; keep the first two tokens when both cast to int (the
+    published loader: the id, normalized, and the date's first 4 chars)."""
+    out = []
+    for line in re.split(r"\r?\n", text):
+        s = line.strip(" ")
+        if "#" in line or not s:
+            continue
+        toks = re.split(r"[ \t\n\x0b\f\r]+", s)
+        if len(toks) < 2 or not all(re.fullmatch(r"[0-9]+", t) for t in (toks[0], toks[1][:4])):
+            continue
+        a, b = toks[0], toks[1]
+        if kind == "published":
+            out.append((int(a[2:] if len(a) == 9 and a.startswith("11") else a), int(b[:4])))
+        else:
+            out.append((int(a), int(b)))
+    return sorted(out)
+
+
 def test_citation_loaders_drop_one_token_and_malformed_lines(spark, tmp_path):
     """Both text loaders, and the `citations` DataSource, drop what they
     cannot parse instead of failing the job: a one-token line (no second
     field; `element_at` would throw under ANSI mode), a tab-led line
     (empty first token) and non-numeric tokens, next to good rows that
-    must survive."""
+    must survive, CRLF, multi-space and trailing-tab lines among them.
+    Each matches a Python reference of the tokenizing rule."""
     from citegraph_spark.sources.citations import (
         load_citations,
         load_published_dates,
@@ -413,18 +436,27 @@ def test_citation_loaders_drop_one_token_and_malformed_lines(spark, tmp_path):
     from citegraph_spark.sources.citations_datasource import CitationsDataSource
 
     spark.dataSource.register(CitationsDataSource)
+    cit_text = "# c\n2 1\n3\n\t4 2\nx 1\n5 y\n6 3\n7 4\r\n8   5\n9 6\t\n \t10 7\n11\t \t8\n"
     cit = tmp_path / "citations.txt"
-    cit.write_text("# c\n2 1\n3\n\t4 2\nx 1\n5 y\n6 3\n")
+    cit.write_bytes(cit_text.encode())
+    want = [(2, 1), (6, 3), (7, 4), (8, 5), (9, 6), (11, 8)]
+    assert _two_tokens_reference(cit_text, "citations") == want
     for df in (
         load_citations(spark, str(cit)),
         spark.read.format("citations").load(str(cit)),
     ):
-        assert sorted((r["from"], r["to"]) for r in df.collect()) == [(2, 1), (6, 3)]
+        assert sorted((r["from"], r["to"]) for r in df.collect()) == want
 
+    pub_text = (
+        "# c\n1\t1992-01-01\n5\n\t7\t1993-02-03\nab\t1994-01-01\n8\txyz\n9\t1995-05-06\n"
+        "10\t1996-01-01\r\n11   1997-01-01\n12\t1998-01-01\t\n\t13 1999-01-01\n"
+    )
     pub = tmp_path / "published-dates.txt"
-    pub.write_text("# c\n1\t1992-01-01\n5\n\t7\t1993-02-03\nab\t1994-01-01\n8\txyz\n9\t1995-05-06\n")
+    pub.write_bytes(pub_text.encode())
+    want = [(1, 1992), (9, 1995), (10, 1996), (11, 1997), (12, 1998)]
+    assert _two_tokens_reference(pub_text, "published") == want
     for df in (
         load_published_dates(spark, str(pub)),
         spark.read.format("citations").option("kind", "published").load(str(pub)),
     ):
-        assert sorted((r["id"], r["year"]) for r in df.collect()) == [(1, 1992), (9, 1995)]
+        assert sorted((r["id"], r["year"]) for r in df.collect()) == want
