@@ -63,35 +63,38 @@ def density(citations: DataFrame, published: DataFrame) -> DataFrame:
       edges whose `from` id has no published date are dropped (inner join).
     - n(t) counts papers with pub-year <= t.
     - final result is the INNER join of the two running totals on year, so
-      a year present in only one side drops out (reference quirk, kept).
+      a year present in only one side drops out (reference quirk, kept):
+      a year with papers but no citing edge has no row, yet its papers
+      count in every later n(t).
 
-    Plan shape: two shuffles (groupBy year on each side), one tiny
-    broadcast join, and two single-partition windows over <=#years rows.
-    The per-year aggregates are at most a few thousand rows at any scale,
-    so the unpartitioned running-total window is safe.
+    Plan shape: `published` is read once. It is left-joined to the
+    out-degree (a shuffled join, so the two inputs are parsed by
+    concurrent stages; a broadcast of `published` queued the citations
+    parse behind it), then one per-year aggregate gives both n and e,
+    and one running-sum window over <= #years rows gives both totals.
+    The running sums are taken before the edgeless years are dropped.
+    The per-year aggregate is at most a few thousand rows at any scale,
+    so the unpartitioned window is safe, and it leaves the rows in year
+    order, so the final sort adds no exchange.
     """
     out_degree = citations.groupBy("from").count()
-    edge_years = (
-        published.join(out_degree, published["id"] == out_degree["from"], "inner")
+    per_year = (
+        published.join(out_degree, published["id"] == out_degree["from"], "left")
         .groupBy("year")
-        .agg(F.sum("count").alias("e(t)"))
+        .agg(F.count("*").alias("n"), F.sum("count").alias("e"))
     )
-    node_years = published.groupBy("year").agg(F.count("*").alias("n(t)"))
-
     w = Window.orderBy("year").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    nodes_running = node_years.select(
-        F.col("year").alias("nodeYear"), F.sum("n(t)").over(w).alias("n(t)")
-    )
-    edges_running = edge_years.select(
-        "year", F.sum("e(t)").over(w).alias("e(t)")
-    )
     return (
-        nodes_running.join(
-            F.broadcast(edges_running),
-            nodes_running["nodeYear"] == edges_running["year"],
-            "inner",
+        per_year.select(
+            "year",
+            "e",
+            F.sum("n").over(w).alias("n(t)"),
+            F.sum("e").over(w).alias("e(t)"),
         )
-        .select(F.col("year"), F.col("n(t)"), F.col("e(t)"))
+        # a null e: no paper of that year cites; the reference's join on
+        # year never matches a null year
+        .filter(F.col("year").isNotNull() & F.col("e").isNotNull())
+        .select("year", "n(t)", "e(t)")
         .orderBy("year")
     )
 
@@ -123,15 +126,24 @@ def snapshot_edges(citations: DataFrame, published: DataFrame, year: int) -> Dat
 
 
 def bidirectional(edges: DataFrame, dedup: bool = True) -> DataFrame:
-    """P8: each directed edge expanded to both orientations → (src, dst).
+    """P8: each directed edge expanded to both orientations → (src, dst);
+    self-loops and edges with a null endpoint dropped.
+
+    Both orientations come from one pass over `edges` (an `inline` of a
+    two-struct array per row), so its plan runs once; a union of two
+    projections would run it twice, text parse and joins included.
 
     `dedup=False` skips the distinct (a full shuffle of 2×|E| rows) for
     consumers whose semantics are duplicate-insensitive — HyperBall's
     register max-union is idempotent, so duplicate edges only re-send an
     identical message. Counting/enumeration consumers need the default."""
-    fwd = edges.select(F.col("from").alias("src"), F.col("to").alias("dst"))
-    rev = edges.select(F.col("to").alias("src"), F.col("from").alias("dst"))
-    out = fwd.unionByName(rev).filter(F.col("src") != F.col("dst"))
+    both = F.inline(
+        F.array(
+            F.struct(F.col("from").alias("src"), F.col("to").alias("dst")),
+            F.struct(F.col("to").alias("src"), F.col("from").alias("dst")),
+        )
+    )
+    out = edges.filter(F.col("from") != F.col("to")).select(both)
     return out.distinct() if dedup else out
 
 
@@ -541,12 +553,14 @@ def effective_diameter(rows: list[HopPlotRow]) -> float | None:
 def hop_plot_df(spark, rows: list[HopPlotRow]) -> DataFrame:
     """Hop-plot rows (from `hop_plot` or `approx_hop_plot`) as a
     DataFrame with the reference's output schema (d, `g(d)`,
-    percent_of_total) — S7 local-collection source."""
+    percent_of_total) — S7 local-collection source. At most `max_d`
+    rows, so one partition: a sort by `d` then needs no range exchange
+    (its sampling and map jobs)."""
     from .. import schemas
 
     return local_rows(
         spark, [(r.d, r.pairs, r.percent) for r in rows], schema=schemas.HOP_PLOT
-    )
+    ).coalesce(1)
 
 
 def approx_hop_plot(

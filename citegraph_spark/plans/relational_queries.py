@@ -1196,8 +1196,11 @@ def csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     save_sorted_csv_single (distributed sort, then coalesce(1) so the
     order survives into the single output file), read the file back with
     the original schema, and return the rows. The batch oracle certifies
-    the WHOLE write path — a dropped header, lost sort, re-typed column,
-    or doubled part file would hash-mismatch. Rows are materialized
+    the write path's content — a dropped header, re-typed column, or
+    doubled part file would hash-mismatch. A lost sort would not: the
+    hash sorts rows, so the row order of the part file is pinned by
+    `tests/test_sources.py::test_sorted_csv_sink_writes_rows_in_sort_order`
+    instead. Rows are materialized
     before the temp dir is removed (single-file CSV is small by
     contract; `save_parquet` is the scale path)."""
     import shutil

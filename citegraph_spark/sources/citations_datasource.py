@@ -19,11 +19,13 @@ exactly — equality is asserted in tests.
 This is the escape hatch for formats Spark has no reader for; for
 formats Spark DOES read (CSV/JSON/parquet/ORC), the built-in JVM readers
 keep pushdown + codegen and are preferred (sources/citations.py stays
-the default loader — it is pure column expressions over spark.read.text,
-fully visible to Catalyst)."""
+the default loader — it is pure column expressions over the lines of
+Hadoop's `textFile`, wrapped as a JVM Dataset, fully visible to
+Catalyst)."""
 
 from __future__ import annotations
 
+import gzip
 import os
 import re
 from collections.abc import Iterator, Sequence
@@ -103,7 +105,10 @@ class _CitationsReader(DataSourceReader):
         return [_FilePartition(f) for f in files]
 
     def read(self, partition: _FilePartition) -> Iterator[tuple]:
-        with open(partition.path, encoding="utf-8") as fh:
+        # as Hadoop's line reader does: gunzip `.gz` files, and decode
+        # invalid UTF-8 to U+FFFD instead of failing the task
+        opener = gzip.open if partition.path.endswith(".gz") else open
+        with opener(partition.path, "rt", encoding="utf-8", errors="replace") as fh:
             for line in fh:
                 # the column loaders' tokenizer: Spark's `trim` strips
                 # spaces only, then `split(..., '\s+')`, so a tab-led line

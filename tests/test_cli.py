@@ -38,6 +38,7 @@ def test_cli_density(spark):
         rows = _read_rows(f"{d}/out/densities/part*.csv")
         got = {r["year"]: (r["n(t)"], r["e(t)"]) for r in rows}
         assert got == {"1993": ("3", "2"), "1994": ("6", "5")}
+        assert [r["year"] for r in rows] == ["1993", "1994"]
 
 
 def test_cli_diameter_exact_vs_approx(spark):
@@ -51,6 +52,8 @@ def test_cli_diameter_exact_vs_approx(spark):
         assert not glob.glob(f"{d}/exact/diameter_1992")
         assert not glob.glob(f"{d}/approx/diameter_1992")
         assert [r["d"] for r in exact] == [r["d"] for r in approx]
+        assert [int(r["d"]) for r in exact] == list(range(1, len(exact) + 1))
+        assert len(exact) >= 2
         # same emission rule, monotone estimates, bounded relative error
         pcts = [float(r["percent_of_total"]) for r in approx]
         assert all(b >= a for a, b in zip(pcts, pcts[1:]))
@@ -73,3 +76,15 @@ def test_cli_diameter_uses_nodepairs_totals(spark):
             assert rows
             for r in rows:
                 assert float(r["percent_of_total"]) == pytest.approx(int(r["g(d)"]) / total)
+
+
+def test_cli_leaves_no_persisted_rdds(spark):
+    """`density` and `diameter` (both hop-plot paths), run one after
+    another in one session, leave the persisted RDDs as they found them."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keySet())
+    with tempfile.TemporaryDirectory() as d:
+        _write_inputs(d)
+        for argv in (["density"], ["diameter"], ["diameter", "--approx"]):
+            assert main([argv[0], d, f"{d}/out", *argv[1:]]) == 0
+            assert set(persisted().keySet()) == before, argv

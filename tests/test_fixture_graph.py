@@ -3,16 +3,20 @@
 from __future__ import annotations
 
 import contextlib
+from collections import Counter
 
 import pytest
 
+from citegraph_spark import schemas
 from citegraph_spark.fixtures import fixture_citations, fixture_published
 from citegraph_spark.operators.graph import (
+    bidirectional,
     density,
     effective_diameter,
     hop_plot,
     snapshot_edges,
 )
+from citegraph_spark.sources.local import local_rows
 
 # FIXTURES.md Table D, strict reference behavior: 1992 row dropped by the
 # inner join (nodes but no citing-year edges).
@@ -54,6 +58,84 @@ def test_density_fixture(spark):
         for r in density(fixture_citations(spark), fixture_published(spark)).collect()
     ]
     assert got == EXPECTED_DENSITY
+
+
+def _density_reference(cits, pubs):
+    """Analytics.scala's density in Python: per year, the papers and the
+    out-degree of that year's papers (an edge whose citing paper has no
+    date counts nowhere); running sums over every year; then only the
+    years with a citing edge."""
+    year_of = dict(pubs)
+    n = Counter(year_of.values())
+    e = Counter(year_of[f] for f, _ in cits if f in year_of)
+    out, n_t, e_t = [], 0, 0
+    for y in sorted(n):
+        n_t, e_t = n_t + n[y], e_t + e[y]
+        if e[y]:
+            out.append((y, n_t, e_t))
+    return out
+
+
+def test_density_keeps_edgeless_years_in_later_node_counts(spark):
+    """2001 has papers but none of them cites: it has no row, yet its two
+    papers count in n(2002) and later. The edge from the undated paper 99
+    is dropped; the edge to it counts for its citing paper's year."""
+    pubs = [(6, 2003), (1, 2000), (3, 2001), (5, 2002), (2, 2000), (4, 2001)]
+    cits = [(2, 1), (5, 3), (99, 1), (5, 4), (6, 5), (6, 1), (2, 99)]
+    want = [(2000, 2, 2), (2002, 5, 4), (2003, 6, 6)]
+    assert _density_reference(cits, pubs) == want
+    got = density(
+        local_rows(spark, cits, schemas.CITATIONS),
+        local_rows(spark, pubs, schemas.PUBLISHED_DATES),
+    ).collect()
+    assert [(r["year"], r["n(t)"], r["e(t)"]) for r in got] == want
+
+
+def test_density_and_bidirectional_read_each_input_once(spark, tmp_path):
+    """In the physical plan, `density` scans the published dates once
+    (an inner join and a separate per-year count used to parse them
+    twice) and `bidirectional` scans its input once (a union of two
+    projections ran the input plan, text parse included, twice)."""
+    from citegraph_spark.sources.citations import (
+        load_citations,
+        load_published_dates,
+    )
+
+    cit, pub = tmp_path / "citations.txt", tmp_path / "published-dates.txt"
+    cit.write_text("2 1\n3 1\n3 2\n")
+    pub.write_text("1\t1999-01-01\n2\t2000-01-01\n3\t2000-02-02\n")
+    c, p = load_citations(spark, str(cit)), load_published_dates(spark, str(pub))
+
+    def scans(df, path) -> int:
+        return df._jdf.queryExecution().executedPlan().toString().count(f"Scan {path}[")
+
+    dens = density(c, p)
+    assert (scans(dens, pub), scans(dens, cit)) == (1, 1)
+    assert [tuple(r) for r in dens.collect()] == [(2000, 3, 3)]
+    for dedup in (True, False):
+        assert scans(bidirectional(c, dedup=dedup), cit) == 1
+
+
+def test_bidirectional_matches_two_orientation_reference(spark):
+    """Both orientations of every edge, without self-loops or rows with a
+    null endpoint: as a set by default, as a multiset under
+    `dedup=False` (a duplicate input edge gives its two rows twice)."""
+    rows = [
+        (1, 2), (2, 1), (1, 2), (3, 3), (3, 3), (None, 4), (4, None),
+        (None, None), (5, 6), (6, 7), (5, 6), (7, 5),
+    ]
+    edges = local_rows(spark, rows, "`from` int, `to` int")
+    ref = [
+        pair
+        for f, t in rows
+        if f is not None and t is not None and f != t
+        for pair in ((f, t), (t, f))
+    ]
+    out = bidirectional(edges)
+    assert out.columns == ["src", "dst"]
+    assert sorted(tuple(r) for r in out.collect()) == sorted(set(ref))
+    dup = bidirectional(edges, dedup=False).collect()
+    assert Counter(tuple(r) for r in dup) == Counter(ref)
 
 
 def test_snapshot_1992_empty(spark):

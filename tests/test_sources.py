@@ -4,6 +4,9 @@ bucketed co-located join (shuffle-free SMJ)."""
 from __future__ import annotations
 
 import contextlib
+import csv
+import glob
+import gzip
 import io
 import os
 import re
@@ -426,9 +429,11 @@ def test_citation_loaders_drop_one_token_and_malformed_lines(spark, tmp_path):
     """Both text loaders, and the `citations` DataSource, drop what they
     cannot parse instead of failing the job: a one-token line (no second
     field; `element_at` would throw under ANSI mode), a tab-led line
-    (empty first token) and non-numeric tokens, next to good rows that
-    must survive, CRLF, multi-space and trailing-tab lines among them.
-    Each matches a Python reference of the tokenizing rule."""
+    (empty first token), non-numeric tokens and a token with invalid
+    UTF-8, next to good rows that must survive, CRLF, multi-space,
+    trailing-tab lines and invalid UTF-8 after the second token among
+    them. Each matches a Python reference of the tokenizing rule, on the
+    plain file and on a gzip copy of it."""
     from citegraph_spark.sources.citations import (
         load_citations,
         load_published_dates,
@@ -436,27 +441,69 @@ def test_citation_loaders_drop_one_token_and_malformed_lines(spark, tmp_path):
     from citegraph_spark.sources.citations_datasource import CitationsDataSource
 
     spark.dataSource.register(CitationsDataSource)
-    cit_text = "# c\n2 1\n3\n\t4 2\nx 1\n5 y\n6 3\n7 4\r\n8   5\n9 6\t\n \t10 7\n11\t \t8\n"
-    cit = tmp_path / "citations.txt"
-    cit.write_bytes(cit_text.encode())
-    want = [(2, 1), (6, 3), (7, 4), (8, 5), (9, 6), (11, 8)]
-    assert _two_tokens_reference(cit_text, "citations") == want
-    for df in (
-        load_citations(spark, str(cit)),
-        spark.read.format("citations").load(str(cit)),
-    ):
-        assert sorted((r["from"], r["to"]) for r in df.collect()) == want
 
-    pub_text = (
-        "# c\n1\t1992-01-01\n5\n\t7\t1993-02-03\nab\t1994-01-01\n8\txyz\n9\t1995-05-06\n"
-        "10\t1996-01-01\r\n11   1997-01-01\n12\t1998-01-01\t\n\t13 1999-01-01\n"
+    def plain_and_gz(name: str, data: bytes) -> list[str]:
+        (tmp_path / name).write_bytes(data)
+        (tmp_path / f"{name}.gz").write_bytes(gzip.compress(data))
+        return [str(tmp_path / name), str(tmp_path / f"{name}.gz")]
+
+    cit_bytes = (
+        b"# c\n2 1\n3\n\t4 2\nx 1\n5 y\n6 3\n7 4\r\n8   5\n9 6\t\n \t10 7\n11\t \t8\n"
+        b"\xff 3\n12 \xc3\x28\n13 9 \xfe\xff\n"
     )
-    pub = tmp_path / "published-dates.txt"
-    pub.write_bytes(pub_text.encode())
-    want = [(1, 1992), (9, 1995), (10, 1996), (11, 1997), (12, 1998)]
-    assert _two_tokens_reference(pub_text, "published") == want
-    for df in (
-        load_published_dates(spark, str(pub)),
-        spark.read.format("citations").option("kind", "published").load(str(pub)),
-    ):
-        assert sorted((r["id"], r["year"]) for r in df.collect()) == want
+    want = [(2, 1), (6, 3), (7, 4), (8, 5), (9, 6), (11, 8), (13, 9)]
+    assert _two_tokens_reference(cit_bytes.decode("utf-8", "replace"), "citations") == want
+    for path in plain_and_gz("citations.txt", cit_bytes):
+        for df in (
+            load_citations(spark, path),
+            spark.read.format("citations").load(path),
+        ):
+            assert sorted((r["from"], r["to"]) for r in df.collect()) == want, path
+
+    pub_bytes = (
+        b"# c\n1\t1992-01-01\n5\n\t7\t1993-02-03\nab\t1994-01-01\n8\txyz\n9\t1995-05-06\n"
+        b"10\t1996-01-01\r\n11   1997-01-01\n12\t1998-01-01\t\n\t13 1999-01-01\n"
+        b"\xc3\x28\t2000-01-01\n14\t2001-01-01\xff\n"
+    )
+    want = [(1, 1992), (9, 1995), (10, 1996), (11, 1997), (12, 1998), (14, 2001)]
+    assert _two_tokens_reference(pub_bytes.decode("utf-8", "replace"), "published") == want
+    for path in plain_and_gz("published-dates.txt", pub_bytes):
+        for df in (
+            load_published_dates(spark, path),
+            spark.read.format("citations").option("kind", "published").load(path),
+        ):
+            assert sorted((r["id"], r["year"]) for r in df.collect()) == want, path
+
+
+def test_citation_loader_splits_a_small_file_over_every_task_slot(spark, tmp_path):
+    """A file far below `spark.sql.files.openCostInBytes` (4 MB) but with
+    more lines than task slots is parsed by `defaultParallelism` tasks,
+    not by one, and no line is lost or read twice at a split boundary."""
+    from citegraph_spark.sources.citations import load_citations
+
+    slots = spark.sparkContext.defaultParallelism
+    edges = [(i, i // 2) for i in range(2, 20_000)]
+    path = tmp_path / "citations.txt"
+    path.write_text("# from to\n" + "".join(f"{a} {b}\n" for a, b in edges))
+    df = load_citations(spark, str(path))
+    assert df.rdd.getNumPartitions() == slots
+    assert sorted((r["from"], r["to"]) for r in df.collect()) == edges
+
+
+def test_sorted_csv_sink_writes_rows_in_sort_order(spark, tmp_path):
+    """`save_sorted_csv_single` writes one part file whose rows follow the
+    sort column, from an input scattered over several partitions (a
+    coalesce of the unsorted input would keep partition order)."""
+    from citegraph_spark.sources.sinks import save_sorted_csv_single
+
+    df = spark.range(0, 500, 1, 7).select(
+        ((F.col("id") * 7919) % 500).alias("k"), F.col("id").alias("v")
+    )
+    ks = [r["k"] for r in df.collect()]
+    assert ks != sorted(ks)
+    save_sorted_csv_single(df, str(tmp_path / "out"), "k")
+    (part,) = glob.glob(str(tmp_path / "out" / "part-*.csv"))
+    with open(part, newline="") as fh:
+        rows = list(csv.DictReader(fh))
+    assert [int(r["k"]) for r in rows] == list(range(500))
+    assert all(int(r["v"]) * 7919 % 500 == int(r["k"]) for r in rows)

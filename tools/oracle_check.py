@@ -33,6 +33,7 @@ import decimal
 import hashlib
 import math
 import sys
+import tempfile
 import time
 
 import os
@@ -86,53 +87,66 @@ def table_hash(cols: list[str], rows: list[tuple]) -> str:
 
 
 def check_one(spark, con, qs, oracles, name: str, sf_dir: str) -> dict:
-    """Run one entry Spark-vs-DuckDB at sf_dir; return a result record."""
+    """Run one entry Spark-vs-DuckDB at sf_dir; return a result record.
+
+    Each side's rows are hashed and dropped before the other side's are
+    fetched, so one large entry holds one side's rows (and their sorted
+    hash lines) at a time; both are fetched again only to print the first
+    difference of a hash mismatch."""
     t0 = time.time()
     rec = {"status": "OK", "secs": 0.0, "rows": 0}
     try:
         sdf = qs[name](spark, sf_dir)
         scols = sdf.columns
-        srows = [tuple(r) for r in sdf.collect()]
-        rec["rows"] = len(srows)
+        srows = sdf.collect()
+        ns, hs = len(srows), table_hash(scols, srows)
+        del srows
+        rec["rows"] = ns
     except Exception as ex:
         print(f"FAIL  {name}: spark error: {ex}")
         rec.update(status="FAIL", secs=time.time() - t0)
         return rec
     if name not in oracles:
         rec.update(status="ROWS-ONLY", secs=time.time() - t0)
-        print(f"ROWS-ONLY  {name}: {len(srows)} rows ({rec['secs']:.1f}s)")
+        print(f"ROWS-ONLY  {name}: {ns} rows ({rec['secs']:.1f}s)")
         return rec
     try:
         res = con.execute(oracles[name])
         dcols = [d[0] for d in res.description]
-        drows = [tuple(r) for r in res.fetchall()]
+        drows = res.fetchall()
+        nd, hd = len(drows), table_hash(dcols, drows)
+        del drows
     except Exception as ex:
         print(f"FAIL  {name}: duckdb error: {ex}")
         rec.update(status="FAIL", secs=time.time() - t0)
         return rec
     problems = []
-    if len(srows) != len(drows):
-        problems.append(f"rowcount spark={len(srows)} duckdb={len(drows)}")
+    if ns != nd:
+        problems.append(f"rowcount spark={ns} duckdb={nd}")
     if sorted(scols) != sorted(dcols):
         problems.append(f"cols spark={sorted(scols)} duckdb={sorted(dcols)}")
-    if not problems:
-        hs, hd = table_hash(scols, srows), table_hash(dcols, drows)
-        if hs != hd:
-            problems.append(f"value-hash spark={hs} duckdb={hd}")
-            for a, b in list(
-                zip(sorted(map(str, srows)), sorted(map(str, drows)))
-            )[:300]:
-                if a != b:
-                    problems.append(
-                        f"  first diff:\n  spark : {a}\n  duckdb: {b}"
-                    )
-                    break
+    if not problems and hs != hd:
+        problems.append(f"value-hash spark={hs} duckdb={hd}")
+        try:
+            srows = [tuple(r) for r in sdf.collect()]
+            drows = con.execute(oracles[name]).fetchall()
+        except Exception as ex:  # a released intermediate, say
+            problems.append(f"  rows not re-fetched for a diff: {ex}")
+            srows = drows = []
+        for a, b in list(
+            zip(sorted(map(str, srows)), sorted(map(str, drows)))
+        )[:300]:
+            if a != b:
+                problems.append(
+                    f"  first diff:\n  spark : {a}\n  duckdb: {b}"
+                )
+                break
     rec["secs"] = time.time() - t0
     if problems:
         print(f"FAIL  {name}: " + "; ".join(problems[:3]))
         rec["status"] = "FAIL"
     else:
-        print(f"OK    {name}: {len(srows)} rows, hash match ({rec['secs']:.1f}s)")
+        print(f"OK    {name}: {ns} rows, hash match ({rec['secs']:.1f}s)")
     return rec
 
 
@@ -173,24 +187,31 @@ def main(argv: list[str]) -> int:
     selected = names or list(qs)
     report: dict[str, dict] = {}
     n_fail_total = 0
-    for sf_dir in sf_dirs:
-        con = duckdb.connect()
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS "
-                f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+    # DuckDB runs inside this process. Its default memory_limit (80% of
+    # RAM) let the naive triangle join of graph_clustering_coefficient's
+    # oracle reach 6.5 GB at sf0.1 beside the Spark driver's JVM; at a
+    # quarter of RAM it spills to a temp directory instead.
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    with tempfile.TemporaryDirectory(prefix="oracle_check_duckdb_") as spill:
+        duck_config = {"memory_limit": f"{ram >> 22}MB", "temp_directory": spill}
+        for sf_dir in sf_dirs:
+            con = duckdb.connect(config=duck_config)
+            for t in TABLES:
+                con.execute(
+                    f"CREATE VIEW {t} AS "
+                    f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+                )
+            t_sf = time.time()
+            per = {name: check_one(spark, con, qs, oracles, name, sf_dir)
+                   for name in selected}
+            con.close()
+            report[sf_dir] = per
+            n_fail = sum(1 for r in per.values() if r["status"] == "FAIL")
+            n_fail_total += n_fail
+            print(
+                f"\nSF {sf_dir}: {len(selected) - n_fail}/{len(selected)} passed "
+                f"({time.time() - t_sf:.0f}s)"
             )
-        t_sf = time.time()
-        per = {name: check_one(spark, con, qs, oracles, name, sf_dir)
-               for name in selected}
-        con.close()
-        report[sf_dir] = per
-        n_fail = sum(1 for r in per.values() if r["status"] == "FAIL")
-        n_fail_total += n_fail
-        print(
-            f"\nSF {sf_dir}: {len(selected) - n_fail}/{len(selected)} passed "
-            f"({time.time() - t_sf:.0f}s)"
-        )
     if json_out:
         import json
 
