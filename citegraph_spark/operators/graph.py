@@ -6,21 +6,16 @@ Analytics.scala:152-414). Here everything is DataFrame ops:
 
 - density (G1): groupBy + window running totals + broadcast-able joins.
 - snapshot (G2): double vertex join + year filter + bidirectional union.
-- hop-plot (G4-G9): exact all-pairs BFS in two tiers, chosen by the
-  session's broadcast budget (`spark.sql.autoBroadcastJoinThreshold`)
-  against the bytes of the snapshot's int32 CSR adjacency:
+- hop-plot (G4-G9): exact all-pairs BFS in two tiers, chosen like
+  harmonic centrality's and betweenness's by `_driver_csr` (the int32
+  CSR's bytes against `spark.sql.autoBroadcastJoinThreshold`):
   * within it, a bit-parallel multi-source BFS (Then et al., "The More
     the Merrier", VLDB 2014) over the broadcast CSR — ONE Spark job per
-    snapshot: each task runs its share of the sources 64 at a time, one
-    uint64 bit per source, and returns per-distance pair counts. State
-    is O(|V|) words per task, never O(connected pairs);
-  * above it, a frontier BFS over *pairs* — the frontier carries
-    12-byte (src, dst) rows instead of the reference's O(d)-length path
-    arrays, the `seen` set is canonical (unordered) pairs, and lineage
-    is truncated with cut_lineage (localCheckpoint by default;
-    DFS-backed checkpoint behind spark.citegraph.reliableCheckpoint —
-    lineage.py) so per-round counts don't recompute history (the
-    reference recomputes the full lineage every round — SURVEY.md §4.3).
+    snapshot, 64 sources per uint64 word, O(|V|) words per task;
+  * above it, a frontier BFS over canonical *pairs* — 12-byte (src,
+    dst) rows instead of the reference's O(d)-length path arrays, with
+    lineage cut (lineage.py) so per-round counts don't recompute
+    history (the reference's flaw — SURVEY.md §4.3).
 
 Scale notes (100 TB thinking): the pair BFS's `seen` set is O(connected
 pairs) — every round shuffles only the frontier joined against the
@@ -32,6 +27,7 @@ even that set stops fitting, the path is the approximate hop-plot
 
 from __future__ import annotations
 
+import functools
 import hashlib
 from collections import defaultdict
 from dataclasses import dataclass
@@ -179,11 +175,12 @@ class HopPlotRow:
 
 
 def _csr_from_arrow(table) -> tuple:
-    """(indptr, indices) int32 CSR of the simple undirected graph on an
-    Arrow (src, dst) table: rows with a null endpoint and
-    self-loops dropped, both orientations, duplicates removed, vertices
-    relabelled 0..V-1. Every vertex has degree >= 1 (isolated ids never
-    get a label), which the dense pull step's `reduceat` relies on."""
+    """(ids, indptr, indices) of the simple undirected graph on an Arrow
+    (src, dst) table: rows with a null endpoint and self-loops dropped,
+    both orientations, duplicates removed, vertices relabelled 0..V-1
+    (vertex i is `ids[i]`), and an int32 CSR. Every vertex has degree
+    >= 1 (isolated ids never get a label), which the dense pull step's
+    `reduceat` relies on."""
     import numpy as np
 
     table = table.drop_null()
@@ -199,39 +196,59 @@ def _csr_from_arrow(table) -> tuple:
     if n:
         np.cumsum(np.bincount(key // n, minlength=n), out=indptr[1:])
         key = key % n
-    return indptr, key.astype(np.int32)
+    return ids, indptr, key.astype(np.int32)
+
+
+def _driver_csr(edges: DataFrame):
+    """The BFS family's one tier rule: `_csr_from_arrow` of `edges` (src,
+    dst), read once as Arrow, or None when the broadcast budget
+    (`spark.sql.autoBroadcastJoinThreshold`) is 0, `edges` has more than
+    budget/4 rows (one 4-byte CSR entry each) or the int32 CSR is over
+    it. A memory cap, not a speed crossover: the kernels are the faster
+    tier at every size measured, but hold the whole graph."""
+    budget = session_broadcast_bytes(edges.sparkSession)
+    if budget == 0:
+        return None
+    table = edges.select("src", "dst").limit(budget // 4 + 1).toArrow()
+    if table.num_rows > budget // 4:
+        return None
+    csr = _csr_from_arrow(table)
+    return csr if csr[1].nbytes + csr[2].nbytes <= budget else None
 
 
 _POPCOUNT8 = bytes(bin(i).count("1") for i in range(256))
 
 
-def _bitbfs_level_counts(indptr, indices, words, max_d: int):
-    """Ordered (source, target) pairs per shortest distance 1..max_d
-    (index d of the returned int64 array), summed over the sources in
-    `words`: word w covers sources 64w .. 64w+63, run as one BFS with
+def _fanout_positions(indptr, counts, active):
+    """Positions in `indices` of the edges out of `active` (degrees `counts`)."""
+    import numpy as np
+
+    starts = indptr[active].astype(np.int64)
+    offsets = np.cumsum(counts) - counts
+    return np.repeat(starts - offsets, counts) + np.arange(int(counts.sum()))
+
+
+def _bitbfs_levels(indptr, indices, words, max_d: int):
+    """Yield (d, active, new) per BFS level 1..max_d of each source word
+    in `words`: word w covers sources 64w .. 64w+63, run as one BFS with
     one uint64 bit per source in each vertex's `seen` and `frontier`
-    words.
+    words; `active` are the vertices some source first reaches at d,
+    `new` their newly reached bits.
 
     A level either pushes the active vertices' words along their edges
     (`bitwise_or.at`, while those edges are under a quarter of all
     edges) or pulls densely — every vertex ORs its neighbours' words
-    with one `reduceat` over the CSR. Newly reached bits are `next &
-    ~seen`; their popcount is that level's pair count.
-
-    The length-V `seen`, `frontier` and `nxt` arrays are allocated once
-    per call and only the entries a word touched are reset, so a word's
-    cost is proportional to the edges it expands: a push level touches
-    its fanout, and a pull level runs only when that fanout is over a
-    quarter of the edges (every vertex has degree >= 1, so V <= E).
-    Graphs of many small components thus cost O(V + E) per call, not
-    O(V) per word."""
+    with one `reduceat` over the CSR. The length-V `seen`, `frontier`
+    and `nxt` arrays are allocated once per call and only the entries a
+    word touched are reset, so a word costs the edges it expands (a pull
+    level runs only when that fanout is over a quarter of the edges, and
+    V <= E): many small components cost O(V + E) per call, not O(V) per
+    word."""
     import numpy as np
 
-    popcount8 = np.frombuffer(_POPCOUNT8, np.uint8)
     n = len(indptr) - 1
     n_edges = len(indices)
     deg = np.diff(indptr).astype(np.int64)
-    per_d = np.zeros(max_d + 1, np.int64)
     seen = np.zeros(n, np.uint64)
     frontier = np.zeros(n, np.uint64)
     nxt = np.zeros(n, np.uint64)
@@ -245,12 +262,8 @@ def _bitbfs_level_counts(indptr, indices, words, max_d: int):
         reached = [active]
         for d in range(1, max_d + 1):
             counts = deg[active]
-            fanout = int(counts.sum())
-            if 4 * fanout < n_edges:
-                starts = indptr[active].astype(np.int64)
-                offsets = np.cumsum(counts) - counts
-                pos = np.repeat(starts - offsets, counts) + np.arange(fanout)
-                hops = indices[pos]
+            if 4 * int(counts.sum()) < n_edges:
+                hops = indices[_fanout_positions(indptr, counts, active)]
                 np.bitwise_or.at(nxt, hops, np.repeat(new, counts))
                 targets = np.unique(hops)
                 frontier[active] = 0
@@ -266,14 +279,81 @@ def _bitbfs_level_counts(indptr, indices, words, max_d: int):
                 new = full[active]
             if not len(active):
                 break
-            bits = popcount8[new.view(np.uint8)]
-            per_d[d] += int(bits.sum(dtype=np.int64))
+            yield d, active, new
             seen[active] |= new
             frontier[active] = new
             reached.append(active)
         frontier[active] = 0
         seen[np.concatenate(reached)] = 0
+
+
+def _bitbfs_level_counts(indptr, indices, words, max_d: int):
+    """Ordered (source, target) pairs per shortest distance 1..max_d
+    (index d of the returned int64 array), summed over the sources in
+    `words` (`_bitbfs_levels`): a level's pair count is the popcount of
+    its newly reached bits."""
+    import numpy as np
+
+    popcount8 = np.frombuffer(_POPCOUNT8, np.uint8)
+    per_d = np.zeros(max_d + 1, np.int64)
+    for d, _, new in _bitbfs_levels(indptr, indices, words, max_d):
+        per_d[d] += int(popcount8[new.view(np.uint8)].sum(dtype=np.int64))
     return per_d
+
+
+def _harmonic_sums(indptr, indices, max_d: int):
+    """Per vertex v, sum 1/d(s, v) over the s within max_d hops: v's
+    harmonic centrality, since d(s, v) = d(v, s). Per level d, the
+    sources that first reach v are counted over all words before the
+    1/d weighting, so the float sum does not depend on word order."""
+    import numpy as np
+
+    popcount8 = np.frombuffer(_POPCOUNT8, np.uint8)
+    n = len(indptr) - 1
+    per_d = np.zeros((max_d + 1, n), np.int64)
+    for d, active, new in _bitbfs_levels(indptr, indices, range(-(-n // 64)), max_d):
+        per_d[d, active] += popcount8[new.view(np.uint8)].reshape(-1, 8).sum(1, np.int64)
+    return sum((per_d[d] / d for d in range(1, max_d + 1)), np.zeros(n))
+
+
+def _brandes_scores(indptr, indices, sources, max_d: int):
+    """Per vertex, its Brandes dependency summed over `sources` (vertex
+    labels, never counted for themselves) on shortest paths of at most
+    max_d hops. Level-synchronous: the forward sweep sums path counts
+    sigma along each level's DAG edges (tails at d-1, heads first
+    reached at d); the backward sweep walks them deep to shallow,
+    adding sigma_v/sigma_w * (1 + delta_w) to each tail v. A vertex is
+    reached once its sigma is positive; only the vertices a source
+    reached are reset."""
+    import numpy as np
+
+    n = len(indptr) - 1
+    deg = np.diff(indptr).astype(np.int64)
+    sigma = np.zeros(n)
+    delta = np.zeros(n)
+    bc = np.zeros(n)
+    for s in sources:
+        sigma[s] = 1.0
+        reached = [np.array([s])]
+        dag = []
+        for _ in range(max_d):
+            counts = deg[reached[-1]]
+            heads = indices[_fanout_positions(indptr, counts, reached[-1])]
+            tails = np.repeat(reached[-1], counts)
+            fresh = sigma[heads] == 0
+            tails, heads = tails[fresh], heads[fresh]
+            if not len(heads):
+                break
+            np.add.at(sigma, heads, sigma[tails])
+            reached.append(np.unique(heads))
+            dag.append((tails, heads))
+        for tails, heads in reversed(dag):
+            np.add.at(delta, tails, sigma[tails] / sigma[heads] * (1.0 + delta[heads]))
+        touched = np.concatenate(reached)
+        bc[touched[1:]] += delta[touched[1:]]
+        sigma[touched] = 0.0
+        delta[touched] = 0.0
+    return bc
 
 
 def _bitbfs_pairs_by_distance(
@@ -336,36 +416,22 @@ def connected_pairs_by_distance(
     `bidirectional` and `snapshot_edges` produce; self-loops and
     duplicate edges are ignored.
 
-    Two tiers, split by the session's broadcast budget
-    (`spark.sql.autoBroadcastJoinThreshold` — no knob of its own): the
-    edges are persisted and read once as an Arrow table, up to one row
-    past budget/4 (with both orientations given, each row is one 4-byte
-    CSR entry). If they fit and their int32 CSR (entries plus row
-    offsets) is within the budget, the bit-parallel multi-source BFS runs over the
-    broadcast CSR in a single job (`_bitbfs_pairs_by_distance`). Larger
-    adjacencies take the distributed pair BFS (`_pair_bfs_by_distance`),
-    which reuses the persisted edges. The budget is a memory cap, not a
-    speed crossover: the kernel is the faster tier at every size
-    measured, but it holds the whole graph on the driver and in every
-    task. Past what the pair BFS can hold, the approximate hop-plot
+    Two tiers, by the BFS family's one rule (`_driver_csr`): the edges
+    are persisted and probed once; within the broadcast budget the
+    bit-parallel multi-source BFS runs over the broadcast CSR in a
+    single job (`_bitbfs_pairs_by_distance`), above it the distributed
+    pair BFS (`_pair_bfs_by_distance`) reuses the persisted edges. Past
+    what the pair BFS can hold, the approximate hop-plot
     (`approx_hop_plot`, HyperBall) is the remaining path.
     """
-    spark = edges.sparkSession
-    budget = session_broadcast_bytes(spark)
-    if budget == 0:
-        return _pair_bfs_by_distance(edges, max_d)
     # persisted for the probe's one pass, so that a graph over the budget
     # does not recompute its edge plan in the pair BFS
     edges = edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        max_rows = budget // 4
-        table = edges.limit(max_rows + 1).toArrow()
-        csr = _csr_from_arrow(table) if table.num_rows <= max_rows else None
-        del table
-        if csr is not None and csr[0].nbytes + csr[1].nbytes <= budget:
-            return _bitbfs_pairs_by_distance(spark, *csr, max_d)
-        del csr
-        return _pair_bfs_by_distance(edges, max_d)
+        csr = _driver_csr(edges)
+        if csr is None:
+            return _pair_bfs_by_distance(edges, max_d)
+        return _bitbfs_pairs_by_distance(edges.sparkSession, *csr[1:], max_d)
     finally:
         edges.unpersist()
 
@@ -1559,21 +1625,16 @@ def local_clustering(und_edges: DataFrame, top_k: int = 100) -> DataFrame:
     )
 
 
-def harmonic_centrality(
-    bidir: DataFrame,
-    max_d: int = 20,
-    local_threshold: int = 2000,
-) -> DataFrame:
-    """Exact harmonic centrality sum_{v != u} 1/d(u, v) over an
-    undirected edge list given with BOTH orientations (columns s, d).
+def harmonic_centrality(bidir: DataFrame, max_d: int = 20) -> DataFrame:
+    """Exact harmonic centrality sum 1/d(u, v) over the v != u within
+    max_d hops, over an undirected edge list given with BOTH
+    orientations (columns s, d); rows with a null endpoint and
+    self-loops are ignored.
 
-    Two tiers: at or below `local_threshold` directed edges the whole graph is BFS'd
-    driver-local (the distributed loop's ~6 jobs/round are pure overhead
-    on a fixture-sized graph); above it, a simultaneous multi-source BFS
-    runs distributed — the frontier carries (src, node) pairs, each
-    round is one join + one fused dedup/anti shuffle, with frontier
-    partitioning pinned to the cluster's parallelism so round-over-round
-    unions don't inflate the task count.
+    Two tiers, by the hop-plot's rule (`_driver_csr`): within the
+    broadcast budget the bit-parallel BFS levels run on the driver over
+    the probe's CSR (`_harmonic_sums`); above it, the distributed
+    multi-source BFS (`_sweep_bfs`) sums 1/d over its levels.
 
     Exact all-pairs state is O(n^2); that is inherent to EXACT harmonic
     centrality. The 100 TB answer is the HyperBall harmonic estimator
@@ -1581,79 +1642,29 @@ def harmonic_centrality(
     `functions/sketches.py` — this operator is the exact small-scale oracle
     for it, like exact hop-plot vs graph_hyperball.
     """
-    spark = bidir.sparkSession
-    n_edges = bidir.limit(local_threshold + 1).count()
-    if n_edges <= local_threshold:
-        from collections import defaultdict, deque
+    csr = _driver_csr(bidir.select(F.col("s").alias("src"), F.col("d").alias("dst")))
+    if csr is not None:
+        ids, indptr, indices = csr
+        h = _harmonic_sums(indptr, indices, max_d)
+        return _local_scores(bidir.sparkSession, ids, h, "id int, harmonic double")
 
-        adj: dict = defaultdict(set)
-        for r in bidir.collect():
-            if r[0] != r[1]:
-                adj[r[0]].add(r[1])
-        rows = []
-        for s in adj:
-            dist = {s: 0}
-            dq = deque([s])
-            h = 0.0
-            while dq:
-                u = dq.popleft()
-                if dist[u] >= max_d:
-                    continue
-                for v in adj[u]:
-                    if v not in dist:
-                        dist[v] = dist[u] + 1
-                        dq.append(v)
-                        h += 1.0 / dist[v]
-            rows.append((s, round(h, 6)))
-        return local_rows(
-            spark, sorted(rows), "id int, harmonic double"
-        ).orderBy("id")
+    def finish(edges, levels, hold):
+        inv = [lv.select("src", F.lit(1 / d if d else 0.0).alias("w")) for d, lv in enumerate(levels)]
+        return (
+            functools.reduce(DataFrame.unionByName, inv)
+            .filter(F.col("w") > 0)
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.round(F.sum("w"), 6).alias("harmonic"))
+            .orderBy("id")
+        )
 
-    par = spark.sparkContext.defaultParallelism
-    edges = bidir.repartition(par, "s").persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = edges.select(F.col("s").alias("id")).distinct()
-    seen = (
-        nodes.select(
-            F.col("id").alias("src"), F.col("id").alias("node"),
-            F.lit(0).alias("dist"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    frontier = seen
-    for d in range(1, max_d + 1):
-        cand = (
-            frontier.join(edges, frontier.node == edges.s)
-            .select("src", F.col("d").alias("node"), F.lit(d).alias("dist"))
-        )
-        # dedup + seen-subtraction fused into one shuffle (tag-and-group,
-        # same trick as the hop-plot's pair BFS)
-        nxt = (
-            cand.select("src", "node", F.lit(0).alias("_seen"))
-            .unionByName(seen.select("src", "node", F.lit(1).alias("_seen")))
-            .groupBy("src", "node")
-            .agg(F.max("_seen").alias("_seen"))
-            .filter(F.col("_seen") == 0)
-            .select("src", "node", F.lit(d).alias("dist"))
-            .transform(cut_lineage)
-        )
-        if nxt.isEmpty():
-            break
-        seen = seen.unionByName(nxt).transform(cut_lineage)
-        frontier = nxt
-    edges.unpersist()
-    return (
-        seen.filter(F.col("dist") > 0)
-        .groupBy(F.col("src").alias("id"))
-        .agg(F.round(F.sum(1.0 / F.col("dist")), 6).alias("harmonic"))
-        .orderBy("id")
-    )
+    return _sweep_bfs(bidir, None, max_d, finish)
 
 
 def betweenness_sampled(
     bidir: DataFrame,
     source_mod: int | None = None,
     max_d: int = 20,
-    local_threshold: int = 2000,
 ) -> DataFrame:
     """Betweenness centrality by Brandes' algorithm (Brandes 2001) over
     an undirected edge list given with BOTH orientations (columns s, d),
@@ -1661,142 +1672,130 @@ def betweenness_sampled(
     sources = exact betweenness) and shortest paths of length <= max_d
     (k-bounded betweenness). Scores sum the pair-dependency
     sigma_st(v)/sigma_st over ORDERED (s, t) pairs — no /2 halving — so
-    sampled and exact runs share one definition.
+    sampled and exact runs share one definition. Rows with a null
+    endpoint and self-loops are ignored.
 
-    Two tiers, like `harmonic_centrality`: driver-local Brandes
-    below `local_threshold` edges; above it, the standard distributed
-    formulation — a forward multi-source BFS accumulating per-(src,node)
-    shortest-path counts sigma (one join + one sum-aggregate per level),
-    then a backward sweep over levels accumulating dependencies delta
-    (one join per level, walking depth max..1). Per-source state is one
-    row per reached (src, node): with S sampled sources the working set
-    is O(S * n) — the reason sampling exists (Brandes-Pich 2007); exact
-    all-sources runs are a fixture/subgraph tool.
+    Two tiers, by the hop-plot's rule (`_driver_csr`): within the
+    broadcast budget, a level-synchronous Brandes runs on the driver
+    over the probe's CSR (`_brandes_scores`); above it, the distributed
+    forward sweep (`_sweep_bfs`, per-(src, node) path counts sigma) is
+    followed by a backward sweep over its levels accumulating
+    dependencies delta (one join per level, walking depth max..1).
+    Per-source state is one row per reached (src, node): with S sampled
+    sources the working set is O(S * n) — the reason sampling exists
+    (Brandes-Pich 2007); exact all-sources runs are a fixture/subgraph
+    tool.
     """
-    spark = bidir.sparkSession
-    n_edges = bidir.limit(local_threshold + 1).count()
-    if n_edges <= local_threshold:
-        from collections import defaultdict, deque
+    csr = _driver_csr(bidir.select(F.col("s").alias("src"), F.col("d").alias("dst")))
+    if csr is not None:
+        import numpy as np
 
-        adj: dict = defaultdict(set)
-        for r in bidir.collect():
-            if r[0] != r[1]:
-                adj[r[0]].add(r[1])
-        bc: dict = defaultdict(float)
-        sources = [
-            s for s in adj if source_mod is None or s % source_mod == 0
+        ids, indptr, indices = csr
+        sources = range(len(ids)) if source_mod is None else np.flatnonzero(ids % source_mod == 0)
+        bc = _brandes_scores(indptr, indices, sources, max_d)
+        return _local_scores(bidir.sparkSession, ids, bc, "node int, bc double")
+
+    def finish(edges, levels, hold):
+        # delta over levels deep -> shallow; contribution of w to
+        # predecessor v is (sigma_v / sigma_w) * (1 + delta_w)
+        parts: list[DataFrame] = []
+        delta = None  # (src, node, delta) for the level below the current one
+        for d in range(len(levels) - 2, -1, -1):
+            below, one_plus = levels[d + 1], F.lit(1.0)
+            if delta is not None:
+                below = below.join(delta, ["src", "node"], "left")
+                one_plus = 1.0 + F.coalesce("delta", F.lit(0.0))
+            w_side = below.select(
+                "src", F.col("node").alias("w"), (one_plus / F.col("sigma")).alias("w_term")
+            )
+            v_side = levels[d].select("src", F.col("node").alias("v"), "sigma")
+            delta = hold(
+                v_side.join(edges, v_side.v == edges.s)
+                .select("src", "v", "sigma", F.col("d").alias("w"))
+                .join(w_side, ["src", "w"])
+                .groupBy("src", F.col("v").alias("node"))
+                .agg(F.sum(F.col("sigma") * F.col("w_term")).alias("delta"))
+                .transform(cut_lineage)
+            )
+            release(levels[d + 1])
+            parts.append(delta.filter(F.col("node") != F.col("src")))
+        if not parts:
+            return local_rows(edges.sparkSession, [], "node int, bc double")
+        return (
+            functools.reduce(DataFrame.unionByName, parts)
+            .groupBy(F.col("node").cast("int").alias("node"))
+            .agg(F.round(F.sum("delta"), 6).alias("bc"))
+            .filter(F.col("bc") > 0)
+            .orderBy("node")
+        )
+
+    return _sweep_bfs(bidir, source_mod, max_d, finish)
+
+
+def _local_scores(spark, ids, scores, schema: str) -> DataFrame:
+    """Rows (ids[v], scores[v] rounded to 6 dp) of positive scores, in id order."""
+    import numpy as np
+
+    hit = np.flatnonzero(scores > 0)
+    rows = [(i, round(x, 6)) for i, x in zip(ids[hit].tolist(), scores[hit].tolist())]
+    return local_rows(spark, rows, schema).orderBy(schema.split()[0])
+
+
+def _sweep_bfs(bidir: DataFrame, source_mod: int | None, max_d: int, finish):
+    """The distributed tier of `harmonic_centrality` and
+    `betweenness_sampled`: a multi-source BFS from the ids with `id %
+    source_mod == 0` (None = all); levels[d] holds (src, node, sigma) at
+    distance d, sigma the number of shortest paths. A level is one join
+    plus one aggregate that sums sigma and drops the pairs of the two
+    levels before it (on an undirected graph a neighbour of level d is
+    at d-1, d or d+1). `finish(edges, levels, hold)` turns the levels
+    into the result, which is cut; every held frame is released before
+    return, so a single `release` frees the result."""
+    par = bidir.sparkSession.sparkContext.defaultParallelism
+    held: list[DataFrame] = []
+
+    def hold(df: DataFrame) -> DataFrame:
+        held.append(df)
+        return df
+
+    try:
+        edges = hold(
+            bidir.filter(F.col("s") != F.col("d"))
+            .repartition(par, "s")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        srcs = edges.select(F.col("s").alias("id")).distinct()
+        if source_mod is not None:
+            srcs = srcs.filter(F.col("id") % source_mod == 0)
+        levels = [
+            hold(
+                srcs.select(
+                    F.col("id").alias("src"), F.col("id").alias("node"),
+                    F.lit(1.0).alias("sigma"),
+                ).transform(cut_lineage)
+            )
         ]
-        for s in sources:
-            dist = {s: 0}
-            sigma = {s: 1.0}
-            order = []
-            preds = defaultdict(list)
-            dq = deque([s])
-            while dq:
-                u = dq.popleft()
-                order.append(u)
-                if dist[u] >= max_d:
-                    continue
-                for v in adj[u]:
-                    if v not in dist:
-                        dist[v] = dist[u] + 1
-                        dq.append(v)
-                    if dist[v] == dist[u] + 1:
-                        sigma[v] = sigma.get(v, 0.0) + sigma[u]
-                        preds[v].append(u)
-            delta = defaultdict(float)
-            for w in reversed(order):
-                for v in preds[w]:
-                    delta[v] += (sigma[v] / sigma[w]) * (1.0 + delta[w])
-            for v, val in delta.items():
-                if v != s:
-                    bc[v] += val
-        rows = sorted((int(v), round(val, 6)) for v, val in bc.items() if val > 0)
-        return local_rows(spark, rows, "node int, bc double").orderBy("node")
-
-    par = spark.sparkContext.defaultParallelism
-    edges = bidir.filter(F.col("s") != F.col("d")).repartition(
-        par, "s"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    srcs = edges.select(F.col("s").alias("id")).distinct()
-    if source_mod is not None:
-        srcs = srcs.filter(F.col("id") % source_mod == 0)
-
-    # forward: levels[d] = (src, node, sigma) at shortest distance d
-    levels: list[DataFrame] = [
-        srcs.select(
-            F.col("id").alias("src"), F.col("id").alias("node"),
-            F.lit(1.0).alias("sigma"),
-        ).transform(cut_lineage)
-    ]
-    seen = levels[0].select("src", "node")
-    for _d in range(1, max_d + 1):
-        cand = (
-            levels[-1].join(edges, levels[-1].node == edges.s)
-            .select("src", F.col("d").alias("node"), "sigma")
-        )
-        # sigma sums over all predecessors; fuse dedup-vs-seen into the
-        # same aggregate with a tag column (visited rows poison the group)
-        nxt = (
-            cand.select("src", "node", "sigma", F.lit(0).alias("_seen"))
-            .unionByName(
-                seen.select(
-                    "src", "node", F.lit(0.0).alias("sigma"),
-                    F.lit(1).alias("_seen"),
-                )
+        for _ in range(max_d):
+            cand = (
+                levels[-1].join(edges, levels[-1].node == edges.s)
+                .select("src", F.col("d").alias("node"), "sigma", F.lit(0).alias("_seen"))
             )
-            .groupBy("src", "node")
-            .agg(F.sum("sigma").alias("sigma"), F.max("_seen").alias("_seen"))
-            .filter(F.col("_seen") == 0)
-            .select("src", "node", "sigma")
-            .transform(cut_lineage)
-        )
-        if nxt.isEmpty():
-            break
-        levels.append(nxt)
-        seen = seen.unionByName(nxt.select("src", "node")).transform(cut_lineage)
-
-    # backward: delta over levels deep -> shallow; contribution of w to
-    # predecessor v is (sigma_v / sigma_w) * (1 + delta_w)
-    bc_parts: list[DataFrame] = []
-    delta = None  # (src, node, delta) for the level below the current one
-    for d in range(len(levels) - 2, -1, -1):
-        below = levels[d + 1]
-        if delta is not None:
-            below = below.join(delta, ["src", "node"], "left").select(
-                "src", "node", "sigma",
-                F.coalesce("delta", F.lit(0.0)).alias("delta"),
+            seen = [lv.select("src", "node", F.lit(0.0), F.lit(1)) for lv in levels[-2:]]
+            nxt = hold(
+                functools.reduce(DataFrame.union, seen, cand)
+                .groupBy("src", "node")
+                .agg(F.sum("sigma").alias("sigma"), F.max("_seen").alias("_seen"))
+                .filter(F.col("_seen") == 0)
+                .select("src", "node", "sigma")
+                .transform(cut_lineage)
             )
-        else:
-            below = below.select("src", "node", "sigma", F.lit(0.0).alias("delta"))
-        w_side = below.select(
-            "src", F.col("node").alias("w"),
-            ((1.0 + F.col("delta")) / F.col("sigma")).alias("w_term"),
-        )
-        v_side = levels[d].select("src", F.col("node").alias("v"), "sigma")
-        contrib = (
-            v_side.join(edges, v_side.v == edges.s)
-            .select("src", "v", "sigma", F.col("d").alias("w"))
-            .join(w_side, ["src", "w"])
-            .groupBy("src", F.col("v").alias("node"))
-            .agg(F.sum(F.col("sigma") * F.col("w_term")).alias("delta"))
-            .transform(cut_lineage)
-        )
-        delta = contrib
-        bc_parts.append(contrib.filter(F.col("node") != F.col("src")))
-
-    edges.unpersist()
-    if not bc_parts:
-        return local_rows(spark, [], "node int, bc double")
-    allc = bc_parts[0]
-    for p in bc_parts[1:]:
-        allc = allc.unionByName(p)
-    return (
-        allc.groupBy(F.col("node").cast("int").alias("node"))
-        .agg(F.round(F.sum("delta"), 6).alias("bc"))
-        .filter(F.col("bc") > 0)
-        .orderBy("node")
-    )
+            if nxt.isEmpty():
+                break
+            levels.append(nxt)
+        return finish(edges, levels, hold).transform(cut_lineage)
+    finally:
+        for df in held:
+            release(df)
 
 
 def _md5_round(*cols: str, r: int):

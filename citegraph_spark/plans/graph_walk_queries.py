@@ -124,18 +124,15 @@ FROM sp GROUP BY 1 ORDER BY id
 )
 def fixture_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact harmonic centrality sum(1/d(u,v)) on the undirected fixture
-    graph via simultaneous multi-source BFS: the frontier carries
-    (src, node) pairs, each round is ONE join + ONE anti-join against
-    the seen set — the same fused-shuffle cadence as the hop-plot BFS
-    (operators/graph.py:244-255), generalized to per-source distances.
+    graph (operators/graph.py `harmonic_centrality`).
 
     Exact all-pairs state is O(n^2) and is the point of this operator
     only at fixture/subgraph scale; the 100 TB path is the HyperBall
     harmonic estimator (Boldi-Vigna 2013) whose register state already
     exists in functions/sketches.py — same contract as exact-hop-plot
-    vs graph_hyperball. The operator takes the driver-local fast path
-    below 2000 edges (operators/graph.py harmonic_centrality), exactly
-    like the hop-plot BFS does."""
+    vs graph_hyperball. Like the hop-plot, the operator runs its numpy
+    kernel on the driver whenever the graph's CSR fits the broadcast
+    budget, as the fixture's does; tests force the distributed tier."""
     from ..operators.graph import harmonic_centrality
 
     edges = fixture_citations(spark).filter(F.col("from") != F.col("to"))
@@ -188,8 +185,9 @@ def fixture_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortest per (s, t), and sum per-vertex pass-through fractions
     sigma_st(v)/sigma_st — a completely different algorithm from the
     Brandes forward/backward sweep under test, which is the strongest
-    kind of oracle. Driver-local fast path fires at fixture size;
-    tests force the distributed sweep too."""
+    kind of oracle. The driver's numpy Brandes runs at fixture size (the
+    CSR fits the broadcast budget); tests force the distributed sweep
+    too."""
     from ..operators.graph import betweenness_sampled
 
     edges = fixture_citations(spark).filter(F.col("from") != F.col("to"))
@@ -254,14 +252,7 @@ def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(edges.select(F.col("to").alias("s"), F.col("from").alias("d")))
         .distinct()
     )
-    # raised local gate: 100k directed edges is a ~2 MB collect, and the
-    # distributed sweep's ~20 fixed Spark jobs cost 25x the answer at
-    # this size (50 s vs 2 s measured at sf0.01). The distributed path
-    # is exercised by tests (local_threshold=0) and engages on its own
-    # at sf>=0.1 edge counts.
-    return betweenness_sampled(
-        bidir, source_mod=1997, max_d=2, local_threshold=100_000
-    )
+    return betweenness_sampled(bidir, source_mod=1997, max_d=2)
 
 
 @register(

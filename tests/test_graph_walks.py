@@ -1,12 +1,13 @@
-"""Brute-force checks for deterministic random walks and harmonic
-centrality (both the driver-local fast path and the distributed
-multi-source BFS, forced via local_threshold=0)."""
+"""Brute-force checks for deterministic random walks, harmonic
+centrality and betweenness (both the driver kernel and the distributed
+multi-source BFS, forced by turning the broadcast budget off)."""
 
 from __future__ import annotations
 
 import hashlib
-from collections import defaultdict, deque
+from collections import defaultdict
 
+from _bfs_reference import reference_harmonic
 from pyspark.sql import functions as F
 
 from citegraph_spark.fixtures import fixture_citations
@@ -50,29 +51,7 @@ def test_random_walks_match_bruteforce(spark):
     assert got == expected
 
 
-def _local_harmonic(edges: list[tuple[int, int]]) -> dict[int, float]:
-    adj = defaultdict(set)
-    for s, t in edges:
-        if s != t:
-            adj[s].add(t)
-            adj[t].add(s)
-    out = {}
-    for s in adj:
-        dist = {s: 0}
-        dq = deque([s])
-        h = 0.0
-        while dq:
-            u = dq.popleft()
-            for v in adj[u]:
-                if v not in dist:
-                    dist[v] = dist[u] + 1
-                    dq.append(v)
-                    h += 1.0 / dist[v]
-        out[s] = round(h, 6)
-    return out
-
-
-def test_harmonic_centrality_both_paths_match_bruteforce(spark):
+def test_harmonic_centrality_both_paths_match_bruteforce(spark, broadcast_off):
     fix = fixture_citations(spark).filter(F.col("from") != F.col("to"))
     bidir = (
         fix.select(F.col("from").alias("s"), F.col("to").alias("d"))
@@ -80,15 +59,13 @@ def test_harmonic_centrality_both_paths_match_bruteforce(spark):
         .distinct()
     )
     edge_list = [(r["s"], r["d"]) for r in bidir.collect()]
-    expected = _local_harmonic(edge_list)
+    expected = reference_harmonic(edge_list, max_d=20)
 
     local = {
         r["id"]: r["harmonic"] for r in harmonic_centrality(bidir).collect()
     }
-    dist = {
-        r["id"]: r["harmonic"]
-        for r in harmonic_centrality(bidir, local_threshold=0).collect()
-    }
+    with broadcast_off():
+        dist = {r["id"]: r["harmonic"] for r in harmonic_centrality(bidir).collect()}
     assert local == expected
     for k, v in expected.items():
         assert abs(dist[k] - v) < 1e-6
@@ -121,7 +98,7 @@ def test_betweenness_known_graphs(spark):
     assert got == {1: 1.0, 2: 1.0, 3: 1.0, 4: 1.0}
 
 
-def test_betweenness_distributed_matches_local(spark):
+def test_betweenness_distributed_matches_local(spark, broadcast_off):
     from citegraph_spark.operators.graph import betweenness_sampled
 
     fix = fixture_citations(spark).filter(F.col("from") != F.col("to"))
@@ -131,10 +108,8 @@ def test_betweenness_distributed_matches_local(spark):
         .distinct()
     )
     local = {r["node"]: r["bc"] for r in betweenness_sampled(bidir).collect()}
-    dist = {
-        r["node"]: r["bc"]
-        for r in betweenness_sampled(bidir, local_threshold=0).collect()
-    }
+    with broadcast_off():
+        dist = {r["node"]: r["bc"] for r in betweenness_sampled(bidir).collect()}
     assert set(local) == set(dist)
     for k, v in local.items():
         assert abs(dist[k] - v) < 1e-6
@@ -144,12 +119,11 @@ def test_betweenness_distributed_matches_local(spark):
         r["node"]: r["bc"]
         for r in betweenness_sampled(bidir, source_mod=2, max_d=2).collect()
     }
-    dis_b = {
-        r["node"]: r["bc"]
-        for r in betweenness_sampled(
-            bidir, source_mod=2, max_d=2, local_threshold=0
-        ).collect()
-    }
+    with broadcast_off():
+        dis_b = {
+            r["node"]: r["bc"]
+            for r in betweenness_sampled(bidir, source_mod=2, max_d=2).collect()
+        }
     assert set(loc_b) == set(dis_b)
     for k, v in loc_b.items():
         assert abs(dis_b[k] - v) < 1e-6

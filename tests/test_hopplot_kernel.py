@@ -1,27 +1,39 @@
-"""The exact hop-plot BFS against the pure-Python reference BFS.
+"""The BFS family — the exact hop-plot, harmonic centrality and
+betweenness — against the pure-Python references.
 
 Below the session's broadcast budget `connected_pairs_by_distance` runs
-the bit-parallel multi-source kernel over a broadcast CSR; above it, the
-distributed pair BFS. The cases here are the kernel's edge cases, run
-through Spark with both orientations of every edge (the function's input
-contract) and through the kernel's numpy core on the driver. A subset
-also runs through the pair BFS, so both tiers are held to one contract.
-Last comes the persisted-state hygiene of both tiers in one session."""
+the bit-parallel multi-source kernel over a broadcast CSR, and
+`harmonic_centrality` and `betweenness_sampled` run their numpy kernels
+over the same CSR on the driver; above it, each takes its distributed
+tier. One probe, `_driver_csr`, makes that choice for all three. The
+cases here are the kernels' edge cases, run through Spark with both
+orientations of every edge (the functions' input contract) and through
+the hop-plot kernel's numpy core on the driver. A subset also runs
+through the distributed tiers, so both tiers are held to one contract.
+Last comes the persisted-state hygiene of both hop-plot tiers in one
+session."""
 
 from __future__ import annotations
 
 import random
 
+import numpy as np
 import pyarrow as pa
 import pytest
-from _bfs_reference import reference_pairs_by_distance
+from _bfs_reference import (
+    reference_betweenness,
+    reference_harmonic,
+    reference_pairs_by_distance,
+)
 
 from citegraph_spark.fixtures import fixture_citations, fixture_published
 from citegraph_spark.operators import graph
 from citegraph_spark.operators.graph import (
     _bitbfs_level_counts,
     _csr_from_arrow,
+    betweenness_sampled,
     connected_pairs_by_distance,
+    harmonic_centrality,
     snapshot_edges,
 )
 
@@ -64,8 +76,12 @@ CASES = {
     "many_small_components": (_many_components(), 20),
 }
 
-#: cases the distributed pair BFS is held to as well
+#: cases the distributed tiers are held to as well
 FALLBACK_CASES = ["empty", "self_loops_and_duplicates", "two_components", "max_d_truncates"]
+
+#: a path 1-2-3 and an edge 4-5, plus rows with a null endpoint, which
+#: every tier ignores
+WITH_NULLS = [(1, 2), (2, 3), (3, None), (None, 4), (4, 5), (None, None)]
 
 
 def _both_orientations(spark, pairs: list[tuple[int, int]]):
@@ -73,6 +89,35 @@ def _both_orientations(spark, pairs: list[tuple[int, int]]):
     and duplicates are kept, since the BFS must ignore them."""
     rows = pairs + [(b, a) for a, b in pairs]
     return spark.createDataFrame(rows, "src long, dst long")
+
+
+def _s_d(spark, pairs: list[tuple[int, int]]):
+    """`_both_orientations` with the (s, d) columns of harmonic
+    centrality and betweenness."""
+    return _both_orientations(spark, pairs).toDF("s", "d")
+
+
+def _no_nulls(pairs: list[tuple]) -> list[tuple]:
+    return [p for p in pairs if None not in p]
+
+
+def _kernel_only(monkeypatch):
+    """Fail the test if harmonic centrality or betweenness leaves the
+    driver kernel for the distributed sweep."""
+
+    def fail(*a):
+        raise AssertionError("the distributed sweep ran")
+
+    monkeypatch.setattr(graph, "_sweep_bfs", fail)
+
+
+def _harmonic(df, max_d: int) -> dict:
+    return {r["id"]: r["harmonic"] for r in harmonic_centrality(df, max_d=max_d).collect()}
+
+
+def _betweenness(df, source_mod, max_d: int) -> dict:
+    rows = betweenness_sampled(df, source_mod=source_mod, max_d=max_d).collect()
+    return {r["node"]: r["bc"] for r in rows}
 
 
 def _arrow(pairs: list[tuple[int, int]]) -> pa.Table:
@@ -105,7 +150,7 @@ def test_kernel_core_matches_reference(name):
     """The numpy core on the driver, all words in one call: per-distance
     ORDERED pair counts, twice the reference's unordered ones."""
     pairs, max_d = CASES[name]
-    indptr, indices = _csr_from_arrow(_arrow(pairs))
+    _, indptr, indices = _csr_from_arrow(_arrow(pairs))
     n_words = -(-(len(indptr) - 1) // 64)
     per_d = _bitbfs_level_counts(indptr, indices, range(n_words), max_d)
     want = reference_pairs_by_distance(pairs, max_d)
@@ -114,6 +159,63 @@ def test_kernel_core_matches_reference(name):
         assert per_d[d] == 2 * (cum - prev)
         prev = cum
     assert per_d.sum() == 2 * prev
+
+
+@pytest.mark.parametrize("name", sorted(CASES) + ["with_nulls"])
+def test_harmonic_kernel_matches_reference(spark, monkeypatch, name):
+    pairs, max_d = CASES.get(name, (WITH_NULLS, 20))
+    _kernel_only(monkeypatch)
+    got = _harmonic(_s_d(spark, pairs), max_d)
+    assert got == reference_harmonic(_no_nulls(pairs), max_d)
+
+
+@pytest.mark.parametrize("name", sorted(CASES) + ["with_nulls"])
+def test_betweenness_kernel_matches_reference(spark, monkeypatch, name):
+    """Exact, with sampled sources, and with sampled sources and a
+    two-hop cap."""
+    pairs, max_d = CASES.get(name, (WITH_NULLS, 20))
+    _kernel_only(monkeypatch)
+    df = _s_d(spark, pairs)
+    for source_mod, cap in [(None, max_d), (3, max_d), (2, 2)]:
+        got = _betweenness(df, source_mod, cap)
+        assert got == reference_betweenness(_no_nulls(pairs), source_mod, cap), (
+            source_mod,
+            cap,
+        )
+
+
+@pytest.mark.parametrize("name", FALLBACK_CASES + ["with_nulls"])
+def test_sweep_matches_reference(spark, broadcast_off, name):
+    """Harmonic centrality and betweenness with the broadcast budget
+    off, which sends both to the distributed sweep."""
+    pairs, max_d = CASES.get(name, (WITH_NULLS, 20))
+    df = _s_d(spark, pairs)
+    with broadcast_off():
+        harmonic = _harmonic(df, max_d)
+        bc = _betweenness(df, 2, min(max_d, 3))
+    want = reference_harmonic(_no_nulls(pairs), max_d)
+    assert harmonic.keys() == want.keys()
+    for k, v in want.items():
+        assert abs(harmonic[k] - v) < 1e-6
+    want = reference_betweenness(_no_nulls(pairs), 2, min(max_d, 3))
+    assert bc.keys() == want.keys()
+    for k, v in want.items():
+        assert abs(bc[k] - v) < 1e-6
+
+
+#: operator -> (call on src/dst edges, its kernel, its distributed tier,
+#: which for each operator carries (source, vertex) pairs)
+TIERS = {
+    "hop_plot": (
+        connected_pairs_by_distance, "_bitbfs_pairs_by_distance", "_pair_bfs_by_distance"
+    ),
+    "harmonic": (lambda e: harmonic_centrality(e.toDF("s", "d")), "_harmonic_sums", "_sweep_bfs"),
+    "betweenness": (
+        lambda e: betweenness_sampled(e.toDF("s", "d"), source_mod=2, max_d=2),
+        "_brandes_scores",
+        "_sweep_bfs",
+    ),
+}
 
 
 @pytest.mark.parametrize(
@@ -128,32 +230,40 @@ def test_kernel_core_matches_reference(name):
     ],
 )
 def test_tier_follows_csr_bytes(spark, monkeypatch, budget, tier):
-    monkeypatch.setattr(graph, "_bitbfs_pairs_by_distance", lambda *a: "kernel")
-    monkeypatch.setattr(graph, "_pair_bfs_by_distance", lambda *a: "pair")
+    """One cutover for the whole BFS family: at each budget the same
+    edges select the same tier for the hop-plot, harmonic centrality
+    and betweenness."""
     edges = _both_orientations(spark, [(2 * i, 2 * i + 1) for i in range(10)])
     key = "spark.sql.autoBroadcastJoinThreshold"
     before = spark.conf.get(key)
     spark.conf.set(key, str(budget))
     try:
-        assert connected_pairs_by_distance(edges) == tier
+        for op, (call, kernel, fallback) in TIERS.items():
+            ran = []
+            with monkeypatch.context() as m:
+                m.setattr(graph, kernel, lambda *a: ran.append("kernel") or np.zeros(0))
+                m.setattr(graph, fallback, lambda *a: ran.append("pair"))
+                call(edges)
+            assert ran == [tier], op
     finally:
         spark.conf.set(key, before)
 
 
 def test_csr_shapes():
-    indptr, indices = _csr_from_arrow(_arrow(CASES["self_loops_and_duplicates"][0]))
+    ids, indptr, indices = _csr_from_arrow(_arrow(CASES["self_loops_and_duplicates"][0]))
     # 1-2-3 path after dropping self-loops, duplicates and the 4-4 loop
+    assert ids.tolist() == [1, 2, 3]
     assert indptr.tolist() == [0, 1, 3, 4]
     assert indices.tolist() == [1, 0, 2, 1]
     assert indptr.dtype == indices.dtype == "int32"
 
-    indptr, indices = _csr_from_arrow(_arrow(CASES["v130_partial_last_word"][0]))
+    _, indptr, indices = _csr_from_arrow(_arrow(CASES["v130_partial_last_word"][0]))
     assert len(indptr) - 1 == 130
 
-    indptr, indices = _csr_from_arrow(_arrow(CASES["hub_forces_pull"][0]))
+    _, indptr, indices = _csr_from_arrow(_arrow(CASES["hub_forces_pull"][0]))
     assert 4 * (indptr[1] - indptr[0]) >= len(indices)  # the pull condition
 
-    indptr, indices = _csr_from_arrow(_arrow([]))
+    _, indptr, indices = _csr_from_arrow(_arrow([]))
     assert indptr.tolist() == [0] and len(indices) == 0
 
 

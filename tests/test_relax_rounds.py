@@ -2,7 +2,8 @@
 hits, sssp_bounded, multi_source_bfs, HyperBall, label_propagation), plus
 the ownership of the `lineage.shrink_rounds` operators (k_core, k_truss,
 maximal_independent_set, maximal_matching, connected_components_star,
-minimum_spanning_forest).
+minimum_spanning_forest) and of the BFS-family centralities
+(harmonic_centrality, betweenness_sampled).
 
 The round state is broadcast while it fits the round-state budget; with
 `spark.sql.autoBroadcastJoinThreshold=-1` (the `broadcast_off` fixture)
@@ -24,8 +25,10 @@ from citegraph_spark.fixtures import fixture_citations, fixture_published
 from citegraph_spark.functions.sketches import hyperball_hopplot
 from citegraph_spark.lineage import relax_rounds, release
 from citegraph_spark.operators.graph import (
+    betweenness_sampled,
     canonical_pairs,
     connected_components_star,
+    harmonic_centrality,
     hits,
     k_core,
     k_truss,
@@ -168,7 +171,9 @@ def test_one_round_keeps_the_static_partitioning(spark, broadcast_off, tier):
 
 def test_ported_operators_release_their_state(spark, broadcast_off):
     """One session: each operator on both tiers (for the shrink_rounds
-    operators: with the driver-local tail and with every round in Spark).
+    operators: with the driver-local tail and with every round in Spark;
+    for the BFS-family centralities: the driver kernel and the
+    distributed sweep).
     Once its result is released, no persisted RDD is left that was not
     there before."""
     sc = spark.sparkContext
@@ -189,6 +194,8 @@ def test_ported_operators_release_their_state(spark, broadcast_off):
         "maximal_independent_set": lambda: maximal_independent_set(_directed(spark)),
         "maximal_matching": lambda: maximal_matching(_directed(spark)),
         "minimum_spanning_forest": lambda: minimum_spanning_forest(_weighted(spark).withColumnRenamed("w", "weight")),
+        "harmonic_centrality": lambda: harmonic_centrality(_undirected(spark).toDF("s", "d")),
+        "betweenness_sampled": lambda: betweenness_sampled(_undirected(spark).toDF("s", "d"), source_mod=2, max_d=3),
     }
     before = persisted()
     for scope in (contextlib.nullcontext, broadcast_off):
