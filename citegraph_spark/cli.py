@@ -9,6 +9,15 @@ Input dir must contain `citations.txt` and `published-dates.txt`
 (reference text formats); `nodepairs.csv` is optional — without it the
 diameter denominator is computed from the BFS itself (the spec's d=20
 definition, docs/PA1.pdf p.3).
+
+`diameter` writes one exact hop-plot per published year's snapshot. When
+both inputs and the CSRs of all years fit the broadcast budget
+(`spark.sql.autoBroadcastJoinThreshold`), each input is read once and
+every year's BFS runs in one job (`snapshot_pairs_by_distance`: 5 jobs
+for a one-year graph, 15 for the 11 years of hep-th). Otherwise, and
+with `--approx`, each year plans its own snapshot (`snapshot_edges`)
+from the loader frames and runs its own hop-plot, re-parsing both
+inputs.
 """
 
 from __future__ import annotations
@@ -40,7 +49,9 @@ def main(argv: list[str] | None = None) -> int:
         density,
         hop_plot,
         hop_plot_df,
+        hop_plot_rows,
         snapshot_edges,
+        snapshot_pairs_by_distance,
     )
     from .session import get_spark
     from .sources import (
@@ -70,18 +81,32 @@ def main(argv: list[str] | None = None) -> int:
             r["year"]: r["total_pairs"]
             for r in load_nodepairs(spark, nodepairs).collect()
         }
-    years = sorted(
-        r["year"] for r in published.select("year").distinct().collect()
+
+    # every year's exact counts from one read of each input and one
+    # kernel job within the broadcast budget; None above it, and then each
+    # year plans its own snapshot
+    counts = None if args.approx else snapshot_pairs_by_distance(
+        citations, published, args.max_d
     )
+    if counts is not None:
+        years = list(counts)
+    else:
+        years = sorted(
+            r["year"] for r in published.select("year").distinct().collect()
+        )
     for year in years:
-        edges = snapshot_edges(citations, published, year)
-        if args.approx:
+        if counts is not None:
+            rows = hop_plot_rows(counts[year], total_pairs=totals.get(year))
+        elif args.approx:
             rows = approx_hop_plot(
-                edges, total_pairs=totals.get(year), max_d=args.max_d,
-                p=args.hll_p,
+                snapshot_edges(citations, published, year),
+                total_pairs=totals.get(year), max_d=args.max_d, p=args.hll_p,
             )
         else:
-            rows = hop_plot(edges, total_pairs=totals.get(year), max_d=args.max_d)
+            rows = hop_plot(
+                snapshot_edges(citations, published, year),
+                total_pairs=totals.get(year), max_d=args.max_d,
+            )
         if not rows:
             if args.testing:
                 print(f"{year}: empty graph, skipped")

@@ -51,8 +51,6 @@ Spark-first design — NO Python UDFs, no RDDs:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -69,33 +67,15 @@ def _alpha(m: int) -> float:
     return 0.7213 / (1 + 1.079 / m)
 
 
-def init_counters(nodes: DataFrame, p: int = 6, node_col: str = "node") -> DataFrame:
-    """Singleton HLL counter per node: one sparse register from
-    xxhash64(node). Output: (node, reg_idx, reg_val)."""
-    m = 1 << p
-    h = F.xxhash64(F.col(node_col))
-    idx = h.bitwiseAND(F.lit(m - 1)).cast("int")
-    w = F.shiftrightunsigned(h, p)
-    # rho = leading zeros of w within 64-p bits, + 1.
-    # bit_length(w) for w>0 == length of its base-2 string (exact integer
-    # path, unlike log2 which mis-rounds near powers of two).
-    bitlen = F.length(F.conv(w.cast("string"), 10, 2))
-    rho = F.when(w == 0, F.lit(64 - p + 1)).otherwise(F.lit(64 - p) - bitlen + 1)
-    return nodes.select(
-        F.col(node_col).alias("node"),
-        idx.alias("reg_idx"),
-        rho.cast("int").alias("reg_val"),
-    )
-
-
 def init_counters_dense(nodes: DataFrame, p: int = 6, node_col: str = "node") -> DataFrame:
     """Singleton HLL counter per DISTINCT node, directly in the dense
     (node, r0..r{m-1}) layout: r_i = rho if i == idx else 0.
 
-    Cheaper than init_counters + densify when `nodes` has duplicates
-    (e.g. the src column of an edge list): the m-way `when` projection
-    runs once per distinct node, not once per input row, and the only
-    shuffle is the distinct itself (8-byte rows).
+    `nodes` may have duplicates (e.g. the src column of an edge list):
+    the m-way `when` projection runs once per distinct node, not once
+    per input row, and the only shuffle is the distinct itself (8-byte
+    rows). rho (leading-zero rank of the hash suffix) is exact integer
+    arithmetic, via the length of its base-2 string.
 
     The m register projections are built as ONE selectExpr (r13
     optimization, guide §4 — the Python boundary): constructing them
@@ -164,84 +144,11 @@ def _estimate_sql(p: int) -> str:
     )
 
 
-def densify(counters: DataFrame, p: int = 6) -> DataFrame:
-    """Sparse (node, reg_idx, reg_val) → dense (node, r0..r{m-1}).
-
-    The dense layout is what the iteration runs on: a message is then ONE
-    row per edge (m tinyint-sized columns) instead of one row per
-    (edge × nonzero register) — ~nnz× less shuffle volume per round, and
-    every max-aggregate stays in whole-stage codegen. Register values are
-    <= 64-p+1, so the row is ~m bytes + overhead.
-    """
-    m = 1 << p
-    # tinyint registers: reg_val <= 64-p+1 < 128, and the narrow type
-    # quarters the shuffled bytes of every subsequent absorb round
-    aggs = [
-        F.max(F.when(F.col("reg_idx") == i, F.col("reg_val")).otherwise(0))
-        .cast("tinyint")
-        .alias(f"r{i}")
-        for i in range(m)
-    ]
-    return counters.groupBy("node").agg(*aggs)
-
-
-def absorb_neighbors_dense(counters: DataFrame, edges: DataFrame, p: int = 6) -> DataFrame:
-    """One HyperBall round on the dense layout: counter'(v) =
-    register-wise max of counter(v) and counters of v's out-neighbors.
-    One equi join + one m-column max-aggregate (map-side combine)."""
-    m = 1 << p
-    cols = [f"r{i}" for i in range(m)]
-    msgs = edges.join(counters, edges["dst"] == counters["node"], "inner").select(
-        edges["src"].alias("node"), *cols
-    )
-    return (
-        counters.unionByName(msgs)
-        .groupBy("node")
-        .agg(*[F.max(c).alias(c) for c in cols])
-    )
-
-
 def estimate_total_dense(counters: DataFrame, p: int = 6) -> float:
-    """Sum over nodes of HLL estimates on the dense layout — identical
-    math to `estimate_total` (a zero register contributes 2^0 = 1 to the
-    denominator, exactly the `zeros` term of the sparse path)."""
+    """Sum over nodes of the HLL estimates of |ball(v)| on the dense
+    layout — the neighborhood function N(d) (a zero register contributes
+    2^0 = 1 to the denominator)."""
     row = counters.agg(F.expr(f"sum({_estimate_sql(p)}) AS total")).first()
-    return float(row["total"] or 0.0)
-
-
-def absorb_neighbors(counters: DataFrame, edges: DataFrame) -> DataFrame:
-    """One HyperBall round: counter'(v) = counter(v) union-max the
-    counters of v's out-neighbors. `edges` must be (src, dst) with both
-    orientations present for undirected semantics."""
-    msgs = (
-        edges.join(counters, edges["dst"] == counters["node"], "inner")
-        .select(edges["src"].alias("node"), "reg_idx", "reg_val")
-    )
-    return (
-        counters.unionByName(msgs)
-        .groupBy("node", "reg_idx")
-        .agg(F.max("reg_val").alias("reg_val"))
-    )
-
-
-def estimate_total(counters: DataFrame, p: int = 6) -> float:
-    """Sum over nodes of the HLL estimates of |ball(v)| — the neighborhood
-    function N(d). One aggregation pass, all column expressions."""
-    m = 1 << p
-    alpha = _alpha(m)
-    per_node = counters.groupBy("node").agg(
-        F.sum(F.pow(F.lit(2.0), -F.col("reg_val"))).alias("sum_nz"),
-        F.count("*").alias("n_nz"),
-    )
-    zeros = F.lit(m) - F.col("n_nz")
-    raw = F.lit(alpha * m * m) / (F.col("sum_nz") + zeros)
-    # small-range (linear counting) correction: E <= 2.5m and zero
-    # registers present
-    est = F.when(
-        (raw <= 2.5 * m) & (zeros > 0),
-        F.lit(float(m)) * F.log(F.lit(float(m)) / zeros),
-    ).otherwise(raw)
-    row = per_node.agg(F.sum(est).alias("total")).first()
     return float(row["total"] or 0.0)
 
 

@@ -11,7 +11,12 @@ Analytics.scala:152-414). Here everything is DataFrame ops:
   CSR's bytes against `spark.sql.autoBroadcastJoinThreshold`):
   * within it, a bit-parallel multi-source BFS (Then et al., "The More
     the Merrier", VLDB 2014) over the broadcast CSR — ONE Spark job per
-    snapshot, 64 sources per uint64 word, O(|V|) words per task;
+    snapshot, 64 sources per uint64 word, O(|V|) words per task. For
+    the CLI's per-year snapshots, `snapshot_pairs_by_distance` reads
+    citations and published dates once, dates each edge on the driver
+    and runs every year's CSR in that one job, the CSRs' summed bytes
+    charged against the same budget (the per-year loop is the
+    fallback);
   * above it, a frontier BFS over canonical *pairs* — 12-byte (src,
     dst) rows instead of the reference's O(d)-length path arrays, with
     lineage cut (lineage.py) so per-round counts don't recompute
@@ -356,54 +361,60 @@ def _brandes_scores(indptr, indices, sources, max_d: int):
     return bc
 
 
-def _bitbfs_pairs_by_distance(
-    spark, indptr, indices, max_d: int
-) -> list[tuple[int, int]]:
-    """Exact [(d, cumulative unordered pairs at distance <= d)] of the
-    graph in CSR form, in ONE Spark job: the CSR is broadcast and
-    P = min(defaultParallelism, ceil(V/64)) tasks each BFS a contiguous
-    block of 64-source words, returning per-distance ORDERED pair
-    counts; the driver sums them, halves them (the graph is undirected)
-    and accumulates up to the first empty level."""
+def _bitbfs_pairs_by_distance(spark, csrs, max_d: int) -> list[list[tuple[int, int]]]:
+    """Per graph of `csrs` (a list of (indptr, indices) CSRs), the exact
+    [(d, cumulative unordered pairs at distance <= d)], all in ONE Spark
+    job: the CSRs are broadcast together and each graph gets
+    min(defaultParallelism, ceil(V/64)) tasks, each BFSing a contiguous
+    block of its 64-source words and returning per-distance ORDERED pair
+    counts; the driver sums them per graph, halves them (the graph is
+    undirected) and accumulates up to the first empty level. A graph
+    with no vertex gets [] and no task."""
     import pyarrow as pa
 
-    n_words = -(-(len(indptr) - 1) // 64)
-    if n_words == 0:
-        return []
-    n_tasks = min(spark.sparkContext.defaultParallelism, n_words)
-    csr = spark.sparkContext.broadcast((indptr, indices))
+    slots = spark.sparkContext.defaultParallelism
+    tasks = []  # (graph, first word, end word)
+    for g, (indptr, _) in enumerate(csrs):
+        n_words = -(-(len(indptr) - 1) // 64)
+        n_tasks = min(slots, n_words)
+        tasks += [(g, t * n_words // n_tasks, (t + 1) * n_words // n_tasks) for t in range(n_tasks)]
+    per_d = [dict() for _ in csrs]
+    if tasks:
+        bc = spark.sparkContext.broadcast(csrs)
 
-    def run(batches):
-        ip, ix = csr.value
-        for batch in batches:
-            for task in batch.column(0).to_pylist():
-                lo, hi = task * n_words // n_tasks, (task + 1) * n_words // n_tasks
-                per_d = _bitbfs_level_counts(ip, ix, range(lo, hi), max_d)
-                d = per_d.nonzero()[0]
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(d, pa.int32()), pa.array(per_d[d], pa.int64())],
-                    names=["d", "pairs"],
-                )
+        def run(batches):
+            for batch in batches:
+                for task in batch.column(0).to_pylist():
+                    g, lo, hi = tasks[task]
+                    counts = _bitbfs_level_counts(*bc.value[g], range(lo, hi), max_d)
+                    d = counts.nonzero()[0]
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array([g] * len(d), pa.int32()), pa.array(d, pa.int32()),
+                         pa.array(counts[d], pa.int64())],
+                        names=["g", "d", "pairs"],
+                    )
 
-    try:
-        rows = (
-            spark.range(n_tasks, numPartitions=n_tasks)
-            .mapInArrow(run, "d int, pairs long")
-            .collect()
-        )
-    finally:
-        csr.destroy()
-    per_d: dict[int, int] = {}
-    for r in rows:
-        per_d[r["d"]] = per_d.get(r["d"], 0) + r["pairs"]
-    counts: list[tuple[int, int]] = []
-    acc = 0
-    for d in range(1, max_d + 1):
-        if not per_d.get(d):
-            break
-        acc += per_d[d] // 2
-        counts.append((d, acc))
-    return counts
+        try:
+            rows = (
+                spark.range(len(tasks), numPartitions=len(tasks))
+                .mapInArrow(run, "g int, d int, pairs long")
+                .collect()
+            )
+        finally:
+            bc.destroy()
+        for r in rows:
+            per_d[r["g"]][r["d"]] = per_d[r["g"]].get(r["d"], 0) + r["pairs"]
+    out = []
+    for pairs in per_d:
+        counts: list[tuple[int, int]] = []
+        acc = 0
+        for d in range(1, max_d + 1):
+            if not pairs.get(d):
+                break
+            acc += pairs[d] // 2
+            counts.append((d, acc))
+        out.append(counts)
+    return out
 
 
 def connected_pairs_by_distance(
@@ -431,9 +442,71 @@ def connected_pairs_by_distance(
         csr = _driver_csr(edges)
         if csr is None:
             return _pair_bfs_by_distance(edges, max_d)
-        return _bitbfs_pairs_by_distance(edges.sparkSession, *csr[1:], max_d)
+        return _bitbfs_pairs_by_distance(edges.sparkSession, [csr[1:]], max_d)[0]
     finally:
         edges.unpersist()
+
+
+def snapshot_pairs_by_distance(
+    citations: DataFrame, published: DataFrame, max_d: int = 20
+) -> dict[int, list[tuple[int, int]]] | None:
+    """`connected_pairs_by_distance` of `snapshot_edges(citations,
+    published, year)` for every published year, in year order (a year
+    whose snapshot has no edge maps to []), from ONE read of each input;
+    or None when the inputs are over the broadcast budget, and the
+    caller runs its per-year loop instead.
+
+    Each frame is read once as Arrow, at most budget/8 rows (a directed
+    row becomes at most two 4-byte CSR entries); None when the budget is
+    0 or either read is over it. On the driver, each edge is dated by
+    its endpoints' years (raw citation ids against the normalised
+    published ids, min year per id, as `snapshot_edges`' joins match
+    them): an edge with an undated endpoint is dropped, and the others
+    join the snapshots from max(fromYear, toYear) on. Snapshot y is then
+    the edges dated <= y, through `_csr_from_arrow`. The CSRs of all
+    years are charged together against the budget (None as soon as
+    they are over it) and run in one `_bitbfs_pairs_by_distance` job."""
+    import numpy as np
+    import pyarrow as pa
+
+    spark = citations.sparkSession
+    budget = session_broadcast_bytes(spark)
+    if budget == 0:
+        return None
+    cap = budget // 8
+    pub = published.select("id", "year").limit(cap + 1).toArrow()
+    if pub.num_rows > cap:
+        return None
+    cit = citations.select("from", "to").limit(cap + 1).toArrow()
+    if cit.num_rows > cap:
+        return None
+    pub, cit = pub.drop_null(), cit.drop_null()
+    ids, years = pub.column("id").to_numpy(), pub.column("year").to_numpy()
+    order = np.lexsort((years, ids))
+    ids, years = ids[order], years[order]
+    first = np.r_[True, ids[1:] != ids[:-1]]
+    ids, years = ids[first], years[first]
+    if not len(ids):
+        return {}
+
+    src, dst = cit.column("from").to_numpy(), cit.column("to").to_numpy()
+    at_src = np.minimum(np.searchsorted(ids, src), len(ids) - 1)
+    at_dst = np.minimum(np.searchsorted(ids, dst), len(ids) - 1)
+    dated = (ids[at_src] == src) & (ids[at_dst] == dst)
+    edge_year = np.maximum(years[at_src], years[at_dst])[dated]
+    order = np.argsort(edge_year, kind="stable")
+    src, dst, edge_year = src[dated][order], dst[dated][order], edge_year[order]
+
+    snapshot_years = np.unique(years).tolist()
+    csrs, nbytes = [], 0
+    for y in snapshot_years:
+        k = np.searchsorted(edge_year, y, side="right")
+        csrs.append(_csr_from_arrow(pa.table({"src": src[:k], "dst": dst[:k]}))[1:])
+        nbytes += csrs[-1][0].nbytes + csrs[-1][1].nbytes
+        if nbytes > budget:
+            return None
+    counts = _bitbfs_pairs_by_distance(spark, csrs, max_d)
+    return dict(zip(snapshot_years, counts))
 
 
 def _pair_bfs_by_distance(edges: DataFrame, max_d: int) -> list[tuple[int, int]]:
@@ -580,6 +653,15 @@ def hop_plot(
     appearing, and d <= 20.
     """
     counts = connected_pairs_by_distance(edges, max_d=max_d)
+    return hop_plot_rows(counts, total_pairs, strict_stop)
+
+
+def hop_plot_rows(
+    counts: list[tuple[int, int]],
+    total_pairs: int | None = None,
+    strict_stop: bool = True,
+) -> list[HopPlotRow]:
+    """`hop_plot`'s rows from its exact (d, cumulative pairs) counts."""
     if not counts:
         return []
     if total_pairs is None:

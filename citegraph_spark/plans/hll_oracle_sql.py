@@ -14,7 +14,7 @@ driver checks to full value-hash oracles:
   rather than wrap). Verified bit-exact against `F.xxhash64` over int
   probes in tests/test_hll_oracle.py.
 - rho (leading-zero rank) uses the base-2 string length — the same
-  exact-integer path the Spark side uses (sketches.py init_counters),
+  exact-integer path the Spark side uses (sketches.py init_counters_dense),
   avoiding log2 rounding at powers of two.
 - counters are carried DENSE (one row per node with a 64-element list)
   through the recursive CTE; per-element max under GROUP BY node is the

@@ -90,13 +90,3 @@ SQL_DISC_PRICE = (
     " * (1 - CAST(l_discount AS DECIMAL(12,2))) AS DECIMAL(16,4))"
 )
 SQL_CHARGE = f"{SQL_DISC_PRICE} * (1 + CAST(l_tax AS DECIMAL(12,2)))"
-
-
-def sql_money_sum_pair(expr: str, alias: str) -> str:
-    """DuckDB fragment matching money_sum_pair: DOUBLE dollars + BIGINT
-    cents, both derived from the identical exact decimal."""
-    s = f"round(sum({expr}), 2)"
-    return (
-        f"CAST({s} AS DOUBLE) AS {alias}, "
-        f"CAST({s} * 100 AS BIGINT) AS {alias}_cents"
-    )

@@ -11,8 +11,9 @@ hop-plot parity is unattainable. What IS attainable:
   CLI + CSV sink, cross-checked against an independent DuckDB oracle
   over the raw text files;
 - the diameter task runs end-to-end on the 1993-truncated dataset
-  (2826 nodes / 2919 edges) through both exact BFS tiers — the
-  broadcast bit-parallel kernel the session's budget selects, and the
+  (2826 nodes / 2919 edges) through both exact tiers — the read-once
+  path the session's budget selects (one read of each input, every
+  year's bit-parallel BFS in one job), and the per-year loop with the
   distributed pair BFS forced by turning the broadcast budget off —
   with every emitted row verified against an independent driver-side
   BFS replay honoring the reference's strict stop rule (d=1,2 always;
@@ -146,6 +147,12 @@ def _strict_stop(counts: list[tuple[int, int]], total: int) -> list[tuple[int, i
 def test_cli_diameter_both_tiers_vs_replays(
     spark, broadcast_off, hepth93_dir, tmp_path
 ):
+    """Both exact tiers of `cli diameter` on the 1992-1993 data: the
+    session's budget takes the read-once tier (each input read once,
+    both years' BFS in one kernel job); with broadcasting off, the
+    per-year loop plans each snapshot and runs the distributed pair BFS.
+    Each year's rows must equal the driver BFS replay under the strict
+    stop rule."""
     from citegraph_spark import cli
 
     kernel_out, fallback_out = tmp_path / "kernel", tmp_path / "fallback"

@@ -241,7 +241,9 @@ def test_tier_follows_csr_bytes(spark, monkeypatch, budget, tier):
         for op, (call, kernel, fallback) in TIERS.items():
             ran = []
             with monkeypatch.context() as m:
-                m.setattr(graph, kernel, lambda *a: ran.append("kernel") or np.zeros(0))
+                # one empty result per CSR for the hop-plot's kernel, an
+                # empty score array for the other two
+                m.setattr(graph, kernel, lambda *a: ran.append("kernel") or np.zeros((1, 0)))
                 m.setattr(graph, fallback, lambda *a: ran.append("pair"))
                 call(edges)
             assert ran == [tier], op

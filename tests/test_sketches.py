@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 from citegraph_spark.fixtures import fixture_citations, fixture_published
-from citegraph_spark.functions.sketches import hyperball_hopplot, init_counters
+from citegraph_spark.functions.sketches import hyperball_hopplot, init_counters_dense
 from citegraph_spark.operators.graph import hop_plot, snapshot_edges
 
 
@@ -40,8 +40,9 @@ def test_init_counters_rho_exact(spark):
 
     nodes = spark.range(0, 200).select(F.col("id").alias("node"))
     got = {
-        (r["node"], r["reg_idx"]): r["reg_val"]
-        for r in init_counters(nodes, p=6).collect()
+        (r["node"], i): r[f"r{i}"]
+        for r in init_counters_dense(nodes, p=6).collect()
+        for i in range(64)
     }
     hashes = {
         r["node"]: r["h"]
